@@ -147,6 +147,9 @@ def token_set_ratio(a: str, b: str) -> float:
 #: registries (< 10^4 rows), quadratic poison beyond. Above this many
 #: unblocked candidates, best_match_udf refuses and points at the
 #: dict-blocked shape (the kmeans max_train_rows guard pattern).
+#: Pipeline C (run_pipeline_c) scores its level-4 and level-3 tiers as
+#: blocks of one blocked pass, so this guard no longer applies to them;
+#: collect_candidates' 500k max_candidates cap still does.
 MAX_UNBLOCKED_CANDIDATES = 20_000
 
 

@@ -11,8 +11,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 from collections.abc import Mapping
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hiv_data_integration_spark.functions import lenient_double
@@ -271,15 +273,26 @@ def run_pipeline_c(
     ``sheets`` maps sheet name → (flattened wide frame, prefix→indicator).
     Returns ``(report, registry_after)``.
 
-    Resolution mirrors extract_chu_data.py:255-410 exactly: (1) registry
-    fuzzy pass at threshold **95**; (2) unresolved → DHIS2 level-4 facility
-    fuzzy pass at ``match_threshold``; (3) still unresolved → the district
-    name (``district_col``, else the facility name), uppercased with
-    "PUBLIC"/"CHU"/" DE " removed, fuzzy-matched against level-**3** units —
-    on a hit the id is synthesized as ``<district_path>/<uuid5(facility)>``;
-    (4) facilities matching nothing are **dropped** (reference filters the
+    Resolution mirrors extract_chu_data.py:255-410: a name takes the first
+    tier that matches it — (1) the registry at ``registry_threshold`` (95),
+    district-blocked when both sides carry a district; (2) DHIS2 level-4
+    facilities at ``match_threshold``; (3) the district name
+    (``district_col``, else the facility name), uppercased with
+    "PUBLIC"/"CHU"/" DE " removed, against level-**3** units at
+    ``match_threshold`` — a hit synthesizes the id
+    ``<district_path>/<uuid5(facility)>``.
+    Facilities matching nothing are **dropped** (reference filters the
     registry to non-null ids and inner-joins, extract_chu_data.py:378-410) —
     never upserted, never reported.
+
+    All tiers score in ONE ``resolve_entities`` pass: one query row per
+    (name, tier), the tier a block key so each row meets only its own
+    tier's candidates, at the lower of the two thresholds; each tier's hits
+    are then kept at its own threshold and the lowest tier per name wins.
+    This is exact: the scorer returns the lowest-index argmax among
+    candidates at or above its threshold, so a best score that clears the
+    tier's threshold picks the same winner as scoring at that threshold,
+    and one that does not is dropped either way.
     """
     # -- 1. resolve facility names (extract_chu_data.py:255-410)
     name_cols = ["facility"] + (["district"] if district_col else [])
@@ -292,81 +305,63 @@ def run_pipeline_c(
         names = sel if names is None else names.unionByName(sel)
     names = names.filter(F.col("facility").isNotNull()).distinct()
 
-    # pass 1: existing registry, threshold 95 (extract_chu_data.py:299-308).
-    # With a district column the lookup is district-BLOCKED (the reference
-    # joins the registry on district + facility, extract_chu_data.py:401-406)
-    # — otherwise same-named facilities in different districts would all
-    # resolve to whichever single registry row survived.
-    registry_exists = _try_read(spark, registry_path)
-    if registry_exists is not None:
-        reg_blocking: dict = {}
-        if district_col and "districts_sanitaires" in registry_exists.columns:
-            reg_blocking = {
-                "block_cols": ["district"],
-                "cand_block_cols": ["districts_sanitaires"],
-            }
-        reg_resolved = resolve_entities(
-            names,
-            "facility",
-            registry_exists,
-            "formations_sanitaires",
-            "organisation_unit_id",
-            threshold=registry_threshold,
-            **reg_blocking,
-        ).select(*name_cols, F.col("matched").alias("ou_id"))
-    else:
-        reg_resolved = names.withColumn("ou_id", F.lit(None).cast("string"))
-    matched_reg = reg_resolved.filter(F.col("ou_id").isNotNull())
-    unresolved1 = reg_resolved.filter(F.col("ou_id").isNull()).drop("ou_id")
+    # tier 3 queries the cleaned district name (extract_chu_data.py:342-376)
+    cleaned = F.upper(F.col("district") if district_col else F.col("facility"))
+    for noise in ("PUBLIC", "CHU", " DE "):
+        cleaned = F.replace(cleaned, F.lit(noise), F.lit(""))
+    # tier -> (query text, candidate frame, candidate name, payload)
+    tiers = {
+        2: (F.col("facility"), org_units.filter(F.col("level") == 4), "name", "path"),
+        3: (F.trim(cleaned), org_units.filter(F.col("level") == 3), "name", "path"),
+    }
+    # the reference joins the registry on district + facility
+    # (extract_chu_data.py:401-406): same-named facilities in different
+    # districts never share a registry row
+    query_district = cand_district = F.lit(None)
+    registry = _try_read(spark, registry_path)
+    if registry is not None:
+        tiers[1] = (F.col("facility"), registry, "formations_sanitaires",
+                    "organisation_unit_id")
+        if district_col and "districts_sanitaires" in registry.columns:
+            query_district = F.col("district")
+            cand_district = F.col("districts_sanitaires")
 
-    # pass 2: DHIS2 level-4 facilities (extract_chu_data.py:322-336)
-    l4 = org_units.filter(F.col("level") == 4)
-    dhis_resolved = resolve_entities(
-        unresolved1, "facility", l4, "name", "path", threshold=match_threshold
-    ).select(*name_cols, F.col("matched").alias("ou_id"))
-    matched_l4 = dhis_resolved.filter(F.col("ou_id").isNotNull())
-    unresolved2 = dhis_resolved.filter(F.col("ou_id").isNull()).drop("ou_id")
+    def block(district: Column, n: int) -> Column:
+        # null and empty districts share the "" block
+        d = district if n == 1 else F.lit(None)
+        return F.coalesce(d.cast("string"), F.lit("")).alias("_block")
 
-    # pass 3: district-gated synthesis (extract_chu_data.py:342-376) — the
-    # district name (facility name if no district column) is uppercased,
-    # noise substrings removed, and matched against LEVEL-3 units; only a
-    # district hit earns a synthesized "<district_path>/<uuid5>" id
-    district_src = F.col("district") if district_col else F.col("facility")
-    cleaned = F.trim(
-        F.replace(
-            F.replace(
-                F.replace(F.upper(district_src), F.lit("PUBLIC"), F.lit("")),
-                F.lit("CHU"),
-                F.lit(""),
-            ),
-            F.lit(" DE "),
-            F.lit(""),
-        )
+    scored = resolve_entities(
+        names.select(*name_cols, F.inline(F.array(*[
+            F.struct(F.lit(n).alias("_tier"), q.alias("_q"), block(query_district, n))
+            for n, (q, _, _, _) in tiers.items()
+        ]))),
+        "_q",
+        reduce(DataFrame.unionByName, [
+            df.select(F.lit(n).alias("_tier"), F.col(name).alias("_name"),
+                      F.col(payload).alias("_payload"), block(cand_district, n))
+            for n, (_, df, name, payload) in tiers.items()
+        ]),
+        "_name",
+        "_payload",
+        threshold=min(registry_threshold, match_threshold),
+        block_cols=["_tier", "_block"],
     )
-    l3 = org_units.filter(F.col("level") == 3)
-    district_resolved = resolve_entities(
-        unresolved2.withColumn("_district_clean", cleaned),
-        "_district_clean",
-        l3,
-        "name",
-        "path",
-        threshold=match_threshold,
+    tier_threshold = F.when(F.col("_tier") == 1, registry_threshold).otherwise(
+        match_threshold
     )
-    matched_synth = district_resolved.filter(F.col("matched").isNotNull()).select(
-        *name_cols,
-        F.concat_ws("/", F.col("matched"), uuid5_id(F.col("facility"))).alias(
-            "ou_id"
-        ),
-    )
-    # facilities with no registry, facility, or district match are DROPPED
-
     resolved = (
-        matched_reg.unionByName(matched_l4)
-        .unionByName(matched_synth)
-        .select(*name_cols, F.col("ou_id").alias("organisation_unit_id"))
+        scored.filter(
+            F.col("matched").isNotNull() & (F.col("match_score") >= tier_threshold)
+        )
+        .groupBy(*name_cols)
+        .agg(F.min("_tier").alias("_tier"), F.min_by("matched", "_tier").alias("ou"))
+        .select(*name_cols, F.when(
+            F.col("_tier") == 3, F.concat_ws("/", "ou", uuid5_id(F.col("facility")))
+        ).otherwise(F.col("ou")).alias("organisation_unit_id"))
         .cache()
     )  # facility-count-sized; re-scoring it per sheet join would
-    # repeat the O(names x candidates) Python passes N+1 times
+    # repeat the O(names x candidates) Python pass N+1 times
 
     registry_after = upsert_parquet_state(
         spark,
@@ -452,12 +447,15 @@ def run_pipeline_c(
 
 def _try_read(spark: SparkSession, path: str) -> DataFrame | None:
     """Read-or-None without a driver-local filesystem check —
-    ``os.path.exists`` is always False for s3://, hdfs://, etc. (the
-    atomic-swap in upsert_parquet_state stays local-FS by design and is
-    documented as such; reading must not be)."""
+    ``os.path.exists`` is always False for s3://, hdfs://, etc. Only a
+    missing path means "no state yet"; any other read error (a corrupt or
+    non-parquet file) is raised, never mistaken for an empty registry."""
     try:
         df = spark.read.parquet(path)
         df.schema  # force resolution now
         return df
-    except Exception:
-        return None
+    except AnalysisException as e:
+        # getCondition is pyspark 4.0+; getErrorClass is its 3.x name
+        if getattr(e, "getCondition", e.getErrorClass)() == "PATH_NOT_FOUND":
+            return None
+        raise

@@ -553,3 +553,128 @@ def test_pipeline_c_from_raw_sheet(spark, org_units, tmp_path):
     rows = {(r.idsite, r.Indicateur): r for r in report.collect()}
     # facility trimmed then exact-matched to f1; quoted value parsed
     assert rows[("r1_d1_f1", 11)]["nosex_noage"] == 12
+
+
+def _run_chu(spark, org_units, tmp_path, rows, registry_rows=None):
+    """Run pipeline C over one PEC sheet of (facility, district, month, F, M)
+    rows; ``registry_rows`` of (id, facility, district) pre-seed the
+    registry. Returns ``{(facility, district): organisation_unit_id}``."""
+    registry_path = str(tmp_path / "org_unit_chu.parquet")
+    if registry_rows is not None:
+        spark.createDataFrame(
+            registry_rows,
+            "organisation_unit_id string, formations_sanitaires string, "
+            "districts_sanitaires string",
+        ).write.parquet(registry_path)
+    sheet = spark.createDataFrame(
+        rows,
+        "Etablissements string, Districts string, Mois string, "
+        "`indicateur_11_age_0_4_ans_F` string, `indicateur_11_age_0_4_ans_M` string",
+    )
+    _, registry = run_pipeline_c(
+        spark,
+        sheets={"PEC": (sheet, {"indicateur_11_": 11})},
+        facility_col="Etablissements",
+        period_col="Mois",
+        registry_path=registry_path,
+        org_units=org_units,
+        report_value_columns=REPORT_VALUE_COLS,
+        district_col="Districts",
+    )
+    return {
+        (r.formations_sanitaires, r.districts_sanitaires): r.organisation_unit_id
+        for r in registry.collect()
+    }
+
+
+def test_pipeline_c_registry_tier_wins_over_level4(spark, org_units, tmp_path):
+    """A name that is an exact hit in BOTH the registry and the level-4
+    units resolves to the registry id: tier 1 takes precedence."""
+    reg_id = f"/{ROOT}/r1/d1/registered"
+    ids = _run_chu(
+        spark,
+        org_units,
+        tmp_path,
+        [("CHU de Cocody", "DS Cocody", "202401", "1", "2")],
+        registry_rows=[(reg_id, "CHU de Cocody", "DS Cocody")],
+    )
+    assert ids[("CHU de Cocody", "DS Cocody")] == reg_id
+
+
+def test_pipeline_c_thresholds_are_per_tier(spark, org_units, tmp_path):
+    """A name scoring in [90, 95) against the registry misses tier 1 (95)
+    even though that score clears tier 2's 90, and falls through to its
+    exact level-4 match."""
+    from hiv_data_integration_spark.operators.fuzzy import token_set_ratio
+
+    # the normalized pair the scorer sees (lowercased, same tokens)
+    assert 90.0 <= token_set_ratio("csu abobo nord", "csu abobo nort") < 95.0
+    ids = _run_chu(
+        spark,
+        org_units,
+        tmp_path,
+        [("CSU Abobo Nord", "DS Cocody", "202401", "1", "2")],
+        registry_rows=[(f"/{ROOT}/r1/d1/near", "CSU Abobo Nort", "DS Cocody")],
+    )
+    assert ids[("CSU Abobo Nord", "DS Cocody")] == f"/{ROOT}/r1/d1/f2"
+
+
+def test_pipeline_c_resolves_all_tiers_in_one_pass(
+    spark, org_units, tmp_path, monkeypatch
+):
+    """All three tiers (registry present) are scored by ONE candidate
+    collection and ONE scoring udf, not one per tier."""
+    from hiv_data_integration_spark.operators import fuzzy
+
+    calls = {"collect_candidates": 0, "best_match_udf": 0}
+
+    def counted(name):
+        original = getattr(fuzzy, name)
+
+        def wrapper(*args, **kwargs):
+            calls[name] += 1
+            return original(*args, **kwargs)
+
+        monkeypatch.setattr(fuzzy, name, wrapper)
+
+    counted("collect_candidates")
+    counted("best_match_udf")
+    ids = _run_chu(
+        spark,
+        org_units,
+        tmp_path,
+        [
+            ("Registered Clinic", "DS Cocody", "202401", "1", "2"),
+            ("CSU Abobo Nord", "DS Cocody", "202401", "3", "4"),
+            ("Clinique Inconnue", "Cocody", "202401", "5", "6"),
+        ],
+        registry_rows=[(f"/{ROOT}/r1/d1/reg", "Registered Clinic", "DS Cocody")],
+    )
+    assert calls == {"collect_candidates": 1, "best_match_udf": 1}
+    # one hit per tier: registry, level-4, district synthesis
+    assert ids[("Registered Clinic", "DS Cocody")] == f"/{ROOT}/r1/d1/reg"
+    assert ids[("CSU Abobo Nord", "DS Cocody")] == f"/{ROOT}/r1/d1/f2"
+    assert ids[("Clinique Inconnue", "Cocody")] == (
+        f"/{ROOT}/r1/d1/{uuid5_py('Clinique Inconnue')}"
+    )
+
+
+def test_pipeline_c_unreadable_registry_raises(spark, org_units, tmp_path):
+    """Only a MISSING registry means "no registry yet": a registry dir
+    holding a non-parquet file fails the registry read itself instead of
+    silently skipping the registry tier."""
+    from hiv_data_integration_spark.pipeline.pnls import _try_read
+
+    assert _try_read(spark, str(tmp_path / "missing.parquet")) is None
+    registry_dir = tmp_path / "org_unit_chu.parquet"
+    registry_dir.mkdir()
+    (registry_dir / "part-0.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        _try_read(spark, str(registry_dir))
+    with pytest.raises(Exception, match="(?i)parquet"):
+        _run_chu(
+            spark,
+            org_units,
+            tmp_path,
+            [("CHU de Cocody", "DS Cocody", "202401", "1", "2")],
+        )
