@@ -202,33 +202,6 @@ def _new_utc_stream_session(spark: SparkSession) -> SparkSession:
     return s
 
 
-def warm_python_workers(spark: SparkSession, n: int = 16) -> None:
-    """Eagerly fork and prime ``n`` Python workers (pandas imported, Arrow
-    serializer loaded) so a pandas_udf stage that runs right after is
-    measured on a WARM pool.
-
-    Why in-query and not only in bench.py's global warm-up: the fuzzy
-    entries historically swing 1→7 s inside long batteries (r1-r5
-    BASELINE notes) because daemon workers primed at battery start can be
-    gone hundreds of queries later, and a cold worker pays a fork plus a
-    pandas import (~0.5 s) exactly inside the timed window. One noop
-    mapInPandas over ``n`` single-row partitions re-primes the pool in
-    ~0.1 s when warm, bounding the swing without touching global state.
-    """
-    import pandas as _pd  # noqa: F401  (imported so the driver ships it)
-
-    def _noop(it):
-        yield from it
-
-    (
-        spark.range(0, n, 1, n)
-        .mapInPandas(_noop, "id long")
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
-
-
 def driver_hashable_violations(schema: T.StructType) -> list[str]:
     """Columns whose type the driver's correctness harness cannot hash.
 

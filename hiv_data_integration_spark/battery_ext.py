@@ -68,7 +68,8 @@ class _trailing_flush_batch:
     (``streaming_outer_join_expiry``, ``streaming_chained_windows``)
     wrap their ``.start()`` in this context manager. StreamExecution
     clones the session's conf at start, so restoring after
-    ``awaitTermination`` cannot affect the running query.
+    ``awaitTermination`` cannot affect the running query. Exit restores
+    the value set before entry, or unsets the key if none was.
     """
 
     _KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
@@ -77,10 +78,14 @@ class _trailing_flush_batch:
         self._s = session
 
     def __enter__(self) -> None:
+        self._prior = self._s.conf.getAll.get(self._KEY)
         self._s.conf.set(self._KEY, "true")
 
     def __exit__(self, *exc: object) -> None:
-        self._s.conf.set(self._KEY, "false")
+        if self._prior is None:
+            self._s.conf.unset(self._KEY)
+        else:
+            self._s.conf.set(self._KEY, self._prior)
 
 
 def _local_result(df: DataFrame) -> DataFrame:
@@ -98,11 +103,15 @@ def _local_result(df: DataFrame) -> DataFrame:
     streaming_session_windows entry alone (95k rows at sf0.1). The
     explicit ``df.schema`` pins exact result types (TIMESTAMP_NTZ vs LTZ,
     decimals) across the roundtrip; the row fallback covers any type the
-    Arrow bridge rejects.
+    Arrow bridge rejects and logs a warning naming the exception class.
     """
     try:
         return df.sparkSession.createDataFrame(df.toArrow(), schema=df.schema)
-    except Exception:
+    except Exception as e:
+        _log.warning(
+            "_local_result: Arrow transfer failed (%s: %s); falling back to rows",
+            type(e).__name__, e,
+        )
         rows, schema = df.collect(), df.schema
         return df.sparkSession.createDataFrame(rows, schema)
 
@@ -1219,16 +1228,10 @@ def q_fuzzy_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     <= 90.9 for any other candidate) and the accepted score is the single
     constant ``100 * (2*16/33)`` — IEEE-exact in both engines. That turns
     the previously rows-only entry into a full value-hash check of the
-    pandas_udf candidate-capture, normalization, pruning, and strict-max
-    selection machinery (reference D6-D8,
-    update_pnls_report/utils.py:434-514)."""
-    from hiv_data_integration_spark.battery import warm_python_workers
-
-    # re-prime the Python worker pool INSIDE the query (VERDICT r5 item 8):
-    # daemon workers primed at battery start can be gone hundreds of
-    # queries later, and a cold fork + pandas import inside the timed
-    # window is the documented 1→7 s swing on this entry
-    warm_python_workers(spark, 16)
+    candidate-capture, normalization, pruning, and strict-max selection
+    machinery (reference D6-D8, update_pnls_report/utils.py:434-514). The
+    supplier dim is far below ``fz.MAX_DRIVER_KEYS``, so the names are
+    scored on the driver and no Python worker runs."""
     sup = tbl(spark, sf_dir, "supplier")
     dirty = sup.select(
         F.col("s_suppkey").alias("dirty_key"),
@@ -1236,9 +1239,9 @@ def q_fuzzy_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s_name"), F.lit("Supplier"), F.lit("Suplier")
         ).alias("dirty_name"),
     )
-    # 16 scoring tasks, not 32: each task runs a Python worker at full
-    # CPU, and 32 workers + 32 JVM threads oversubscribe the box — measured
-    # 1.4 s stable at 16 vs 2.8-5.4 s (noisy) at 32
+    # above MAX_DRIVER_KEYS: 16 scoring tasks, not 32 — each task runs a
+    # Python worker at full CPU, and 32 workers + 32 JVM threads
+    # oversubscribe the box (measured 1.4 s stable at 16 vs 2.8-5.4 s at 32)
     resolved = fz.resolve_entities(
         dirty, "dirty_name", sup, "s_name", "s_name", threshold=80.0,
         partitions=16,
@@ -1263,8 +1266,8 @@ def q_fuzzy_resolve_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     block only (reference district-blocking, extract_chu_data.py:337-360).
     The mangle normalizes back to an exact candidate key, so the expected
     output is deterministic and the oracle is plain SQL — the blocked
-    pandas_udf machinery (per-block candidate dicts, block-key
-    normalization, exact-hit path) is what's under test."""
+    machinery (per-block candidate dicts, block-key normalization of a
+    numeric block column, exact-hit path) is what's under test."""
     sup = tbl(spark, sf_dir, "supplier")
     dirty = sup.select(
         F.col("s_suppkey").alias("dirty_key"),
@@ -1295,11 +1298,11 @@ FROM supplier
 
 
 def q_uuid5_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic uuid5 org-id synthesis (pandas_udf). Oracle: DuckDB has
+    """Deterministic uuid5 org-id synthesis (native SHA-1). Oracle: DuckDB has
     no sha1, so the SQL joins a golden dictionary over the nation dim's
     fixed 25-name domain, derived below from RFC 4122 first principles
-    (hashlib SHA-1 + version/variant nibble surgery — an implementation
-    independent of the stdlib ``uuid`` module the operator uses)."""
+    (hashlib SHA-1 + version/variant byte surgery — an implementation
+    independent of the operator's Spark expression)."""
     nation = tbl(spark, sf_dir, "nation")
     return nation.select(
         "n_nationkey", fz.uuid5_id(F.col("n_name")).alias("org_uid")
@@ -1308,9 +1311,9 @@ def q_uuid5_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _uuid5_hex(name: str) -> str:
     """RFC 4122 §4.3 uuid5 from first principles: SHA-1(namespace || name),
-    first 16 bytes, version nibble -> 5, variant bits -> 10x. Deliberately
-    NOT the stdlib ``uuid`` module (that is what the operator under test
-    uses) — this is the independent oracle derivation."""
+    first 16 bytes, version nibble -> 5, variant bits -> 10x. Byte surgery
+    over ``hashlib``, independent of the operator's hex-digit Spark
+    expression."""
     import hashlib as _hl
 
     ns = bytes.fromhex("6ba7b8109dad11d180b400c04fd430c8")  # NAMESPACE_DNS

@@ -3,8 +3,9 @@
 Every row-wise ``map_elements`` UDF in the reference is re-expressed here as
 a native Column expression (JVM-side, whole-stage-codegen friendly). The
 only true Python UDFs in the engine are the vectorized pandas_udfs in
-``hiv_data_integration_spark.operators.fuzzy`` (token-set ratio, uuid5, NFD
-folding) where Python libraries are genuinely required.
+``hiv_data_integration_spark.operators.fuzzy`` (NFD folding, and token-set
+scoring of frames too large to score on the driver) where Python libraries
+are genuinely required.
 
 Reference sites are cited per function (SURVEY.md §2.10-2.11).
 """

@@ -17,13 +17,19 @@ Reference semantics (cited for parity, re-expressed Spark-first):
 
 Scale design:
 
-- Normalization is native Catalyst expressions except the NFD fold (no
-  built-in) — that one step is an Arrow-vectorized pandas_udf.
-- Candidate lists are **broadcast** to executors (dims are small: org
-  registries are thousands of rows); scoring runs inside a pandas_udf so
-  the fact side streams through in Arrow batches — no shuffle, no
-  crossJoin. O(rows x candidates) Python work is bounded by optional
-  blocking keys (the reference blocks by district the same way).
+- Every step runs where its input lives. Candidate dims and the distinct
+  query keys of a dimension-sized frame (the reference's registries are
+  < 10^4 rows) are collected once and normalized and scored on the
+  driver by the very function the scoring pandas_udf runs, then joined
+  back as a broadcast lookup: no Python worker is forked for them.
+- Above ``MAX_DRIVER_KEYS`` distinct query keys the fact side streams
+  through the scoring pandas_udf in Arrow batches instead, against the
+  same captured candidates — no shuffle, no crossJoin. Normalization there
+  is native Catalyst expressions except the NFD fold (no built-in), an
+  Arrow-vectorized pandas_udf. O(rows x candidates) Python work is bounded
+  by optional blocking keys (the reference blocks by district the same
+  way).
+- ``uuid5_id`` is native: one SHA-1 plus two nibble rewrites.
 - The scorer is a pure-Python token_set_ratio (difflib SequenceMatcher
   core) because no fuzzy library ships in this container; the algorithm
   is the public fuzzywuzzy/rapidfuzz token_set construction.
@@ -33,6 +39,7 @@ Scale design:
 
 from __future__ import annotations
 
+import re
 import unicodedata
 import uuid
 from difflib import SequenceMatcher
@@ -46,6 +53,7 @@ from pyspark.sql.functions import pandas_udf
 __all__ = [
     "strip_accents",
     "nfd_fold",
+    "normalize_text",
     "normalize_text_col",
     "token_set_ratio",
     "best_match_udf",
@@ -57,7 +65,8 @@ __all__ = [
 
 # reference CLEAN_PATTERN (update_pnls_report/utils.py:541): delete anything
 # that is not a word char, whitespace, or hyphen. Java/RE2 '\w' is ASCII-only
-# (Python re is unicode) — identical here because accent folding runs first;
+# (Python re is unicode unless re.ASCII, which normalize_text passes) —
+# identical here because accent folding runs first;
 # only non-decomposable letters (œ, ø...) diverge, and both engines (Spark +
 # DuckDB oracle) agree with each other.
 _CLEAN_RE = r"[^\w\s-]"
@@ -122,6 +131,20 @@ def normalize_text_col(col: Column, fold_accents: bool = True) -> Column:
     c = F.replace(c, F.lit("public"), F.lit(""))
     c = F.replace(c, F.lit("-"), F.lit(" "))
     return F.lower(c)
+
+
+def normalize_text(s: str | None, fold_accents: bool = True) -> str | None:
+    """Driver-side twin of :func:`normalize_text_col`: the same six steps
+    in the same order. ``re.ASCII`` gives Python the ASCII-only ``\\w`` and
+    ``\\s`` of Java regexes, ``strip(" ")`` matches Spark's ``trim`` (U+0020
+    only), and after the clean step the string is pure ASCII, so the two
+    lowercasings agree."""
+    if s is None:
+        return None
+    if fold_accents:
+        s = strip_accents(s)
+    s = re.sub(_CLEAN_RE, "", s, flags=re.ASCII).strip(" ")
+    return s.replace("public", "").replace("-", " ").lower()
 
 
 def _ratio(a: str, b: str) -> float:
@@ -373,19 +396,34 @@ def best_match_udf(
 
 _BLOCK_SEP = "\x1f"
 
+#: Distinct (name, block...) query keys up to which ``resolve_entities``
+#: scores on the driver; the order of the reference's registries
+#: (< 10^4 rows). Above it the fact side streams through the scoring
+#: pandas_udf on the executors.
+MAX_DRIVER_KEYS = 10_000
+
 
 def _block_key_col(block_cols: list[str], fold_accents: bool) -> Column:
     """The one blocked-matching key expression, shared by the candidate
     collection and the fact side — the two MUST stay identical or blocked
     matching silently returns zero matches. Cast first: block keys may be
     numeric (e.g. a nation/district key) and the NFD fold udf expects
-    strings."""
+    strings. :func:`_block_key` is its driver-side twin."""
     return F.concat_ws(
         _BLOCK_SEP,
         *[
             normalize_text_col(F.col(b).cast("string"), fold_accents)
             for b in block_cols
         ],
+    )
+
+
+def _block_key(parts, fold_accents: bool) -> str:
+    """Driver-side twin of :func:`_block_key_col` over the block columns'
+    ``cast("string")`` values; null parts are skipped as ``concat_ws``
+    skips them."""
+    return _BLOCK_SEP.join(
+        normalize_text(p, fold_accents) for p in parts if p is not None
     )
 
 
@@ -397,64 +435,56 @@ def collect_candidates(
     block_cols: list[str] | None = None,
     max_candidates: int = 500_000,
 ) -> list[tuple[str, str]] | dict[str, list[tuple[str, str]]]:
-    """Collect + normalize the candidate dim on the driver.
+    """Collect the candidate dim and normalize it on the driver.
 
     Without ``block_cols``: ``[(normalized_name, payload), ...]``.
     With ``block_cols``: ``{block_key: [(normalized_name, payload), ...]}``
     where the block key is the normalized block values joined with a
     non-printing separator — candidates are partitioned so the scorer only
     ever sees its own block (reference district-blocking,
-    update_pnls_report/extract_chu_data.py:337-360).
+    update_pnls_report/extract_chu_data.py:337-360). Candidates with a
+    null name are dropped; list order is the frame's collect order, which
+    breaks score ties.
 
     ``max_candidates`` is the driver-memory scale guard: the candidate dim
-    is collected and shipped inside the scoring udf, which is only sane
-    for dimension-sized inputs (the reference registries are < 10^4
-    rows). A fact-sized frame passed by mistake would OOM the driver
-    during collect — fail loudly first. The frame is cached before the
-    limit+count probe (the kmeans guard pattern): the probe never scans
-    past the cap, what it does scan feeds the collect, and the candidate
-    plan is not evaluated twice.
+    is held by the driver and shipped inside the scoring udf, which is
+    only sane for dimension-sized inputs (the reference registries are
+    < 10^4 rows). One bounded collect of raw name, payload and block
+    values brings at most ``max_candidates + 1`` rows to the driver; one
+    more than the cap fails loudly instead of OOMing on a fact-sized frame
+    passed by mistake.
     """
-    # respect a caller-established cache: persisting is fine (no-op level
-    # change errors aside), but unpersisting in our finally would evict
-    # state the caller still relies on
-    lvl = candidates_df.storageLevel
-    caller_cached = lvl.useMemory or lvl.useDisk
-    cached = candidates_df if caller_cached else candidates_df.persist()
-    try:
-        probe = cached.limit(max_candidates + 1).count()
-        if probe > max_candidates:
-            raise ValueError(
-                f"collect_candidates: candidate frame exceeds {max_candidates} "
-                f"rows — this operator broadcasts candidates to every scoring "
-                f"task and is meant for dimension-sized registries. Block the "
-                f"candidates (block_cols) to bound per-row work, pre-aggregate "
-                f"them, or raise max_candidates explicitly if the memory is "
-                f"truly available"
-            )
-        if not block_cols:
-            return [
-                (r[0], r[1])
-                for r in cached.select(
-                    normalize_text_col(F.col(cand_name_col), fold_accents),
-                    F.col(cand_payload_col),
-                ).collect()
-                if r[0] is not None
-            ]
-        block_key = _block_key_col(block_cols, fold_accents)
-        out: dict[str, list[tuple[str, str]]] = {}
-        for r in cached.select(
-            block_key,
-            normalize_text_col(F.col(cand_name_col), fold_accents),
+    rows = (
+        candidates_df.select(
+            F.col(cand_name_col).cast("string"),
             F.col(cand_payload_col),
-        ).collect():
-            if r[1] is None:
-                continue
-            out.setdefault(r[0], []).append((r[1], r[2]))
-        return out
-    finally:
-        if not caller_cached:
-            cached.unpersist()
+            *[F.col(b).cast("string") for b in block_cols or ()],
+        )
+        .limit(max_candidates + 1)
+        .collect()
+    )
+    if len(rows) > max_candidates:
+        raise ValueError(
+            f"collect_candidates: candidate frame exceeds {max_candidates} "
+            f"rows — this operator broadcasts candidates to every scoring "
+            f"task and is meant for dimension-sized registries. Block the "
+            f"candidates (block_cols) to bound per-row work, pre-aggregate "
+            f"them, or raise max_candidates explicitly if the memory is "
+            f"truly available"
+        )
+    if not block_cols:
+        return [
+            (normalize_text(name, fold_accents), payload)
+            for name, payload in rows
+            if name is not None
+        ]
+    out: dict[str, list[tuple[str, str]]] = {}
+    for name, payload, *parts in rows:
+        if name is not None:
+            out.setdefault(_block_key(parts, fold_accents), []).append(
+                (normalize_text(name, fold_accents), payload)
+            )
+    return out
 
 
 def resolve_entities(
@@ -473,10 +503,20 @@ def resolve_entities(
     """Resolve each row's entity name against a small candidate dim.
 
     The candidate dim is collected once on the driver (it is a broadcast-
-    scale dimension — the reference's registries are < 10^4 rows) and
-    captured inside the scoring pandas_udf, so the fact side never
-    shuffles. Output adds ``matched`` (candidate payload or null) and
+    scale dimension — the reference's registries are < 10^4 rows). Output
+    is ``df``'s columns plus ``matched`` (candidate payload or null) and
     ``match_score``.
+
+    Scoring runs where the work is small:
+
+    - up to ``MAX_DRIVER_KEYS`` distinct (name, block...) keys in ``df``
+      (one bounded distinct collect), the keys are normalized and scored
+      on the driver by the scoring udf's own function, and the result is
+      broadcast-left-joined back on null-safe equality of the raw keys —
+      the plan holds no Python UDF and no worker is forked;
+    - above it, every row streams through the scoring pandas_udf on the
+      executors; ``partitions`` repartitions the fact side first and
+      applies only on this path.
 
     ``block_cols`` (fact side) / ``cand_block_cols`` (candidate side,
     defaults to ``block_cols``) bound the scoring: each row is scored only
@@ -505,6 +545,11 @@ def resolve_entities(
         max_candidates=max_candidates,
     )
     udf = best_match_udf(cands, threshold)
+    key_cols = [name_col, *(block_cols or ())]
+    raw_keys = [F.col(c).cast("string") for c in key_cols]
+    keys = df.select(*raw_keys).distinct().limit(MAX_DRIVER_KEYS + 1).collect()
+    if len(keys) <= MAX_DRIVER_KEYS:
+        return _join_driver_matches(df, raw_keys, keys, udf, fold_accents)
     if partitions:
         # the scoring stage is Python-CPU-bound: one repartition shuffle
         # buys task parallelism across all cores/executors (a single-file
@@ -522,22 +567,54 @@ def resolve_entities(
     ).drop("_m")
 
 
+def _join_driver_matches(
+    df: DataFrame, raw_keys: list[Column], keys: list, udf, fold_accents: bool
+) -> DataFrame:
+    """Score the collected distinct ``keys`` (name first, then block
+    values) on the driver with the function ``udf`` runs on executors,
+    then broadcast-left-join the matches back onto ``df``."""
+    import pyarrow as pa
+
+    names = pd.Series([normalize_text(k[0], fold_accents) for k in keys], dtype=object)
+    if len(raw_keys) > 1:
+        blocks = pd.Series([_block_key(k[1:], fold_accents) for k in keys], dtype=object)
+        scored = udf.func(blocks, names)
+    else:
+        scored = udf.func(names)
+    key_names = [f"_fz_key{i}" for i in range(len(raw_keys))]
+    # a pyarrow Table goes through Arrow even when the session's Arrow
+    # conf is off; a list or pandas frame would fork Python workers
+    lookup = df.sparkSession.createDataFrame(
+        pa.table(
+            {
+                **{
+                    n: pa.array([k[i] for k in keys], pa.string())
+                    for i, n in enumerate(key_names)
+                },
+                "matched": pa.Array.from_pandas(scored["matched"], type=pa.string()),
+                # from_pandas reads NaN as null, as the pandas_udf return does
+                "match_score": pa.Array.from_pandas(scored["score"], type=pa.float64()),
+            }
+        )
+    )
+    on = [k.eqNullSafe(F.col(n)) for k, n in zip(raw_keys, key_names)]
+    return df.join(F.broadcast(lookup), on, "left").drop(*key_names)
+
+
 def uuid5_id(col: Column) -> Column:
     """Deterministic namespaced id: uuid5(NAMESPACE_DNS, name), hyphens
     stripped — byte-identical to the reference's synthesized org ids.
-    By-value pandas_udf (see _nfd_fold_udf note)."""
-
-    @pandas_udf(T.StringType())
-    def u5(s: pd.Series) -> pd.Series:
-        import uuid as _uuid
-
-        return s.map(
-            lambda x: None
-            if x is None
-            else str(_uuid.uuid5(_uuid.NAMESPACE_DNS, x)).replace("-", "")
-        )
-
-    return u5(col)
+    Native (RFC 4122 §4.3): the first 32 hex digits of SHA-1(namespace
+    bytes || UTF-8 name), with digit 13 set to the version ``5`` and digit
+    17 to the variant ``(x & 3) | 8``. A null name gives null."""
+    h = F.sha1(F.concat(F.unhex(F.lit(uuid.NAMESPACE_DNS.hex)), F.encode(col, "UTF-8")))
+    return F.concat(
+        h.substr(1, 12),
+        F.lit("5"),
+        h.substr(14, 3),
+        F.translate(h.substr(17, 1), "0123456789abcdef", "89ab89ab89ab89ab"),
+        h.substr(18, 15),
+    )
 
 
 def uuid5_py(name: str) -> str:

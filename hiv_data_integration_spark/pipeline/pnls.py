@@ -360,8 +360,9 @@ def run_pipeline_c(
             F.col("_tier") == 3, F.concat_ws("/", "ou", uuid5_id(F.col("facility")))
         ).otherwise(F.col("ou")).alias("organisation_unit_id"))
         .cache()
-    )  # facility-count-sized; re-scoring it per sheet join would
-    # repeat the O(names x candidates) Python pass N+1 times
+    )  # facility-count-sized; uncached, the upsert and every sheet join
+    # would re-run the resolution plan (above fuzzy.MAX_DRIVER_KEYS names,
+    # its O(names x candidates) Python pass) N+1 times
 
     registry_after = upsert_parquet_state(
         spark,

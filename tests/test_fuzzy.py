@@ -166,8 +166,8 @@ def test_blocked_agrees_with_unblocked_when_names_unique(spark):
 
 
 def test_uuid5_byte_parity(spark):
-    names = ["CSU Abobo", "Côte d'Ivoire", "x"]
-    df = spark.createDataFrame([(n,) for n in names], "name string")
+    names = ["CSU Abobo", "Côte d'Ivoire", "x", "", "astral \U0001d49c \U0001f600"]
+    df = spark.createDataFrame([(n,) for n in names + [None]], "name string")
     got = {
         r.name: r.uid
         for r in df.select("name", fz.uuid5_id(F.col("name")).alias("uid")).collect()
@@ -175,6 +175,131 @@ def test_uuid5_byte_parity(spark):
     for n in names:
         assert got[n] == str(uuid.uuid5(uuid.NAMESPACE_DNS, n)).replace("-", "")
         assert "-" not in got[n]
+    assert got[None] is None
+
+
+# text the two normalizers could read differently: accents, compatibility
+# characters, punctuation, the case-sensitive noise word, hyphens, the
+# whitespace Spark's trim keeps (tab, vertical tab, NBSP) and astral
+# characters
+_TWIN_PIECES = [
+    "Hôpital", "Général", "Thérèse", "ÉCOLE", "Côte d'Ivoire", "ﬁ", "œ", "ß",
+    "²", "Ⅻ", "Ａ", "İ", "ǅ", "public", "Public", "PUBLIC", "-", "--", " ",
+    "  ", "\t", "\x0b", "\xa0", "\n", "!", "#", ".", "(", "—", "_", "9",
+    "\U0001d49c", "\U0001f600", "e\u0301", "csu", "Abobo",
+]
+_twin_text = st.one_of(
+    st.none(),
+    st.lists(st.sampled_from(_TWIN_PIECES), max_size=8).map("".join),
+    st.text(max_size=12),
+)
+
+
+@settings(max_examples=15, deadline=None)
+@given(st.lists(_twin_text, min_size=1, max_size=40))
+def test_normalize_text_twin_matches_column(spark, texts):
+    df = spark.createDataFrame([(t,) for t in texts], "s string")
+    got = df.select(
+        "s",
+        fz.normalize_text_col(F.col("s"), True).alias("f"),
+        fz.normalize_text_col(F.col("s"), False).alias("nf"),
+    ).collect()
+    for r in got:
+        assert fz.normalize_text(r.s, True) == r.f, repr(r.s)
+        assert fz.normalize_text(r.s, False) == r.nf, repr(r.s)
+
+
+@settings(max_examples=10, deadline=None)
+@given(
+    st.lists(
+        st.tuples(_twin_text, st.none() | st.integers(-10**12, 10**12), _twin_text),
+        min_size=1,
+        max_size=30,
+    )
+)
+def test_block_key_twin_matches_column(spark, rows):
+    df = spark.createDataFrame(rows, "a string, n long, c string")
+    cols = ["a", "n", "c"]
+    got = df.select(
+        *[F.col(c).cast("string").alias(c) for c in cols],
+        fz._block_key_col(cols, True).alias("k"),
+        fz._block_key_col(cols, False).alias("nk"),
+    ).collect()
+    for r in got:
+        parts = [r.a, r.n, r.c]
+        assert fz._block_key(parts, True) == r.k, repr(parts)
+        assert fz._block_key(parts, False) == r.nk, repr(parts)
+
+
+_PARITY_CANDS = [
+    ("Abobo", "CSU Centre", "/abobo/centre"),
+    ("Cocody", "CSU Centre", "/cocody/centre"),
+    ("Abobo", "Hôpital Général", "/abobo/hg"),
+    (None, "Clinique Sainte Thérèse", "/none/cst"),
+    ("Cocody", None, "/cocody/unnamed"),
+]
+_PARITY_QUERIES = {
+    "unblocked": (
+        [("CSU Centre!", "Abobo"), ("hopital general", "Abobo"),
+         ("Pharmacie", "Cocody"), ("Clinique Ste Therese", None)],
+        False,
+    ),
+    "blocked": (
+        [("CSU Centre!", "Abobo"), ("CSU-Centre", "Cocody"),
+         ("hopital general", "Cocody"), ("Pharmacie", "Cocody")],
+        True,
+    ),
+    "null_names": ([(None, "Abobo"), (None, None), ("CSU Centre", "Abobo")], True),
+    "null_blocks": (
+        [("Clinique Sainte Therese", None), ("CSU Centre", None)], True,
+    ),
+    "empty": ([], True),
+    "duplicates": ([("CSU Centre", "Abobo")] * 3 + [(None, None)] * 2, False),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_PARITY_QUERIES))
+def test_driver_path_matches_udf_path(
+    spark, monkeypatch, python_eval_nodes, case
+):
+    """The driver path (distinct keys scored on the driver, joined back)
+    and the pandas_udf path (forced by a negative bound) give the same
+    rows; timestamp, decimal and array fact columns pass through."""
+    import datetime
+    from decimal import Decimal
+
+    queries, blocked = _PARITY_QUERIES[case]
+    q = spark.createDataFrame(
+        [
+            (name, district, datetime.datetime(2024, 1, 1 + i % 28, 8, 30),
+             Decimal(f"{i}.25"), [name, district])
+            for i, (name, district) in enumerate(queries)
+        ],
+        "q string, district string, ts timestamp, amount decimal(12,2), "
+        "tags array<string>",
+    )
+    cands = spark.createDataFrame(
+        _PARITY_CANDS, "district string, name string, path string"
+    )
+    blocking = {"block_cols": ["district"]} if blocked else {}
+
+    def run():
+        out = fz.resolve_entities(
+            q, "q", cands, "name", "path", threshold=80.0, **blocking
+        )
+        return out, out.columns, sorted(map(repr, out.collect()))
+
+    driver, driver_cols, driver_rows = run()
+    # -1, not 0: zero distinct keys (the empty frame) fit a bound of 0
+    monkeypatch.setattr(fz, "MAX_DRIVER_KEYS", -1)
+    udf, udf_cols, udf_rows = run()
+    assert python_eval_nodes(driver) == []
+    assert python_eval_nodes(udf) == ["ArrowEvalPython"]
+    assert driver_cols == udf_cols == q.columns + ["matched", "match_score"]
+    assert driver_rows == udf_rows
+    assert len(driver_rows) == len(queries)
+    # every non-empty case resolves at least one row
+    assert any("matched='/" in r for r in driver_rows) == bool(queries)
 
 
 def test_upsert_parquet_state_roundtrip(spark, tmp_path):

@@ -678,3 +678,45 @@ def test_pipeline_c_unreadable_registry_raises(spark, org_units, tmp_path):
             tmp_path,
             [("CHU de Cocody", "DS Cocody", "202401", "1", "2")],
         )
+
+
+def test_pipeline_c_plans_run_no_python_udf(
+    spark, org_units, tmp_path, python_eval_nodes
+):
+    """With all three tiers live, the report's and the registry's
+    executed plans hold no Python evaluation node: names are scored on
+    the driver and uuid5 ids are native."""
+    from hiv_data_integration_spark.operators.fuzzy import nfd_fold
+
+    # the probe sees a pandas_udf where there is one
+    assert python_eval_nodes(spark.range(1).select(nfd_fold(F.lit("é")))) == [
+        "ArrowEvalPython"
+    ]
+    registry_path = str(tmp_path / "org_unit_chu.parquet")
+    spark.createDataFrame(
+        [(f"/{ROOT}/r1/d1/reg", "Registered Clinic", "DS Cocody")],
+        "organisation_unit_id string, formations_sanitaires string, "
+        "districts_sanitaires string",
+    ).write.parquet(registry_path)
+    sheet = spark.createDataFrame(
+        [
+            ("Registered Clinic", "DS Cocody", "202401", "1", "2"),
+            ("CSU Abobo Nord", "DS Cocody", "202401", "3", "4"),
+            ("Clinique Inconnue", "Cocody", "202401", "5", "6"),
+        ],
+        "Etablissements string, Districts string, Mois string, "
+        "`indicateur_11_age_0_4_ans_F` string, `indicateur_11_age_0_4_ans_M` string",
+    )
+    report, registry = run_pipeline_c(
+        spark,
+        sheets={"PEC": (sheet, {"indicateur_11_": 11})},
+        facility_col="Etablissements",
+        period_col="Mois",
+        registry_path=registry_path,
+        org_units=org_units,
+        report_value_columns=REPORT_VALUE_COLS,
+        district_col="Districts",
+    )
+    assert report.count() > 0 and registry.count() == 3
+    assert python_eval_nodes(report) == []
+    assert python_eval_nodes(registry) == []

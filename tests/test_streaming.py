@@ -473,3 +473,40 @@ def test_python_pstream_source_partition_planning(spark):
     a = sorted(map(tuple, q_python_datasource_pstream(spark, "/tmp").collect()))
     b = sorted(map(tuple, q_python_datasource_stream(spark, "/tmp").collect()))
     assert a == b
+
+
+@pytest.mark.parametrize("prior", [None, "false", "true"])
+def test_trailing_flush_batch_restores_prior_conf(spark, prior):
+    """The context manager turns the trailing no-data batch on and puts
+    back whatever was set before it, leaving an unset key unset."""
+    from hiv_data_integration_spark.battery_ext import _trailing_flush_batch
+
+    key = _trailing_flush_batch._KEY
+    session = spark.newSession()
+    if prior is not None:
+        session.conf.set(key, prior)
+    with _trailing_flush_batch(session):
+        assert session.conf.get(key) == "true"
+    assert session.conf.getAll.get(key) == prior
+
+
+def test_local_result_logs_arrow_fallback(spark, monkeypatch, caplog):
+    """A failed Arrow transfer falls back to rows with a warning naming
+    the exception class, and the rows still arrive."""
+    import logging
+
+    from hiv_data_integration_spark.battery_ext import _local_result
+
+    def broken(self):
+        raise NotImplementedError("no arrow for this type")
+
+    df = spark.range(3)
+    monkeypatch.setattr(type(df), "toArrow", broken)
+    with caplog.at_level(logging.WARNING):
+        out = _local_result(df)
+    assert sorted(r.id for r in out.collect()) == [0, 1, 2]
+    warnings = [r for r in caplog.records if r.levelno == logging.WARNING]
+    assert any(
+        "NotImplementedError" in r.getMessage() and "_local_result" in r.getMessage()
+        for r in warnings
+    )
