@@ -1230,8 +1230,10 @@ def q_fuzzy_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the previously rows-only entry into a full value-hash check of the
     candidate-capture, normalization, pruning, and strict-max selection
     machinery (reference D6-D8, update_pnls_report/utils.py:434-514). The
-    supplier dim is far below ``fz.MAX_DRIVER_KEYS``, so the names are
-    scored on the driver and no Python worker runs."""
+    entry sits on both sides of ``fz.MAX_DRIVER_WORK``: at sf0.01 (100 x
+    100 names) it is scored on the driver and no Python worker runs; at
+    sf0.1 (1,000 x 1,000) the work exceeds the budget and every row
+    streams through the scoring pandas_udf."""
     sup = tbl(spark, sf_dir, "supplier")
     dirty = sup.select(
         F.col("s_suppkey").alias("dirty_key"),
@@ -1239,8 +1241,8 @@ def q_fuzzy_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s_name"), F.lit("Supplier"), F.lit("Suplier")
         ).alias("dirty_name"),
     )
-    # above MAX_DRIVER_KEYS: 16 scoring tasks, not 32 — each task runs a
-    # Python worker at full CPU, and 32 workers + 32 JVM threads
+    # on the udf path (sf0.1 and up): 16 scoring tasks, not 32 — each task
+    # runs a Python worker at full CPU, and 32 workers + 32 JVM threads
     # oversubscribe the box (measured 1.4 s stable at 16 vs 2.8-5.4 s at 32)
     resolved = fz.resolve_entities(
         dirty, "dirty_name", sup, "s_name", "s_name", threshold=80.0,

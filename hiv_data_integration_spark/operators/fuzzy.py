@@ -17,18 +17,18 @@ Reference semantics (cited for parity, re-expressed Spark-first):
 
 Scale design:
 
-- Every step runs where its input lives. Candidate dims and the distinct
-  query keys of a dimension-sized frame (the reference's registries are
-  < 10^4 rows) are collected once and normalized and scored on the
-  driver by the very function the scoring pandas_udf runs, then joined
-  back as a broadcast lookup: no Python worker is forked for them.
-- Above ``MAX_DRIVER_KEYS`` distinct query keys the fact side streams
-  through the scoring pandas_udf in Arrow batches instead, against the
-  same captured candidates — no shuffle, no crossJoin. Normalization there
-  is native Catalyst expressions except the NFD fold (no built-in), an
-  Arrow-vectorized pandas_udf. O(rows x candidates) Python work is bounded
-  by optional blocking keys (the reference blocks by district the same
-  way).
+- Every step runs where its input lives. The candidate dim (the
+  reference's registries are < 10^4 rows) is collected once and
+  normalized on the driver. A query frame whose scoring work fits
+  ``MAX_DRIVER_WORK`` is scored on the driver too, by the very function
+  the scoring pandas_udf runs, and joined back as a broadcast lookup: no
+  Python worker is forked for it.
+- Above that budget the fact side streams through the scoring pandas_udf
+  in Arrow batches, against the same captured candidates — no shuffle
+  unless ``partitions`` asks for one, no crossJoin. The udf normalizes
+  its raw inputs with the same Python normalizer the driver uses.
+  O(rows x candidates) Python work is bounded by optional blocking keys
+  (the reference blocks by district the same way).
 - ``uuid5_id`` is native: one SHA-1 plus two nibble rewrites.
 - The scorer is a pure-Python token_set_ratio (difflib SequenceMatcher
   core) because no fuzzy library ships in this container; the algorithm
@@ -133,18 +133,43 @@ def normalize_text_col(col: Column, fold_accents: bool = True) -> Column:
     return F.lower(c)
 
 
-def normalize_text(s: str | None, fold_accents: bool = True) -> str | None:
-    """Driver-side twin of :func:`normalize_text_col`: the same six steps
+_BLOCK_SEP = "\x1f"
+
+
+def _normalizers(fold_accents: bool):
+    """``(norm, block_key)``, the one Python text normalization: candidate
+    collection, the driver path and the scoring udf all use it.
+
+    ``norm`` is the twin of :func:`normalize_text_col`: the same six steps
     in the same order. ``re.ASCII`` gives Python the ASCII-only ``\\w`` and
     ``\\s`` of Java regexes, ``strip(" ")`` matches Spark's ``trim`` (U+0020
     only), and after the clean step the string is pure ASCII, so the two
-    lowercasings agree."""
-    if s is None:
-        return None
-    if fold_accents:
-        s = strip_accents(s)
-    s = re.sub(_CLEAN_RE, "", s, flags=re.ASCII).strip(" ")
-    return s.replace("public", "").replace("-", " ").lower()
+    lowercasings agree. ``block_key`` joins the normalized non-null parts
+    of a row's ``cast("string")`` block values with a non-printing
+    separator. Both are nested so cloudpickle ships them by value inside
+    the udf: its workers need not import this package."""
+
+    def norm(s):
+        if s is None:
+            return None
+        if fold_accents:
+            s = "".join(
+                ch
+                for ch in unicodedata.normalize("NFD", s)
+                if not unicodedata.combining(ch)
+            )
+        s = re.sub(_CLEAN_RE, "", s, flags=re.ASCII).strip(" ")
+        return s.replace("public", "").replace("-", " ").lower()
+
+    def block_key(parts):
+        return _BLOCK_SEP.join(norm(p) for p in parts if p is not None)
+
+    return norm, block_key
+
+
+def normalize_text(s: str | None, fold_accents: bool = True) -> str | None:
+    """Python twin of :func:`normalize_text_col` (see :func:`_normalizers`)."""
+    return _normalizers(fold_accents)[0](s)
 
 
 def _ratio(a: str, b: str) -> float:
@@ -180,18 +205,22 @@ def best_match_udf(
     candidates: list[tuple[str, str]] | dict[str, list[tuple[str, str]]],
     threshold: float = 90.0,
     max_unblocked_candidates: int = MAX_UNBLOCKED_CANDIDATES,
+    fold_accents: bool = True,
 ):
     """Build a pandas_udf scoring each input against a broadcast-style
     captured candidate list ``[(normalized_name, payload), ...]``.
 
-    Two shapes:
+    Inputs are raw strings: the udf normalizes each name (and block
+    values) with :func:`_normalizers`, the normalization
+    :func:`collect_candidates` applied to the candidates. Two shapes:
 
     - ``list`` → unblocked: ``udf(name_col)`` scores against ALL candidates.
     - ``dict[block_key, list]`` → **blocked** (the reference's
       district-blocking, update_pnls_report/extract_chu_data.py:337-360):
-      ``udf(block_col, name_col)`` scores each row against only its block's
-      candidates — O(rows × block size) instead of O(rows × all candidates),
-      the 100-TB-safe shape when the candidate dim is large.
+      ``udf(array(block_cols...), name_col)`` scores each row against only
+      its block's candidates — O(rows × block size) instead of O(rows ×
+      all candidates), the 100-TB-safe shape when the candidate dim is
+      large.
 
     Returns struct(matched:payload or NULL, score:double or NULL — score
     is reported only for accepted matches, which lets the scorer prune).
@@ -226,6 +255,8 @@ def best_match_udf(
             T.StructField("score", T.DoubleType()),
         ]
     )
+
+    norm, block_key = _normalizers(fold_accents)
 
     def _match_series(cols):
         from collections import Counter
@@ -364,12 +395,14 @@ def best_match_udf(
                 matched.append(None)
                 scores.append(None)
                 continue
-            b = blocks_s.iloc[i] if blocks_s is not None else None
-            r = memo.get((b, q))
+            parts = tuple(blocks_s.iloc[i]) if blocks_s is not None else None
+            r = memo.get((parts, q))
             if r is None:
-                exact, prep = get_block(b)
-                r = best_for(q, exact, prep)
-                memo[(b, q)] = r
+                exact, prep = get_block(
+                    block_key(parts) if parts is not None else None
+                )
+                r = best_for(norm(q), exact, prep)
+                memo[(parts, q)] = r
             matched.append(r[0])
             scores.append(r[1])
         return pd.DataFrame({"matched": matched, "score": scores})
@@ -394,37 +427,21 @@ def best_match_udf(
     return match.asNondeterministic()
 
 
-_BLOCK_SEP = "\x1f"
-
-#: Distinct (name, block...) query keys up to which ``resolve_entities``
-#: scores on the driver; the order of the reference's registries
-#: (< 10^4 rows). Above it the fact side streams through the scoring
-#: pandas_udf on the executors.
-MAX_DRIVER_KEYS = 10_000
-
-
-def _block_key_col(block_cols: list[str], fold_accents: bool) -> Column:
-    """The one blocked-matching key expression, shared by the candidate
-    collection and the fact side — the two MUST stay identical or blocked
-    matching silently returns zero matches. Cast first: block keys may be
-    numeric (e.g. a nation/district key) and the NFD fold udf expects
-    strings. :func:`_block_key` is its driver-side twin."""
-    return F.concat_ws(
-        _BLOCK_SEP,
-        *[
-            normalize_text_col(F.col(b).cast("string"), fold_accents)
-            for b in block_cols
-        ],
-    )
-
-
-def _block_key(parts, fold_accents: bool) -> str:
-    """Driver-side twin of :func:`_block_key_col` over the block columns'
-    ``cast("string")`` values; null parts are skipped as ``concat_ws``
-    skips them."""
-    return _BLOCK_SEP.join(
-        normalize_text(p, fold_accents) for p in parts if p is not None
-    )
+#: Scoring work, in candidate comparisons, up to which ``resolve_entities``
+#: scores on the driver instead of in pandas_udf workers. A query row is
+#: charged the candidates of the widest block plus ``_ROW_COST``, its own
+#: collect, normalization and lookup-row overhead in the same unit.
+#: Measured on a 4-vCPU box at local[4] (unblocked supplier-style names;
+#: driver path vs udf path, seconds): 1,000 x 1,000 candidates 2.3-4.6 vs
+#: 1.4-1.5 warm / 5.8-6.3 in a process whose first udf forks the workers;
+#: 3,000 x 1,000 9.0-13.5 vs 3.2-4.0 / 8.6-9.2; 100,000 x 10 5.9-9.4 vs
+#: 2.2-3.0 / 7.3. The first and last driver runs price a row at about 17
+#: candidates, hence ``_ROW_COST``. The driver path wins below about 10^5
+#: of this work against warm workers and below about 2 x 10^6 against a
+#: cold fork; the budget sits between, where either choice costs at most
+#: about 2 s.
+MAX_DRIVER_WORK = 1_000_000
+_ROW_COST = 20
 
 
 def collect_candidates(
@@ -472,18 +489,13 @@ def collect_candidates(
             f"them, or raise max_candidates explicitly if the memory is "
             f"truly available"
         )
+    norm, block_key = _normalizers(fold_accents)
     if not block_cols:
-        return [
-            (normalize_text(name, fold_accents), payload)
-            for name, payload in rows
-            if name is not None
-        ]
+        return [(norm(name), payload) for name, payload in rows if name is not None]
     out: dict[str, list[tuple[str, str]]] = {}
     for name, payload, *parts in rows:
         if name is not None:
-            out.setdefault(_block_key(parts, fold_accents), []).append(
-                (normalize_text(name, fold_accents), payload)
-            )
+            out.setdefault(block_key(parts), []).append((norm(name), payload))
     return out
 
 
@@ -507,13 +519,16 @@ def resolve_entities(
     is ``df``'s columns plus ``matched`` (candidate payload or null) and
     ``match_score``.
 
-    Scoring runs where the work is small:
+    Scoring runs where the work is small. Every query row costs at most
+    the widest candidate block plus a fixed overhead, so ``MAX_DRIVER_WORK``
+    caps the rows the driver may score; a probe collects at most one row
+    more than that cap (a short partial scan, not a pass over ``df``):
 
-    - up to ``MAX_DRIVER_KEYS`` distinct (name, block...) keys in ``df``
-      (one bounded distinct collect), the keys are normalized and scored
-      on the driver by the scoring udf's own function, and the result is
+    - within the cap, the distinct (name, block...) keys are scored on the
+      driver by the scoring udf's own function, and the result is
       broadcast-left-joined back on null-safe equality of the raw keys —
-      the plan holds no Python UDF and no worker is forked;
+      the plan holds no Python UDF and no worker is forked. ``df`` is
+      evaluated twice, by the probe and by the join;
     - above it, every row streams through the scoring pandas_udf on the
       executors; ``partitions`` repartitions the fact side first and
       applies only on this path.
@@ -544,41 +559,38 @@ def resolve_entities(
         cand_block_cols if cand_block_cols is not None else block_cols,
         max_candidates=max_candidates,
     )
-    udf = best_match_udf(cands, threshold)
-    key_cols = [name_col, *(block_cols or ())]
-    raw_keys = [F.col(c).cast("string") for c in key_cols]
-    keys = df.select(*raw_keys).distinct().limit(MAX_DRIVER_KEYS + 1).collect()
-    if len(keys) <= MAX_DRIVER_KEYS:
-        return _join_driver_matches(df, raw_keys, keys, udf, fold_accents)
+    udf = best_match_udf(cands, threshold, fold_accents=fold_accents)
+    raw_keys = [F.col(c).cast("string") for c in [name_col, *(block_cols or ())]]
+    blocks = cands.values() if isinstance(cands, dict) else [cands]
+    cap = MAX_DRIVER_WORK // (max(map(len, blocks), default=0) + _ROW_COST)
+    rows = df.select(*raw_keys).limit(cap + 1).collect()
+    if len(rows) <= cap:
+        return _join_driver_matches(df, raw_keys, list(dict.fromkeys(rows)), udf)
     if partitions:
         # the scoring stage is Python-CPU-bound: one repartition shuffle
         # buys task parallelism across all cores/executors (a single-file
         # parquet dim would otherwise score serially in one task)
         df = df.repartition(partitions)
-    normalized = normalize_text_col(F.col(name_col), fold_accents)
     if block_cols:
-        out = df.withColumn(
-            "_m", udf(_block_key_col(block_cols, fold_accents), normalized)
-        )
+        scored = udf(F.array(*raw_keys[1:]), raw_keys[0])
     else:
-        out = df.withColumn("_m", udf(normalized))
-    return out.select(
+        scored = udf(raw_keys[0])
+    return df.withColumn("_m", scored).select(
         "*", F.col("_m.matched").alias("matched"), F.col("_m.score").alias("match_score")
     ).drop("_m")
 
 
 def _join_driver_matches(
-    df: DataFrame, raw_keys: list[Column], keys: list, udf, fold_accents: bool
+    df: DataFrame, raw_keys: list[Column], keys: list, udf
 ) -> DataFrame:
-    """Score the collected distinct ``keys`` (name first, then block
-    values) on the driver with the function ``udf`` runs on executors,
-    then broadcast-left-join the matches back onto ``df``."""
+    """Score the distinct raw ``keys`` (name first, then block values) on
+    the driver with the function ``udf`` runs on executors, then
+    broadcast-left-join the matches back onto ``df``."""
     import pyarrow as pa
 
-    names = pd.Series([normalize_text(k[0], fold_accents) for k in keys], dtype=object)
+    names = pd.Series([k[0] for k in keys], dtype=object)
     if len(raw_keys) > 1:
-        blocks = pd.Series([_block_key(k[1:], fold_accents) for k in keys], dtype=object)
-        scored = udf.func(blocks, names)
+        scored = udf.func(pd.Series([k[1:] for k in keys], dtype=object), names)
     else:
         scored = udf.func(names)
     key_names = [f"_fz_key{i}" for i in range(len(raw_keys))]

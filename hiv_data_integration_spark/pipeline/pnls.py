@@ -361,8 +361,8 @@ def run_pipeline_c(
         ).otherwise(F.col("ou")).alias("organisation_unit_id"))
         .cache()
     )  # facility-count-sized; uncached, the upsert and every sheet join
-    # would re-run the resolution plan (above fuzzy.MAX_DRIVER_KEYS names,
-    # its O(names x candidates) Python pass) N+1 times
+    # would re-run the resolution plan (above fuzzy.MAX_DRIVER_WORK, its
+    # O(names x candidates) Python pass) N+1 times
 
     registry_after = upsert_parquet_state(
         spark,

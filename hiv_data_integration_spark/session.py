@@ -7,8 +7,8 @@ Tungsten and therefore only needs to pick good session defaults:
 - AQE on (runtime shuffle-partition coalescing, skew-join splitting,
   dynamic join-strategy switch) — at 100 TB these replace any hand-tuning.
 - Arrow on for driver transfers and the pandas_udf islands (NFD fold,
-  and fuzzy scoring of frames above ``operators.fuzzy.MAX_DRIVER_KEYS``
-  distinct keys).
+  and fuzzy scoring of frames whose work exceeds
+  ``operators.fuzzy.MAX_DRIVER_WORK``).
 - Session timezone pinned to UTC so timestamp semantics are deterministic
   and match the DuckDB oracle (naive parquet timestamps).
 - ``local[$SPARK_GRAFT_CPUS]`` by default for tests/bench; on a real

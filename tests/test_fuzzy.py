@@ -209,28 +209,6 @@ def test_normalize_text_twin_matches_column(spark, texts):
         assert fz.normalize_text(r.s, False) == r.nf, repr(r.s)
 
 
-@settings(max_examples=10, deadline=None)
-@given(
-    st.lists(
-        st.tuples(_twin_text, st.none() | st.integers(-10**12, 10**12), _twin_text),
-        min_size=1,
-        max_size=30,
-    )
-)
-def test_block_key_twin_matches_column(spark, rows):
-    df = spark.createDataFrame(rows, "a string, n long, c string")
-    cols = ["a", "n", "c"]
-    got = df.select(
-        *[F.col(c).cast("string").alias(c) for c in cols],
-        fz._block_key_col(cols, True).alias("k"),
-        fz._block_key_col(cols, False).alias("nk"),
-    ).collect()
-    for r in got:
-        parts = [r.a, r.n, r.c]
-        assert fz._block_key(parts, True) == r.k, repr(parts)
-        assert fz._block_key(parts, False) == r.nk, repr(parts)
-
-
 _PARITY_CANDS = [
     ("Abobo", "CSU Centre", "/abobo/centre"),
     ("Cocody", "CSU Centre", "/cocody/centre"),
@@ -263,7 +241,7 @@ def test_driver_path_matches_udf_path(
     spark, monkeypatch, python_eval_nodes, case
 ):
     """The driver path (distinct keys scored on the driver, joined back)
-    and the pandas_udf path (forced by a negative bound) give the same
+    and the pandas_udf path (forced by a negative budget) give the same
     rows; timestamp, decimal and array fact columns pass through."""
     import datetime
     from decimal import Decimal
@@ -290,8 +268,8 @@ def test_driver_path_matches_udf_path(
         return out, out.columns, sorted(map(repr, out.collect()))
 
     driver, driver_cols, driver_rows = run()
-    # -1, not 0: zero distinct keys (the empty frame) fit a bound of 0
-    monkeypatch.setattr(fz, "MAX_DRIVER_KEYS", -1)
+    # -1, not 0: the empty frame's zero rows fit a budget of 0
+    monkeypatch.setattr(fz, "MAX_DRIVER_WORK", -1)
     udf, udf_cols, udf_rows = run()
     assert python_eval_nodes(driver) == []
     assert python_eval_nodes(udf) == ["ArrowEvalPython"]
@@ -300,6 +278,61 @@ def test_driver_path_matches_udf_path(
     assert len(driver_rows) == len(queries)
     # every non-empty case resolves at least one row
     assert any("matched='/" in r for r in driver_rows) == bool(queries)
+
+
+def test_driver_budget_charges_widest_block(spark, monkeypatch, python_eval_nodes):
+    """Each query row is charged the widest candidate block plus the row
+    overhead: the same rows fit the budget blocked (widest block 3) and
+    exceed it unblocked (all 5 candidates)."""
+    q = spark.createDataFrame(
+        [("CSU Centre", "Abobo"), ("Pharmacie", "Cocody"), ("Hopital", "Abobo")],
+        "q string, district string",
+    )
+    cands = spark.createDataFrame(
+        [("Abobo", "CSU Centre", "/a/1"), ("Abobo", "Hôpital", "/a/2"),
+         ("Abobo", "Clinique", "/a/3"), ("Cocody", "Pharmacie", "/c/1"),
+         ("Cocody", "Clinique Centre", "/c/2")],
+        "district string, name string, path string",
+    )
+    monkeypatch.setattr(fz, "MAX_DRIVER_WORK", 3 * (3 + fz._ROW_COST))
+    blocked = fz.resolve_entities(
+        q, "q", cands, "name", "path", block_cols=["district"]
+    )
+    unblocked = fz.resolve_entities(q, "q", cands, "name", "path")
+    assert python_eval_nodes(blocked) == []
+    assert python_eval_nodes(unblocked) == ["ArrowEvalPython"]
+    assert {r.q: r.matched for r in blocked.collect()} == {
+        r.q: r.matched for r in unblocked.collect()
+    } == {"CSU Centre": "/a/1", "Pharmacie": "/c/1", "Hopital": "/a/2"}
+
+
+def test_scoring_udf_runs_without_this_package(tmp_path):
+    """The scoring function and its normalizer pickle by value, so udf
+    workers of a session this package did not build (no PYTHONPATH to
+    the repo) can still run it."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    udf = fz.best_match_udf({"abobo": [("hopital general", "/a/hg")]}, 90.0)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    code = (
+        "import importlib.util, pickle, sys, pandas as pd\n"
+        "assert importlib.util.find_spec('hiv_data_integration_spark') is None\n"
+        "f = pickle.loads(sys.stdin.buffer.read())\n"
+        "out = f(pd.Series([('ABOBO',), (None,)]), pd.Series(['Hôpital-Général!', 'x']))\n"
+        "print(out.to_json(orient='records'))\n"
+    )
+    res = subprocess.run(
+        [sys.executable, "-c", code], input=cloudpickle.dumps(udf.func),
+        cwd=tmp_path, env=env, capture_output=True, timeout=120,
+    )
+    assert res.returncode == 0, res.stderr.decode()[-2000:]
+    assert res.stdout.decode().strip() == (
+        '[{"matched":"\\/a\\/hg","score":100.0},{"matched":null,"score":null}]'
+    )
 
 
 def test_upsert_parquet_state_roundtrip(spark, tmp_path):
