@@ -1087,10 +1087,10 @@ FROM j GROUP BY query_id
 
 
 # ---------------------------------------------------------------------------
-# REST fan-out sources (S4-S6) with deterministic fake fetchers — the fetch
-# harness (grid partitioning, mapInPandas, retry plumbing) and the JVM-side
-# JSON flatten are the operators under test; the oracle reproduces the same
-# deterministic payloads in pure SQL.
+# REST sources (S4-S6) with deterministic fake fetchers — the driver-side
+# fetch harness (thread pool, retry plumbing, Arrow hand-off) and the
+# JVM-side JSON flatten are the operators under test; the oracle reproduces
+# the same deterministic payloads in pure SQL.
 # ---------------------------------------------------------------------------
 
 

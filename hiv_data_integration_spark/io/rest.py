@@ -1,4 +1,4 @@
-"""REST-API source adapters: distributed fan-out fetch with retry.
+"""REST-API source adapters: a driver-side fetch with retry, into Arrow.
 
 Reference semantics re-expressed Spark-first:
 
@@ -14,13 +14,16 @@ Reference semantics re-expressed Spark-first:
   worker threads, retry once after a sleep, log-and-drop on the second
   failure.
 
-Spark design: the request grid becomes a **parameter DataFrame**,
-repartitioned so each task owns a slice of the grid; the fetch runs inside
-``mapInPandas`` (task parallelism replaces the thread pool; a 1000-executor
-cluster fans out 1000-wide instead of 5-wide). Retry/drop lives inside the
-partition function. The fetch callable is injected — tests use fakes; a
-production deployment passes a closure over ``requests``. Fetchers must be
-self-contained (cloudpickle ships them by value to workers).
+Spark design: the fetch is I/O-bound and source-sized, so it runs where the
+reference runs it — on the driver, on a pool of 5 threads, with the same
+retry-then-drop policy. It is **eager**: a source fetches when it is
+called, and every row lands in one ``pyarrow.Table`` that Spark takes as a
+local relation. However often the plan is evaluated afterwards (a pivot
+probe, a cache miss, several sinks), each request runs once, and no Spark
+job or Python worker is involved. A dropped request is logged as a
+warning. The fetch callable is injected — tests use fakes; a production
+deployment passes a closure over ``requests``. Fetchers are called from
+several threads at once and must be thread-safe.
 
 Nested-JSON flattening happens JVM-side: the fetcher returns raw JSON
 strings and ``flatten_naomi_json`` applies ``from_json`` + double
@@ -30,15 +33,17 @@ comprehension, as Catalyst operators.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+import logging
+import time
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 __all__ = [
-    "fetch_distributed",
+    "fetch_to_frame",
     "ANALYTICS_SCHEMA",
     "dhis2_analytics_source",
     "NAOMI_FETCH_SCHEMA",
@@ -46,6 +51,11 @@ __all__ = [
     "naomi_source",
     "flatten_naomi_json",
 ]
+
+_log = logging.getLogger(__name__)
+
+# The reference harness's pool size (update_pnls_report/utils.py:54-96).
+_FETCH_THREADS = 5
 
 # Long fact contract for DHIS2-style analytics extracts (§1.1.2).
 ANALYTICS_SCHEMA = T.StructType(
@@ -96,46 +106,57 @@ _NAOMI_JSON_SCHEMA = T.ArrayType(
 )
 
 
-def fetch_distributed(
-    params: DataFrame,
+def fetch_to_frame(
+    spark: SparkSession,
+    params: list[dict],
     fetch_fn: Callable[[dict], list[dict]],
     out_schema: T.StructType,
     max_retries: int = 1,
     retry_sleep: float = 5.0,
-    tasks: int | None = None,
 ) -> DataFrame:
-    """Distributed fetch: one ``fetch_fn(param_row) -> [row_dict]`` call per
-    grid row, executed inside ``mapInPandas`` partitions.
+    """Fetch now, on the driver: one ``fetch_fn(param) -> [row_dict]`` call
+    per grid entry on a pool of 5 threads, every row in one Arrow table,
+    handed to Spark as one local relation. Rows keep grid order whatever
+    order the threads finish in.
 
     Retry policy mirrors the reference harness: on exception sleep
     ``retry_sleep`` and retry up to ``max_retries`` times, then **drop the
-    request** (yield nothing for it) — partial results beat a failed job
-    for monitoring-style pipelines. ``tasks`` repartitions the grid to
-    bound per-task request counts (default: leave partitioning alone).
+    request** — partial results beat a failed job for monitoring-style
+    pipelines. Drops are logged: one warning per call with the dropped
+    count, each dropped param and its last error, and the traceback of the
+    last one.
     """
-    out_cols = [f.name for f in out_schema.fields]
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    def run_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import time as _time
+    def fetch_one(param: dict) -> list[dict] | Exception:
+        for attempt in range(max_retries + 1):
+            if attempt:
+                time.sleep(retry_sleep)
+            try:
+                return fetch_fn(param)
+            except Exception as e:  # a drop, logged below
+                err = e
+        return err
 
-        for pdf in batches:
-            rows: list[dict] = []
-            for param in pdf.to_dict("records"):
-                attempt = 0
-                while True:
-                    try:
-                        rows.extend(fetch_fn(param))
-                        break
-                    except Exception:
-                        attempt += 1
-                        if attempt > max_retries:
-                            break  # drop this request
-                        _time.sleep(retry_sleep)
-            yield pd.DataFrame(rows, columns=out_cols)
-
-    if tasks:
-        params = params.repartition(tasks)
-    return params.mapInPandas(run_partition, out_schema)
+    with ThreadPoolExecutor(_FETCH_THREADS) as pool:
+        results = list(pool.map(fetch_one, params))
+    dropped = [(p, r) for p, r in zip(params, results) if isinstance(r, Exception)]
+    if dropped:
+        _log.warning(
+            "REST fetch dropped %d of %d requests after %d retries: %s",
+            len(dropped),
+            len(params),
+            max_retries,
+            [(p, f"{type(e).__name__}: {e}") for p, e in dropped],
+            exc_info=dropped[-1][1],
+        )
+    rows = [row for r in results if not isinstance(r, Exception) for row in r]
+    # a pyarrow Table goes through Arrow even when the session's Arrow
+    # conf is off; a list or pandas frame would fork Python workers
+    return spark.createDataFrame(
+        pa.Table.from_pylist(rows, schema=to_arrow_schema(out_schema))
+    )
 
 
 def dhis2_analytics_source(
@@ -146,18 +167,22 @@ def dhis2_analytics_source(
     org_unit_level: int = 4,
     **fetch_kw,
 ) -> DataFrame:
-    """DHIS2 analytics extract: fan the (data_element × period) grid out to
-    executors; each fetch returns long-format rows (ANALYTICS_SCHEMA).
+    """DHIS2 analytics extract: fetch the (data_element × period) grid now,
+    on the driver (see :func:`fetch_to_frame`); each fetch returns
+    long-format rows (ANALYTICS_SCHEMA). ``fetch_fn`` receives
+    ``{data_element, period, org_unit_level}`` and must be safe to call
+    from several threads at once.
 
     The org-unit level is pushed down into each request — predicate
     pushdown for a REST source is parameterization, exactly as the
     reference pushes ``org_unit_levels=[4]`` into the API call.
     """
-    grid = spark.createDataFrame(
-        [(de, pe, org_unit_level) for de in data_elements for pe in periods],
-        "data_element string, period string, org_unit_level int",
-    )
-    return fetch_distributed(grid, fetch_fn, ANALYTICS_SCHEMA, **fetch_kw)
+    grid = [
+        {"data_element": de, "period": pe, "org_unit_level": org_unit_level}
+        for de in data_elements
+        for pe in periods
+    ]
+    return fetch_to_frame(spark, grid, fetch_fn, ANALYTICS_SCHEMA, **fetch_kw)
 
 
 # NAOMI request grid: 2 indicators × 2 sexes × 7 age codes = 28 requests
@@ -170,17 +195,14 @@ _NAOMI_AGES = [
 ]
 
 
-def naomi_grid(spark: SparkSession) -> DataFrame:
+def naomi_grid() -> list[dict]:
     """The 28-cell (indicator × sex × age_code) request grid."""
-    return spark.createDataFrame(
-        [
-            (ind, sex, age)
-            for ind in _NAOMI_INDICATORS
-            for sex in _NAOMI_SEXES
-            for age in _NAOMI_AGES
-        ],
-        "indicator string, sex string, age_code string",
-    )
+    return [
+        {"indicator": ind, "sex": sex, "age_code": age}
+        for ind in _NAOMI_INDICATORS
+        for sex in _NAOMI_SEXES
+        for age in _NAOMI_AGES
+    ]
 
 
 def flatten_naomi_json(raw: DataFrame) -> DataFrame:
@@ -215,13 +237,13 @@ def naomi_source(
     fetch_fn: Callable[[dict], list[dict]],
     **fetch_kw,
 ) -> DataFrame:
-    """NAOMI estimates source: 28-request fan-out → JVM-side JSON flatten.
+    """NAOMI estimates source: the 28 requests are fetched now, on the
+    driver (see :func:`fetch_to_frame`), then flattened JVM-side.
 
     ``fetch_fn`` receives ``{indicator, sex, age_code}`` and returns one
     row ``{indicator, coc_name, payload_json}`` (or [] / raise to drop /
-    retry). Output: ``(code, name, mean, indicator, coc_name)``.
+    retry); it must be safe to call from several threads at once. Output:
+    ``(code, name, mean, indicator, coc_name)``.
     """
-    raw = fetch_distributed(
-        naomi_grid(spark), fetch_fn, NAOMI_FETCH_SCHEMA, **fetch_kw
-    )
+    raw = fetch_to_frame(spark, naomi_grid(), fetch_fn, NAOMI_FETCH_SCHEMA, **fetch_kw)
     return flatten_naomi_json(raw)

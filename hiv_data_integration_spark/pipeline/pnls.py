@@ -150,11 +150,15 @@ def naomi_to_wide(
     quarter_suffixes: list[str],
 ) -> DataFrame:
     """NAOMI leg: code→org-unit broadcast join, yearly→quarterly period
-    replication (cross join + rewrite, pipeline.py:240-256), wide pivot.
+    replication (pipeline.py:240-256), wide pivot.
 
     ``district_mapping``: ``(code, organisation_unit_id)``;
     ``coc_to_suffix``: NAOMI ``coc_name`` → canonical value suffix;
     ``indicator_to_column``: NAOMI indicator → wide column prefix.
+
+    The wide columns are declared, ``<column>_<suffix>`` for every pair of
+    the two maps, so building the pivot runs no Spark job. A column whose
+    NAOMI request was dropped is therefore all-null, not absent.
     """
     mapped = naomi.join(F.broadcast(district_mapping), "code", "left").filter(
         F.col("organisation_unit_id").isNotNull()
@@ -170,33 +174,32 @@ def naomi_to_wide(
     # rows with an unmapped indicator or coc are DROPPED: concat_ws skips
     # NULLs, so an unmapped indicator would silently collapse into a bare
     # coc-suffix column and merge with other unmapped indicators
-    yearly = (
+    quarterly = (
         mapped.withColumn("_ind", ind_expr)
         .withColumn("_coc", coc_expr)
         .filter(F.col("_ind").isNotNull() & F.col("_coc").isNotNull())
         .select(
             "organisation_unit_id",
-            F.lit(f"{year}12").alias("period"),
+            F.explode(
+                F.array(*[F.lit(f"{year}{s}") for s in quarter_suffixes])
+            ).alias("period"),
             F.concat_ws("_", F.col("_ind"), F.col("_coc")).alias("column_name"),
             F.col("mean").cast("double").alias("value"),
         )
     )
 
-    suffixes = yearly.sparkSession.createDataFrame(
-        [(s,) for s in quarter_suffixes], "suffix string"
-    )
-    replicated = yearly.crossJoin(F.broadcast(suffixes)).select(
-        "organisation_unit_id",
-        F.concat(F.lit(str(year)), F.col("suffix")).alias("period"),
-        "column_name",
-        "value",
-    )
-
     return pivot_agg(
-        replicated,
+        quarterly,
         keys=["organisation_unit_id", "period"],
         pivot_col="column_name",
         value_col="value",
+        values=sorted(
+            {
+                f"{col}_{suf}"
+                for col in indicator_to_column.values()
+                for suf in coc_to_suffix.values()
+            }
+        ),
         agg="sum",
     )
 

@@ -8,7 +8,9 @@ Tungsten and therefore only needs to pick good session defaults:
   dynamic join-strategy switch) — at 100 TB these replace any hand-tuning.
 - Arrow on for driver transfers and the pandas_udf islands (NFD fold,
   and fuzzy scoring of frames whose work exceeds
-  ``operators.fuzzy.MAX_DRIVER_WORK``).
+  ``operators.fuzzy.MAX_DRIVER_WORK``). Frames built on the driver (the
+  REST sources, the fuzzy driver-path lookup) are handed to Spark as
+  ``pyarrow`` Tables, which go through Arrow whatever this conf says.
 - Session timezone pinned to UTC so timestamp semantics are deterministic
   and match the DuckDB oracle (naive parquet timestamps).
 - ``local[$SPARK_GRAFT_CPUS]`` by default for tests/bench; on a real

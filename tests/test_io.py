@@ -1,11 +1,14 @@
-"""IO adapter tests: distributed REST fetch (retry/drop), NAOMI JSON
+"""IO adapter tests: driver-side REST fetch (retry/drop), NAOMI JSON
 flatten, Excel nested-header surgery, per-period CSV export."""
 
 from __future__ import annotations
 
 import csv
 import json
+import logging
 import os
+import threading
+from collections import Counter
 
 import pandas as pd
 import pytest
@@ -18,9 +21,6 @@ from hiv_data_integration_spark.io import excel, rest, sinks
 
 
 def test_dhis2_analytics_source_grid(spark):
-    # NB: the fetcher is nested so cloudpickle ships it by value — a
-    # module-level fetcher in a test file is unimportable on workers
-    # (same contract production fetchers must follow; documented in rest.py).
     def fake_analytics_fetch(param: dict) -> list[dict]:
         de, pe = param["data_element"], param["period"]
         return [
@@ -53,22 +53,16 @@ def test_dhis2_analytics_source_grid(spark):
     assert {r.period for r in rows} == {"202401", "202402"}
 
 
-def test_fetch_retry_then_success_and_drop(spark, tmp_path):
-    """First call for deB fails then succeeds (retry path); deC always
-    fails (dropped after retries). Cross-process attempt counting uses a
-    marker file visible to worker processes."""
-    marker = str(tmp_path / "attempts")
+def _flaky_fetch(attempts: Counter, lock: threading.Lock):
+    """deB fails on its first call and then succeeds; deC always fails."""
 
-    def flaky_fetch(param: dict) -> list[dict]:
+    def fetch(param: dict) -> list[dict]:
         de = param["data_element"]
-        if de == "deC":
-            raise RuntimeError("permanently down")
-        if de == "deB":
-            flag = f"{marker}-{de}-{param['period']}"
-            if not os.path.exists(flag):
-                with open(flag, "w") as fh:
-                    fh.write("1")
-                raise RuntimeError("transient")
+        with lock:  # fetchers run on several threads at once
+            attempts[de] += 1
+            n = attempts[de]
+        if de == "deC" or (de == "deB" and n == 1):
+            raise RuntimeError(f"{de} down")
         return [
             {
                 "data_element_id": de,
@@ -79,15 +73,46 @@ def test_fetch_retry_then_success_and_drop(spark, tmp_path):
             }
         ]
 
+    return fetch
+
+
+def test_fetch_retry_then_success_and_drop(spark):
+    """deB is retried through; deC is dropped after its retries. Every
+    request runs when the source is called, and only then."""
+    attempts: Counter = Counter()
+    max_retries = 2
     out = rest.dhis2_analytics_source(
         spark,
-        flaky_fetch,
+        _flaky_fetch(attempts, threading.Lock()),
         data_elements=["deA", "deB", "deC"],
         periods=["202401"],
+        max_retries=max_retries,
         retry_sleep=0.0,
-    ).collect()
-    got = {r.data_element_id for r in out}
+    )
+    expected = {"deA": 1, "deB": 2, "deC": max_retries + 1}
+    assert attempts == expected
+    got = {r.data_element_id for r in out.collect()}
     assert got == {"deA", "deB"}  # deC dropped, deB retried through
+    assert attempts == expected  # evaluating the frame fetches nothing
+
+
+def test_fetch_drops_are_logged(spark, caplog):
+    """One warning per source call names the dropped count and params."""
+    with caplog.at_level(logging.WARNING, logger=rest.__name__):
+        rest.dhis2_analytics_source(
+            spark,
+            _flaky_fetch(Counter(), threading.Lock()),
+            data_elements=["deA", "deB", "deC"],
+            periods=["202401", "202402"],
+            retry_sleep=0.0,
+        )
+    warnings = [r for r in caplog.records if r.name == rest.__name__]
+    assert len(warnings) == 1 and warnings[0].levelno == logging.WARNING
+    msg = warnings[0].getMessage()
+    assert "dropped 2 of 6 requests" in msg
+    for pe in ("202401", "202402"):
+        assert str({"data_element": "deC", "period": pe, "org_unit_level": 4}) in msg
+    assert "'deA'" not in msg and "'deB'" not in msg
 
 
 def test_naomi_source_flattens_nested_json(spark):

@@ -6,6 +6,9 @@ resolution with registry upsert, and semester history aggregation."""
 from __future__ import annotations
 
 import datetime
+import json
+import threading
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -178,6 +181,145 @@ def test_pipeline_a_with_naomi_leg(spark, org_units, coc, ist_spec):
     assert naomi_rows["2024-03-01"]["F_0-4 ans"] == 100
     assert naomi_rows["2024-03-01"]["M_0-4 ans"] == 50
     assert naomi_rows["2024-03-01"].idsite == "r1_d1_f1"
+
+
+def _naomi_fetch(calls: Counter, lock: threading.Lock, down=()):
+    """Fake NAOMI endpoint: district CIV_1 under every request; the
+    ``(indicator, sex, age_code)`` cells in ``down`` always fail."""
+
+    def fetch(param: dict) -> list[dict]:
+        key = (param["indicator"], param["sex"], param["age_code"])
+        with lock:  # fetchers run on several threads at once
+            calls[key] += 1
+        if key in down:
+            raise ConnectionError(f"NAOMI {key} down")
+        payload = [{"subareas": [{"subareas": [
+            {"code": "CIV_1", "name": "cocody", "mean": 10.0},
+        ]}]}]
+        return [{
+            "indicator": param["indicator"],
+            "coc_name": f"{param['age_code']}, {param['sex']}",
+            "payload_json": json.dumps(payload),
+        }]
+
+    return fetch
+
+
+_NAOMI_COLUMNS = {"aware_plhiv_num": "indicateur_9", "plhiv": "indicateur_10"}
+_NAOMI_SUFFIXES = {
+    f"{age}, {sex}": f"{age}_{sex[0].upper()}"
+    for age in ("Y000_004", "Y005_009", "Y010_014", "Y015_019",
+                "Y020_024", "Y025_049", "Y050_999")
+    for sex in ("male", "female")
+}
+
+
+def test_naomi_dropped_request_leaves_column_null(spark, caplog):
+    """The NAOMI wide columns are declared: a request dropped after its
+    retries leaves its column all-null instead of absent, and is logged."""
+    from hiv_data_integration_spark.io import rest
+
+    mapping = spark.createDataFrame(
+        [("CIV_1", "f1")], "code string, organisation_unit_id string"
+    )
+    naomi = rest.naomi_source(
+        spark,
+        _naomi_fetch(Counter(), threading.Lock(), down={("plhiv", "male", "Y000_004")}),
+        retry_sleep=0.0,
+    )
+    assert "dropped 1 of 28 requests" in caplog.text
+    wide = naomi_to_wide(naomi, mapping, _NAOMI_SUFFIXES, _NAOMI_COLUMNS, 2024, ["12"])
+    value_cols = wide.columns[2:]
+    assert value_cols == sorted(
+        f"{c}_{s}" for c in _NAOMI_COLUMNS.values() for s in _NAOMI_SUFFIXES.values()
+    )
+    (row,) = wide.collect()
+    assert row["indicateur_10_Y000_004_M"] is None
+    assert all(row[c] is not None for c in value_cols if c != "indicateur_10_Y000_004_M")
+
+
+def _pnls_month(spark, org_units, naomi_fetch):
+    """Build one month of pipeline A on the shipped IST/PEC/PTME specs:
+    three REST analytics sources, the NAOMI source and leg, the report."""
+    from hiv_data_integration_spark import ref_constants as rc
+    from hiv_data_integration_spark.io import rest
+    from hiv_data_integration_spark.pipeline.pnls import reference_pathology_spec
+
+    coc = spark.createDataFrame([("HllvX50cXC0", "default")], "id string, name string")
+    mapping = spark.createDataFrame(
+        [("CIV_1", "d1")], "code string, organisation_unit_id string"
+    )
+
+    def analytics_fetch(param: dict) -> list[dict]:
+        return [
+            {
+                "data_element_id": param["data_element"],
+                "category_option_combo_id": "HllvX50cXC0",
+                "organisation_unit_id": ou,
+                "period": param["period"],
+                "value": str(i),
+            }
+            for i, ou in enumerate(("f1", "f2", "f3"), 1)
+        ]
+
+    specs = []
+    for p in ("IST", "PEC", "PTME"):
+        contract = rc.expected_value_columns(p)
+        de_ids = [f"{p}_de{j}" for j in range(len(contract))]
+        de_map = spark.createDataFrame(
+            [(de, c, "data_element") for de, c in zip(de_ids, contract)],
+            "id string, column string, type string",
+        )
+        analytics = rest.dhis2_analytics_source(
+            spark, analytics_fetch, de_ids, ["202403"], retry_sleep=0.0
+        )
+        specs.append(reference_pathology_spec(p, analytics, de_map))
+    naomi = rest.naomi_source(spark, naomi_fetch, retry_sleep=0.0)
+    naomi_wide = naomi_to_wide(naomi, mapping, _NAOMI_SUFFIXES, _NAOMI_COLUMNS, 2024, ["03"])
+    return run_pipeline_a(
+        spark,
+        specs,
+        coc,
+        org_units,
+        REPORT_VALUE_COLS,
+        naomi_wide=(naomi_wide, {"indicateur_9_": 9, "indicateur_10_": 10}),
+    )
+
+
+def test_pipeline_a_month_builds_without_jobs_or_python_workers(
+    spark, org_units, python_eval_nodes
+):
+    """Building a month launches no Spark job (REST sources fetch on the
+    driver, the NAOMI pivot is declared), and the report's and the
+    flagged frames' executed plans hold no Python evaluation node."""
+    sc = spark.sparkContext
+    group = "pnls-month-build"
+    sc.setJobGroup(group, "build one pipeline A month")
+    try:
+        report, flagged = _pnls_month(spark, org_units, _naomi_fetch(Counter(), threading.Lock()))
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert set(flagged) == {"IST", "PEC", "PTME"}
+    for df in (report, *flagged.values()):
+        assert python_eval_nodes(df) == []
+
+
+def test_pipeline_a_month_fetches_naomi_once(spark, org_units, tmp_path):
+    """Building a month and writing its CSV and Excel review call the
+    NAOMI fetcher once per request: 28 calls, not one set per evaluation."""
+    from hiv_data_integration_spark.io import sinks
+    from hiv_data_integration_spark.io.excel import write_xlsx_workbook
+
+    calls: Counter = Counter()
+    report, flagged = _pnls_month(spark, org_units, _naomi_fetch(calls, threading.Lock()))
+    template = str(tmp_path / "template.xlsx")
+    write_xlsx_workbook(template, {p: [[f"Revue {p}"]] for p in flagged})
+    written = sinks.export_csv_per_period(report, "periode", str(tmp_path / "csv"))
+    for p, df in flagged.items():
+        sinks.write_excel_review(df, template, p, str(tmp_path / f"review_{p}.xlsx"))
+    assert written and sum(calls.values()) == 28 and set(calls.values()) == {1}
 
 
 def test_pipeline_b_spectrum(spark, org_units):
