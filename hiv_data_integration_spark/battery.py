@@ -700,7 +700,7 @@ def _rules_wide_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_rules_engine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.12 consistency-rule compiler: formulas over Excel letters compiled
-    to native Column predicates (vs the reference's per-row eval)."""
+    to native SQL predicates (vs the reference's per-row eval)."""
     wide = _rules_wide_frame(spark, sf_dir)
     # column order: l_orderkey→C, cnt_a→D, cnt_n→E, cnt_r→F, qty_tot→G
     from hiv_data_integration_spark.operators.rules import apply_rules

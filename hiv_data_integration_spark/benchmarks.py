@@ -3,12 +3,12 @@
 The battery verifies correctness against DuckDB oracles; the functions
 here measure shapes the oracles cannot reach economically — today, the
 full report pipeline (A) at width: the SHIPPED 154-column IST contract
-with all 86 consistency rules compiled to Column expressions, driven by a
+with all 86 consistency rules compiled to SQL predicates, driven by a
 synthetic-but-distributed fact large enough (≥100k rows) that the rule
 compiler's codegen behavior is measured, not assumed. The reference's hot
 spot is exactly this evaluation loop (update_pnls_report/utils.py:300-315,
-per-row Python over every rule × every row); here the 86 when-chains must
-stay inside whole-stage codegen (asserted by tests/test_plan_quality.py).
+per-row Python over every rule × every row); here the rule booleans and
+the CASE WHEN color chains must stay inside whole-stage codegen (asserted by tests/test_plan_quality.py).
 """
 
 from __future__ import annotations

@@ -3,9 +3,10 @@
 The reference's signature operator (`filter_consistent_data_by_rules`,
 update_pnls_report/utils.py:133-211) evaluates 279 declarative formulas
 ("AS<BC", "IC>(EO+EP+EQ)", "J!=K") with a per-row Python ``eval`` — its
-slowest path. Here each formula is parsed ONCE at plan time into a native
-Column predicate, so rule evaluation runs inside whole-stage codegen with
-zero Python in the loop.
+slowest path. Here each formula is parsed ONCE at plan time into a Spark-SQL
+predicate, and every rule is evaluated once per row as a boolean column, so
+rule evaluation runs inside whole-stage codegen with zero Python in the
+loop.
 
 Semantics reproduced exactly (see update_pnls_report/utils.py:157-207,
 292-315):
@@ -26,10 +27,10 @@ Semantics reproduced exactly (see update_pnls_report/utils.py:157-207,
 from __future__ import annotations
 
 import re
-from collections.abc import Mapping
+from collections.abc import Mapping, Sequence
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -46,6 +47,7 @@ __all__ = [
 ]
 
 COLOR_SUFFIX = "__color"
+RULE_PREFIX = "__rule_"
 LETTER_RE = re.compile(r"\b[A-Z]{1,2}\b")
 
 
@@ -95,13 +97,17 @@ def formula_letters(formula: str) -> set[str]:
 
 
 # ---------------------------------------------------------------------------
-# Formula parser → Column compiler
+# Formula parser → Spark-SQL predicate text
 #
 # Grammar (covers every form in the reference's 279 rules plus cheap
 # generality):   comparison := sum (('<'|'>'|'<='|'>='|'=='|'!=') sum)
 #                sum        := product (('+'|'-') product)*
 #                product    := atom (('*'|'/') atom)*
 #                atom       := LETTER | NUMBER | '(' sum ')'
+#
+# SQL text rather than Column objects: a Column tree costs one Py4J round
+# trip per operator, while the whole rule projection ships to the JVM as
+# two ``selectExpr`` calls.
 # ---------------------------------------------------------------------------
 
 _TOKEN_RE = re.compile(
@@ -127,7 +133,7 @@ def _tokenize(formula: str) -> list[tuple[str, str]]:
     return tokens
 
 
-class _Parser:
+class _SqlParser:
     def __init__(self, tokens: list[tuple[str, str]], binding: Mapping[str, str]):
         self.tokens = tokens
         self.i = 0
@@ -142,80 +148,6 @@ class _Parser:
         tok = self.tokens[self.i]
         self.i += 1
         return tok
-
-    def comparison(self) -> Column:
-        left = self.sum_()
-        tok = self._peek()
-        if tok is None or tok[0] != "op" or tok[1] not in ("<", ">", "<=", ">=", "==", "!="):
-            raise ValueError("formula is not a comparison")
-        op = self._next()[1]
-        right = self.sum_()
-        return {
-            "<": left < right,
-            ">": left > right,
-            "<=": left <= right,
-            ">=": left >= right,
-            "==": left == right,
-            "!=": left != right,
-        }[op]
-
-    def sum_(self) -> Column:
-        node = self.product()
-        while self._peek() in (("op", "+"), ("op", "-")):
-            op = self._next()[1]
-            rhs = self.product()
-            node = node + rhs if op == "+" else node - rhs
-        return node
-
-    def product(self) -> Column:
-        node = self.atom()
-        while self._peek() in (("op", "*"), ("op", "/")):
-            op = self._next()[1]
-            rhs = self.atom()
-            node = node * rhs if op == "*" else node / rhs
-        return node
-
-    def atom(self) -> Column:
-        kind, val = self._next()
-        if kind == "letter":
-            if val not in self.binding:
-                raise KeyError(f"formula letter {val} has no bound column")
-            # fillna(0) semantics from update_pnls_report/utils.py:159
-            return F.coalesce(F.col(self.binding[val]).cast("double"), F.lit(0.0))
-        if kind == "num":
-            return F.lit(float(val))
-        if (kind, val) == ("op", "("):
-            node = self.sum_()
-            closing = self._next()
-            if closing != ("op", ")"):
-                raise ValueError("unbalanced parentheses")
-            return node
-        raise ValueError(f"unexpected token {val!r}")
-
-
-def compile_formula(formula: str, binding: Mapping[str, str]) -> Column:
-    """Parse one rule formula into a boolean Column predicate."""
-    parser = _Parser(_tokenize(formula), binding)
-    pred = parser.comparison()
-    if parser._peek() is not None:
-        raise ValueError(f"trailing tokens in formula {formula!r}")
-    return pred
-
-
-class _SqlParser(_Parser):
-    """Same grammar, emitting Spark-SQL TEXT instead of Column objects.
-
-    Why: building a Column tree goes through Py4J per operator — the real
-    IST ruleset (86 formulas × 154 columns) costs ~5 s of driver time per
-    ``apply_rules`` call in Column form; one ``F.expr`` parse per output
-    column is ~50× cheaper (the same reason ``similarity._dbl_array_lit``
-    builds array literals through the SQL parser). Every emitted fragment
-    is the SQL spelling of the exact expression the Column path builds
-    (coalesce/CAST, parenthesized arithmetic, CASE WHEN, named_struct,
-    greatest), so the two paths are semantically identical — the
-    hypothesis property suite compares the output against the per-row
-    Python oracle, and the battery hash-checks it against DuckDB.
-    """
 
     def comparison(self) -> str:
         left = self.sum_()
@@ -248,12 +180,11 @@ class _SqlParser(_Parser):
         if kind == "letter":
             if val not in self.binding:
                 raise KeyError(f"formula letter {val} has no bound column")
-            quoted = self.binding[val].replace("`", "``")
             # fillna(0) semantics from update_pnls_report/utils.py:159
-            return f"coalesce(CAST(`{quoted}` AS DOUBLE), 0.0D)"
+            return f"coalesce(CAST({_q_ident(self.binding[val])} AS DOUBLE), 0.0D)"
         if kind == "num":
             # repr() is the shortest exact decimal round-trip, 'D' makes it
-            # a DOUBLE literal — bit-identical to the Column path's F.lit
+            # a DOUBLE literal
             return repr(float(val)) + "D"
         if (kind, val) == ("op", "("):
             node = self.sum_()
@@ -264,7 +195,7 @@ class _SqlParser(_Parser):
         raise ValueError(f"unexpected token {val!r}")
 
 
-def compile_formula_sql(formula: str, binding: Mapping[str, str]) -> str:
+def compile_formula(formula: str, binding: Mapping[str, str]) -> str:
     """Parse one rule formula into a boolean Spark-SQL predicate string."""
     parser = _SqlParser(_tokenize(formula), binding)
     pred = parser.comparison()
@@ -281,89 +212,62 @@ def _q_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-# compiled-projection memo (VERDICT r5 next-round item 3): the SQL text of
-# the full rule projection is a pure function of (ruleset, column order,
-# key columns, offset) — pipelines and benches re-apply the SAME 86-rule ×
-# 154-column IST chain on every invocation, so the ~1 s of pure-Python
-# string assembly (86 predicates × 154 candidate lists) is paid once per
-# distinct chain and reused. Bounded at _PROJECTION_CACHE_MAX entries with
-# FIFO eviction (dict preserves insertion order), so a long-lived service
-# compiling many dynamic contracts cannot grow it without limit; any real
-# deployment uses a handful of (ruleset, contract) pairs and never evicts.
-_PROJECTION_CACHE_MAX = 64
-_PROJECTION_CACHE: dict[tuple, tuple[tuple[str, ...], tuple[str, ...], str]] = {}
-
-
 def compile_rule_projection(
-    columns: tuple[str, ...],
-    rules: tuple[tuple[str, Rule], ...],
-    key_cols: tuple[str, ...],
+    columns: Sequence[str],
+    rules: Sequence[Rule],
+    key_cols: Sequence[str],
     offset: int = 3,
-) -> tuple[tuple[str, ...], tuple[str, ...], str]:
-    """Compile a ruleset against a column contract into Spark-SQL text:
-    ``(projection_exprs, color_cols, is_consistent_expr)``. Memoized —
-    see :data:`_PROJECTION_CACHE`.
+) -> tuple[list[str], list[str]]:
+    """Compile a ruleset against a column contract into the two
+    ``selectExpr`` lists of :func:`apply_rules`.
 
-    SQL-text construction, ONE parser pass per output column: building
-    the same tree as Column objects costs one Py4J round trip per
-    operator — ~5 s of driver time for the real 86-rule × 154-column IST
-    payload, vs ~0.1 s through the SQL parser — and the whole projection
-    ships to the JVM in a single ``selectExpr`` call. Identical
-    expressions either way (verified by the hypothesis suite vs the
-    per-row Python oracle and by the battery's DuckDB hash checks).
+    - Stage 1 keeps every input column and adds one boolean
+      ``__rule_<i>`` per rule that mentions a data column; rules that
+      mention only key letters can never color a cell and are dropped.
+    - Stage 2 keeps the input columns, adds one ``<col>__color`` per data
+      column some rule mentions (contract order), then ``is_consistent``.
+      Each color is ``CASE WHEN r_a THEN 'color_a' WHEN r_b ... END`` over
+      the rules mentioning the column, sorted by (priority desc, rule index
+      asc): max priority wins, the earliest rule on ties. A NULL predicate
+      counts as not fired.
+
+    Each predicate is written once, so the plan grows with rules + columns
+    rather than with (rule, touched column) pairs.
     """
-    cache_key = (columns, rules, key_cols, offset)
-    hit = _PROJECTION_CACHE.get(cache_key)
-    if hit is not None:
-        return hit
-
     binding = default_letter_binding(list(columns), offset)
     col_to_letter = {v: k for k, v in binding.items()}
-    compiled: list[tuple[Rule, str, set[str], int]] = []
-    for idx, (_name, rule) in enumerate(rules):
-        pred_sql = compile_formula_sql(rule.formula, binding)
-        compiled.append((rule, pred_sql, formula_letters(rule.formula), idx))
+    data_letters = {col_to_letter[c] for c in columns if c not in key_cols}
 
-    out_exprs: list[str] = [_q_ident(c) for c in columns]
-    color_cols: list[str] = []
-    n_rules = len(compiled)
+    stage1 = ["*"]
+    fired: list[tuple[str, set[str], str]] = []  # best-ranked rule first
+    ranked = sorted(enumerate(rules), key=lambda ir: (-ir[1].priority, ir[0]))
+    for idx, rule in ranked:
+        pred = compile_formula(rule.formula, binding)
+        letters = formula_letters(rule.formula) & data_letters
+        if letters:
+            name = _q_ident(f"{RULE_PREFIX}{idx}")
+            stage1.append(f"{pred} AS {name}")
+            fired.append((name, letters, rule.color))
+
+    stage2 = [_q_ident(c) for c in columns]
     for c in columns:
         if c in key_cols:
             continue
-        letter = col_to_letter[c]
-        # candidates: struct(priority, earliness, color) per rule touching c
-        candidates = [
-            f"CASE WHEN {pred_sql} THEN named_struct("
-            f"'priority', {int(rule.priority)}, "
-            f"'earliness', {n_rules - idx}, "
-            f"'color', {_sql_str(rule.color)}) END"
-            for rule, pred_sql, letters, idx in compiled
-            if letter in letters
+        branches = [
+            f"WHEN {name} THEN {_sql_str(color)}"
+            for name, letters, color in fired
+            if col_to_letter[c] in letters
         ]
-        if not candidates:
-            continue
-        if len(candidates) == 1:
-            best = candidates[0]
-        else:
-            # greatest() skips NULLs; struct ordering is field-by-field, so
-            # (priority, earliness) gives max-priority / first-rule-on-tie.
-            best = f"greatest({', '.join(candidates)})"
-        cc = f"{c}{COLOR_SUFFIX}"
-        out_exprs.append(f"({best}).color AS {_q_ident(cc)}")
-        color_cols.append(cc)
-
-    if color_cols:
-        flag = (
-            f"coalesce({', '.join(_q_ident(cc) for cc in color_cols)}) "
-            f"IS NULL AS is_consistent"
-        )
+        if branches:
+            stage2.append(
+                f"CASE {' '.join(branches)} END AS {_q_ident(c + COLOR_SUFFIX)}"
+            )
+    if fired:
+        any_fired = " OR ".join(name for name, _letters, _color in fired)
+        stage2.append(f"NOT coalesce({any_fired}, FALSE) AS is_consistent")
     else:
-        flag = "TRUE AS is_consistent"
-    result = (tuple(out_exprs), tuple(color_cols), flag)
-    if len(_PROJECTION_CACHE) >= _PROJECTION_CACHE_MAX:
-        _PROJECTION_CACHE.pop(next(iter(_PROJECTION_CACHE)))
-    _PROJECTION_CACHE[cache_key] = result
-    return result
+        stage2.append("TRUE AS is_consistent")
+    return stage1, stage2
 
 
 def apply_rules(
@@ -374,12 +278,12 @@ def apply_rules(
 ) -> DataFrame:
     """Annotate every data column with its max-priority firing-rule color.
 
-    Adds one ``<col>__color`` string column per non-key column (NULL = no
-    rule fired on that cell) and a boolean ``is_consistent`` row flag.
-    Everything is a single projection of native expressions — one pass, no
-    shuffle, no Python — shipped to the JVM as exactly two ``selectExpr``
-    calls; the SQL text itself is memoized per (ruleset, contract) via
-    :func:`compile_rule_projection`.
+    Adds one ``<col>__color`` string column per data column some rule
+    mentions (NULL = no rule fired on that cell) and a boolean
+    ``is_consistent`` row flag. Two projections of native expressions — one
+    pass, no shuffle, no Python: the first evaluates each rule once into a
+    boolean, the second turns those booleans into colors and drops them
+    (see :func:`compile_rule_projection`).
 
     Re-annotation is idempotent on the flag: a pre-existing
     ``is_consistent`` column (from a previous ``apply_rules`` pass) is
@@ -388,14 +292,9 @@ def apply_rules(
     """
     if "is_consistent" in df.columns:
         df = df.drop("is_consistent")
-    norm: tuple[tuple[str, Rule], ...] = tuple(
-        (name, r if isinstance(r, Rule) else Rule(*r))
-        for name, r in rules.items()
-    )
-    out_exprs, _color_cols, flag = compile_rule_projection(
-        tuple(df.columns), norm, tuple(key_cols), offset
-    )
-    return df.selectExpr(*out_exprs).selectExpr("*", flag)
+    norm = [r if isinstance(r, Rule) else Rule(*r) for r in rules.values()]
+    stage1, stage2 = compile_rule_projection(df.columns, norm, key_cols, offset)
+    return df.selectExpr(*stage1).selectExpr(*stage2)
 
 
 def split_by_consistency(
@@ -404,7 +303,6 @@ def split_by_consistency(
     key_cols: list[str],
     offset: int = 3,
     exclude_inconsistent: bool = True,
-    cache: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Route rows into (consistent, flagged) frames.
 
@@ -415,16 +313,12 @@ def split_by_consistency(
     The returned "consistent" frame has the original columns; the flagged
     frame keeps the per-cell color annotations for the review sink.
 
-    ``cache=True`` persists the annotated frame so the two returned
-    branches evaluate the rule expressions once, not twice; the cache lives
-    until the session ends (both children are lazy, so there is no safe
-    point to unpersist inside this function). Long-lived sessions
-    processing many large frames can pass ``cache=False`` to trade
-    recompute for executor memory.
+    The annotated frame is persisted so the two returned branches evaluate
+    the rules once, not twice. The cache lives until the session ends: both
+    children are lazy, so there is no safe point to unpersist inside this
+    function.
     """
-    annotated = apply_rules(df, rules, key_cols, offset)
-    if cache:
-        annotated = annotated.cache()
+    annotated = apply_rules(df, rules, key_cols, offset).cache()
     flagged = annotated.filter(~F.col("is_consistent")).drop("is_consistent")
     clean_cols = list(df.columns)
     consistent = (

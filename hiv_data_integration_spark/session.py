@@ -67,10 +67,11 @@ def get_spark(
         # sessions without this flag (e.g. the driver's) still work
         .config("spark.sql.python.filterPushdown.enabled", "true")
         # the report pipelines project 154-236 contract columns plus one
-        # __color column each — far past the default maxFields=100, which
-        # silently drops the ENTIRE wide path out of whole-stage codegen
-        # (measured: 0 WholeStageCodegen spans, every rule when-chain
-        # interpreted). 600 covers PEC (236 + 236 + keys) with headroom;
+        # boolean per rule, then one __color column per ruled cell — far
+        # past the default maxFields=100, which silently drops the ENTIRE
+        # wide path out of whole-stage codegen (measured: 0
+        # WholeStageCodegen spans, every rule interpreted). 600 covers PEC
+        # (238 + 175 rule fields, then 238 + 190 + 1) with headroom;
         # Spark still splits oversized generated methods and falls back
         # per-stage via hugeMethodLimit if Janino ever balks.
         .config("spark.sql.codegen.maxFields", "600")

@@ -149,6 +149,27 @@ def test_aqe_skew_join_split_available(spark):
 
 
 
+def _annotated_at_width(spark, pathology):
+    """``apply_rules`` with the pathology's full shipped rule set over its
+    real contract (5 facilities of the scaled IST-style fixture)."""
+    from hiv_data_integration_spark import ref_constants as rc
+    from hiv_data_integration_spark.benchmarks import ist_scaled_fixture
+    from hiv_data_integration_spark.operators.rules import apply_rules
+    from hiv_data_integration_spark.pipeline.extract import pathology_extract
+
+    analytics, coc, de_map, _ = ist_scaled_fixture(
+        spark, n_facilities=5, pathology=pathology
+    )
+    wide = pathology_extract(
+        analytics, coc, de_map, rc.expected_value_columns(pathology)
+    )
+    return apply_rules(
+        wide,
+        dict(rc.rules_for(pathology)),
+        key_cols=["organisation_unit_id", "period"],
+    )
+
+
 @pytest.mark.parametrize("pathology,n_rules", [("IST", 86), ("PEC", 175)])
 def test_rules_at_width_stay_in_whole_stage_codegen(spark, pathology, n_rules):
     """The report pipeline's rule evaluation at REAL width — 86 IST rules
@@ -158,47 +179,82 @@ def test_rules_at_width_stay_in_whole_stage_codegen(spark, pathology, n_rules):
     over every rule × row, update_pnls_report/utils.py:300-315). Spark's
     default spark.sql.codegen.maxFields=100 silently dropped the ENTIRE
     wide path to interpreted evaluation (0 codegen spans measured);
-    session.py pins 600 (PEC projects 236+236+keys fields). This test pins
-    both halves: codegen spans exist, and the specific Project carrying
-    the greatest()-of-when-chains rule expressions sits inside one."""
+    session.py pins 600. This test pins both halves: codegen spans exist,
+    and both rule Projects — the one evaluating each rule into a boolean
+    and the one turning those into CASE WHEN color chains — sit inside
+    one."""
     import re
 
     from hiv_data_integration_spark import ref_constants as rc
-    from hiv_data_integration_spark.benchmarks import ist_scaled_fixture
-    from hiv_data_integration_spark.operators.rules import apply_rules
-    from hiv_data_integration_spark.pipeline.extract import pathology_extract
+    from hiv_data_integration_spark.operators.rules import RULE_PREFIX
 
     assert len(rc.rules_for(pathology)) == n_rules
-    analytics, coc, de_map, _ = ist_scaled_fixture(
-        spark, n_facilities=5, pathology=pathology
-    )
-    wide = pathology_extract(
-        analytics, coc, de_map, rc.expected_value_columns(pathology)
-    )
-    ann = apply_rules(
-        wide,
-        dict(rc.rules_for(pathology)),
-        key_cols=["organisation_unit_id", "period"],
-    )
-    plan = final_plan_string(spark, ann)
+    plan = final_plan_string(spark, _annotated_at_width(spark, pathology))
     a = audit(plan)
     assert a["codegen"] >= 1, "wide rules path fell out of codegen entirely"
     assert a["python"] == 0
-    # the rule projection itself (the only node with greatest() chains)
-    # must carry a codegen id
-    blocks = re.split(r"\n(?=\(\d+\) )", plan)
-    rule_projects = [
-        b for b in blocks
-        if "Project" in b.split("\n", 1)[0] and "greatest(" in b
+    blocks = [
+        b for b in re.split(r"\n(?=\(\d+\) )", plan)
+        if "Project" in b.split("\n", 1)[0]
     ]
-    assert rule_projects, "no Project with rule chains found in plan"
-    in_codegen = [
-        b for b in rule_projects if "[codegen id :" in b.split("\n", 1)[0]
+    rule_stage = [b for b in blocks if f"AS {RULE_PREFIX}" in b]
+    color_stage = [
+        b for b in blocks if "CASE WHEN" in b and "__color" in b
     ]
-    assert in_codegen, (
-        "the greatest()-of-when-chains rule Project is not inside a "
-        "whole-stage-codegen span"
+    assert rule_stage, "no Project evaluating the rule booleans found"
+    assert color_stage, "no Project with CASE WHEN color chains found"
+    # the formatted plan also lists AQE's initial plan, which has no
+    # codegen ids: each stage needs one block inside a codegen span
+    for stage in (rule_stage, color_stage):
+        assert any("[codegen id :" in b.split("\n", 1)[0] for b in stage), (
+            "a rule Project is not inside a whole-stage-codegen span"
+        )
+
+
+def test_rules_evaluate_each_predicate_once(spark):
+    """Each of PEC's 175 rules is evaluated once into a boolean column; the
+    per-cell colors only read those booleans. Counts the comparison nodes
+    in the optimized plan's rule Projects by walking the Catalyst trees
+    (the plan string is truncated at maxToStringFields). Copying each
+    predicate into every column it touches gives 376, one per (rule,
+    touched column) pair; a Catalyst rule that re-inlined the booleans
+    into the colors would raise the count too."""
+    from hiv_data_integration_spark.operators.rules import (
+        COLOR_SUFFIX,
+        RULE_PREFIX,
     )
+
+    comparisons = {
+        "EqualTo", "EqualNullSafe", "LessThan", "LessThanOrEqual",
+        "GreaterThan", "GreaterThanOrEqual",
+    }
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    def n_comparisons(expr):
+        n, stack = 0, [expr]
+        while stack:
+            e = stack.pop()
+            n += e.getClass().getSimpleName() in comparisons
+            stack.extend(seq(e.children()))
+        return n
+
+    ann = _annotated_at_width(spark, "PEC")
+    total = 0
+    stack = [ann._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        stack.extend(seq(node.children()))
+        if node.getClass().getSimpleName() != "Project":
+            continue
+        exprs = seq(node.projectList())
+        if any(
+            e.name().endswith(COLOR_SUFFIX) or e.name().startswith(RULE_PREFIX)
+            for e in exprs
+        ):
+            total += sum(n_comparisons(e) for e in exprs)
+    assert total == 175
 
 
 def test_q5_snowflake_one_spine_shuffle(spark):

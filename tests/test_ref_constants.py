@@ -47,8 +47,8 @@ def test_payload_is_immutable():
 
 @pytest.mark.parametrize("pathology", ["IST", "PEC", "PTME"])
 def test_all_shipped_formulas_compile(spark, pathology):
-    """Every real formula parses into a Column under the pathology's own
-    contract binding — letters resolve, grammar covers every operator."""
+    """Every real formula parses into a SQL predicate under the pathology's
+    own contract binding — letters resolve, grammar covers every operator."""
     columns = KEYS + rc.expected_value_columns(pathology)
     binding = default_letter_binding(columns)
     max_idx = len(columns) + 2  # offset 3, 1-based
