@@ -11,7 +11,10 @@ this file is just the stable driver-facing façade.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+import re
+from collections.abc import Callable, Iterable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -33,249 +36,43 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_flagship(spark, SMOKE_SF_DIR)
 
 
-# The driver hash-verifies only the FIRST 50 ``queries()`` entries per
-# round, so ordering is the verification budget. The never-verified
-# backlog drained in round 8 (all 310 entries have been driver-green
-# at least once — CORRECTNESS_r01..r08 union). Steady-state policy:
-# the window re-verifies greens OLDEST-SIGNAL-FIRST — the tier whose
-# last official green is the most rounds old rotates in first (r2
-# stale greens before r3, r3 before r4, …), so official signal keeps
-# cycling over the whole battery instead of pinning to one spot.
-# Brand-new entries (absent from every tier list) still auto-sort
-# ahead of every green tier, and a previously-green entry never
-# displaces a never-driver-verified one (contract-tested in
-# tests/test_driver_contract.py).
-#
-# Rotating a round's window out = append its verified names to a new
-# _R{N}_GREEN list (in CORRECTNESS_r{N} order), delete them from the
-# older tier lists they came from, and keep the remaining tiers'
-# relative order unchanged. Round-12 window: new round-12 entries,
-# then the 33 remaining _R5_GREEN, then the head of _R6_GREEN.
-_PENDING_NEVER_VERIFIED: list[str] = [
-    # drained in round 8 — every battery entry has official driver
-    # signal; new rounds' additions flow through new_this_round below
-]
-_R6_GREEN = [
-    "l_diversity_customers", "link_prediction_suppliers",
-    "fifo_match_returns", "gini_profile_orders", "roc_auc_value_purchase",
-    "zscore_outliers_dow", "feature_hash_customers", "km_signup_to_purchase",
-    "mann_kendall_daily", "cusum_change_daily", "theil_sen_daily",
-    "abc_parts_by_brand", "rolling_band_daily", "top_session_paths",
-    "golden_record_users", "cohort_ltv_events", "seasonal_naive_mdape",
-    "audience_overlap_events", "attribution_position_based",
-    "debounce_clicks", "gap_fill_interp_daily", "dataset_fingerprints",
-    "ks_value_user_parity", "tv_drift_user_parity", "pvm_brand_yoy",
-    "lump_rare_part_types", "embed_prefix_rerank_topk",
-    "embed_centroid_confusion", "rake_keyphrases_docs",
-    "bigram_next_token_acc", "share_of_parent_revenue",
-    "price_band_clusters", "fd_audit_lineitem", "trending_event_types",
-    "trimmed_mean_value", "conformal_naive_width", "ma_crossover_daily",
-    "weighted_jaccard_sources", "corr_qty_revenue", "autocorr_lag7_daily",
-    "cross_source_dups", "ess_doc_weights", "behavior_segments",
-    "peak_concurrency_sessions", "abc_xyz_matrix", "sla_p95_ship_delay",
-    "top_decile_revenue_share", "corpus_dsir_resample",
-    "windowed_funnel_events", "variant_json_extract",
-]
-_R5_GREEN = [
-    # (head 17 re-verified in round 11 → moved to _R11_GREEN)
-    "contingency_chi2_profile",
-    "conversion_latency_deciles", "event_cooccurrence_lift",
-    "incremental_agg_maintenance", "dynamic_partition_overwrite",
-    "python_udtf_sentences", "pit_join_scd2_orders",
-    "discount_share_wilson_ci", "bpe_pair_topk", "streaming_windowed_topk",
-    "largest_remainder_proration", "k_anonymity_audit",
-    "interval_union_engagement", "rolling_wau_exact", "group_median_impute",
-    "null_safe_join_histograms", "collated_group_counts",
-    "stable_global_row_ids", "user_value_trailing_ema",
-    "churn_label_generation", "loo_target_encoding", "cdc_chunk_dedup",
-    "ab_test_ztest_purchase", "class_balance_weights",
-    "interval_overlap_join", "sequence_bigram_support", "calibration_bins",
-    "dedup_sorted_neighborhood", "ohlc_value_bars", "grouped_mode_event",
-    "twap_user_day", "segmented_running_total", "weighted_priority_sample",
-]
-_R2_GREEN_STALE: list[str] = [
-    # fully drained: 7 re-verified in round 8 (→ _R8_GREEN), the
-    # remaining 22 re-verified in round 9 (→ _R9_GREEN)
-]
-_R3_GREEN: list[str] = [
-    # fully drained: head 19 re-verified in round 9 (→ _R9_GREEN), the
-    # remaining 20 re-verified in round 10 (→ _R10_GREEN)
-]
-_R4_GREEN: list[str] = [
-    # fully drained: head 20 re-verified in round 10 (→ _R10_GREEN),
-    # the remaining 28 re-verified in round 11 (→ _R11_GREEN)
-]
-_R7_GREEN = [
-    "graph_pagerank_fixed_point", "group_split_no_leakage",
-    "embed_pq_adc_topk", "dedup_semantic_sampled_trainer",
-    "text_line_dedup", "text_url_canonicalize",
-    "text_duplicate_ngram_spans", "sketch_countmin_tokens",
-    "graph_triangle_count_parts", "data_kfold_assignment", "text_bm25_topk",
-    "sketch_bloom_membership", "profile_winsorized_stats",
-    "profile_robust_outliers", "sliding_window_events",
-    "event_transition_matrix", "text_token_diversity",
-    "xml_source_roundtrip", "binaryfile_blob_ingest",
-    "sql_ddl_managed_table", "streaming_dedup_within_watermark",
-    "streaming_foreach_batch_upsert", "streaming_interval_join",
-    "streaming_session_windows", "streaming_stateful_totals",
-    "streaming_static_enrich", "gap_fill_locf_hourly", "sql_pivot_clause",
-    "sql_unpivot_clause", "recursive_org_rollup",
-    "window_distribution_funcs", "shipping_priority_top10",
-    "region_local_supplier_revenue", "large_order_customers",
-    "waiting_supplier_ranking", "inactive_above_avg_balance",
-    "promo_revenue_share", "lateral_topn_orders", "nation_volume_shipping",
-    "market_share_by_year", "returned_item_revenue",
-    "order_count_distribution", "top_revenue_supplier",
-    "small_quantity_revenue", "disjunctive_part_filter",
-    "min_cost_supplier_part", "order_priority_check",
-    "forecast_revenue_change", "product_type_profit",
-    "important_part_value",
-]
-_R8_GREEN = [
-    # the full round-8 driver window (CORRECTNESS_r08 order, 50/50
-    # green): the 18 formerly-pending entries, the 25 round-8
-    # additions, and the first 7 r2-stale greens
-    "late_shipment_priority", "supplier_count_by_part",
-    "promotion_qty_suppliers", "revenue_mom_growth",
-    "streaming_hll_distinct", "sketch_histogram_quantiles",
-    "sketch_hll_distinct", "graph_label_propagation",
-    "padding_waste_audit", "temperature_mixture_alloc",
-    # (multimodal_resize_stub retired r10 -> multimodal_resize_thumb)
-    "bpe_encoded_symbols", "bpe_learn_merges",
-    "dedup_minhash_eval", "split_leakage_audit", "corpus_budget_select",
-    "pii_risk_triage", "vocab_coverage_curve",
-    "streaming_outer_join_expiry", "streaming_chained_windows",
-    "business_day_latency", "sketch_hll_grouped",
-    "layout_range_boundaries", "coverage_set_orders",
-    "seasonality_heatmap_events", "nearest_event_probe",
-    "freshness_audit_events", "multimodal_audio_framing_stub",
-    "text_stopword_matrix", "streaming_update_mode_counts",
-    "pivot_multi_agg", "sketch_kmv_setops", "sketch_kmv_jaccard",
-    "data_stratified_exact_split", "seasonal_index_dow",
-    "text_heaps_law_curve", "key_candidate_audit", "graph_kcore_peel",
-    "fuzzy_blocking_quality", "text_tokenizer_fertility",
-    "sql_range_value_frame", "sql_group_by_all",
-    "sql_named_window_clause",
-    "window_rank_customers", "rules_engine_lineitem",
-    "rules_consistent_only", "stack_wide_to_long", "pad_to_contract",
-    "string_path_ops", "period_roundtrip",
-]
-_R9_GREEN = [
-    # the full round-9 driver window (CORRECTNESS_r09 order, 50/50
-    # green): the 9 round-9 additions, the 22 remaining r2-stale
-    # greens, and the first 19 of _R3_GREEN
-    "multimodal_audio_decode", "multimodal_audio_energy",
-    "multimodal_image_phash",
-    # (multimodal_phash_near_pairs / multimodal_phash_clusters were
-    # kernelized in r12 — re-entered the window as new_this_round)
-    "multimodal_media_router",
-    "streaming_media_router", "data_temporal_split_purged",
-    "corpus_gate_funnel", "lenient_numeric_parse",
-    "dict_lookup_priority", "fuzzy_levenshtein_match", "text_token_counts",
-    "text_quality_scores", "text_lang_id", "doc_fingerprint",
-    "dedup_exact_docs", "dedup_minhash_lsh_pairs", "dedup_ngram_jaccard_pairs",
-    "dedup_simhash_fingerprints", "dedup_embedding_cosine_pairs",
-    "dedup_connected_components", "text_rolling_fingerprint", "text_chunking",
-    "text_pii_redaction", "text_vocab_topk", "text_winnow_fingerprints",
-    "text_winnow_overlap_pairs", "text_repetition_filter",
-    "text_contamination_check", "text_tfidf_topk",
-    "scd2_customer_history", "embed_quantize_int8",
-    "embed_quantized_rerank_topk", "embed_ivf_kmeans_topk",
-    "fuzzy_resolve_blocked", "rest_naomi_json_flatten", "salted_skew_join",
-    "bucketed_colocated_join", "spectrum_csv_scan",
-    "partitioned_parquet_pruning", "approx_sketches_events",
-    "streaming_tumbling_counts", "streaming_exactly_once_dedup",
-    "rollup_lineitem", "cube_orders", "grouping_sets_orders",
-    "count_distinct_parts", "grouped_quantiles", "intersect_nations",
-]
-_R10_GREEN = [
-    # the full round-10 driver window (CORRECTNESS_r10 order, 50/50
-    # green): the 10 round-10 additions, the 20 remaining _R3_GREEN,
-    # and the first 20 of _R4_GREEN
-    "multimodal_image_dhash", "streaming_frame_decode",
-    "multimodal_resize_thumb", "dedup_ngram_dfcap_pairs",
-    "python_datasource_scan", "multimodal_frame_decode",
-    "multimodal_gif_interlaced", "multimodal_frame_sample",
-    "multimodal_audio_haar_bands", "multimodal_audio_decimate",
-    "except_balance_buckets", "range_join_events", "asof_last_event_per_day",
-    "string_agg_nations", "correlated_subquery_balance", "embed_vector_norms",
-    "skyline_suppliers", "corpus_token_packing", "quality_decile_stats",
-    "source_quota_cap", "funnel_events", "cohort_retention_events",
-    "null_preserving_sum", "window_lag_events", "tumbling_window_events",
-    "sessionize_events", "org_uuid5_ids", "multimodal_decode_stub",
-    "embed_cosine_topk", "embed_ivf_topk_label", "data_split_sample",
-    "jsonl_corpus_roundtrip", "streaming_pii_redaction", "corpus_dataset_card",
-    "embed_ann_recall", "llm_corpus_prep", "streaming_corpus_chunking",
-    "corpus_unigram_logprob", "dedup_canonical_corpus",
-    "fuzzy_resolve_suppliers", "xlsx_report_roundtrip",
-    "csv_per_period_export", "json_dict_scan", "registry_upsert_state",
-    "dedup_ngram_prefix_filter", "zorder_clustered_scan",
-    "dedup_semantic_clusters", "dedup_incremental_batch",
-    "corpus_shuffle_shards", "orc_source_roundtrip",
-]
-_R11_GREEN = [
-    # the full round-11 driver window (CORRECTNESS_r11 order, 50/50
-    # green): the 5 round-11 additions, the 28 remaining _R4_GREEN,
-    # and the first 17 of _R5_GREEN
-    "python_datasource_stream", "python_datasource_pstream",
-    "multimodal_scene_cuts", "multimodal_shot_segments",
-    "multimodal_audio_activity", "dataset_diff_audit",
-    "compaction_plan_bins", "text_clean_corpus",
-    "trailing_window_features", "corpus_mixture_sample",
-    "asof_join_two_table", "profile_numeric_histogram",
-    "profile_completeness", "embed_lsh_ann_topk",
-    "multimodal_payload_meta", "fuzzy_normalize_fold",
-    "rest_fanout_analytics", "flagship_pnls_chain", "pricing_summary",
-    "filter_membership", "date_range_filter", "conditional_bucket",
-    "join_fact_dim", "multi_hop_join", "semi_join_orders",
-    "anti_join_customers", "cross_join_replicate", "union_relaxed",
-    "distinct_pairs", "pivot_sum_returnflag", "pivot_min_status",
-    "semester_rollup", "topk_customers", "user_event_sequences",
-    "embed_mean_pool", "rules_inconsistent_routing",
-    "weighted_median_price", "user_rfm_features",
-    "event_linear_attribution", "benford_price_profile",
-    "text_ngram_containment", "join_key_skew_profile",
-    "embed_rrf_fusion", "source_quantile_norm",
-    "corpus_curriculum_interleave", "quality_length_rank_corr",
-    "expectations_suite_lineitem", "fk_orphan_profile",
-    "event_pattern_match", "grouped_ols_trend",
-]
+# The driver hash-verifies only the FIRST 50 ``queries()`` entries a
+# round and records them in CORRECTNESS_r{N}.json next to this file, so
+# the order is the verification budget, derived from that ledger.
+_LEDGER_DIR = Path(__file__).resolve().parent
+
+
+def _last_green(ledger_dir: Path) -> dict[str, int | None]:
+    """name -> last round its ledger row was green (hash match, no
+    error), or None when its latest row is not green."""
+    rounds = {
+        int(re.search(r"r(\d+)", p.name).group(1)): p
+        for p in ledger_dir.glob("CORRECTNESS_r*.json")
+    }
+    last: dict[str, int | None] = {}
+    for rnd in sorted(rounds):
+        for name, row in json.loads(rounds[rnd].read_text()).items():
+            ok = row.get("hash_match") is True and row.get("err") is None
+            last[name] = rnd if ok else None
+    return last
+
+
+def verification_order(
+    names: Iterable[str], ledger_dir: Path = _LEDGER_DIR
+) -> list[str]:
+    """``names`` reordered for the driver's window: never-green and
+    failed-last entries first, then oldest last green; ties keep the
+    given order (``sorted`` is stable). A corrupt ledger file raises."""
+    last = _last_green(ledger_dir)
+    return sorted(names, key=lambda n: last.get(n) or 0)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 (+ §2.14
-    extensions: dedup / similarity / text analysis / multimodal),
-    ordered so the driver's 50-query verification window lands on the
-    entries with the least cross-round driver signal."""
+    extensions: dedup / similarity / text analysis / multimodal), in
+    ``verification_order``."""
     merged = {**QUERIES, **EXT_QUERIES, **SQL2_QUERIES}
-    tiered = (
-        set(_PENDING_NEVER_VERIFIED) | set(_R2_GREEN_STALE)
-        | set(_R3_GREEN) | set(_R4_GREEN) | set(_R5_GREEN)
-        | set(_R6_GREEN) | set(_R7_GREEN) | set(_R8_GREEN)
-        | set(_R9_GREEN) | set(_R10_GREEN) | set(_R11_GREEN)
-    )
-    new_this_round = [k for k in merged if k not in tiered]
-    ordered: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for tier in (
-        _PENDING_NEVER_VERIFIED,
-        new_this_round,
-        _R2_GREEN_STALE,
-        _R3_GREEN,
-        _R4_GREEN,
-        _R5_GREEN,
-        _R6_GREEN,
-        _R7_GREEN,
-        _R8_GREEN,
-        _R9_GREEN,
-        _R10_GREEN,
-        _R11_GREEN,
-    ):
-        for k in tier:
-            if k in merged and k not in ordered:
-                ordered[k] = merged[k]
-    for k, fn in merged.items():  # safety net: nothing may be dropped
-        ordered.setdefault(k, fn)
-    return ordered
+    return {k: merged[k] for k in verification_order(merged)}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -129,26 +129,10 @@ def main() -> None:
     # wakes ContextCleaner, whose async broadcast/accumulator cleanup then
     # overlaps the next timed query; full-battery A/B at sf0.1 showed the
     # md5-heavy dedup queries 1.5-2x slower with pre-query GC).
-    # Tier-boundary refresh (every N queries, NOT per-query): clear any
-    # leftover cache entries, GC both interpreters, then SLEEP so the
-    # async ContextCleaner drain finishes OUTSIDE the next timed query —
-    # the sleep is what the rejected per-query variant lacked. Off by
-    # default (0): the round-8 quiet min-of-3 full battery reads MEDIAN
-    # 0.96x floors with zero >1.5x readings WITHOUT it (BASELINE.md
-    # r8-m1), so in-battery accumulation is not the binding factor on a
-    # quiet box; the knob exists as a salvage lever for hot runs.
-    refresh_every = int(os.environ.get("SPARK_GRAFT_BENCH_REFRESH_EVERY", "0"))
     load_before = [round(x, 2) for x in os.getloadavg()]
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
-    for qi, (name, fn) in enumerate(queries.items()):
-        if refresh_every and qi and qi % refresh_every == 0:
-            import gc as _gc
-
-            spark.catalog.clearCache()
-            _gc.collect()
-            spark.sparkContext._jvm.System.gc()
-            time.sleep(1.0)
+    for name, fn in queries.items():
         samples: list[float] = []
         for _ in range(runs):
             start = time.perf_counter()

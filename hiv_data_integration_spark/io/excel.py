@@ -13,8 +13,8 @@ Reference semantics (S3 + R4op):
   dropped.
 
 Spark design: CHU workbooks are small per-hospital review files, so the
-byte parsing is **driver-side** (openpyxl when available, gated import) and
-the result enters the engine via ``spark.createDataFrame`` — distributed
+byte parsing is **driver-side** (the stdlib zip/XML codec below) and the
+result enters the engine via ``spark.createDataFrame`` — distributed
 processing starts at the DataFrame boundary. The header surgery itself is
 pure-Python column-name logic, fully testable without any Excel library.
 """
@@ -27,7 +27,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
-    "HAVE_OPENPYXL",
     "flatten_two_row_header",
     "read_excel_sheet",
     "excel_sheet_to_spark",
@@ -36,13 +35,6 @@ __all__ = [
     "write_xlsx_cells",
     "write_xlsx_workbook",
 ]
-
-try:  # pragma: no cover - openpyxl absent in this container
-    import openpyxl  # noqa: F401
-
-    HAVE_OPENPYXL = True
-except ImportError:
-    HAVE_OPENPYXL = False
 
 _UNNAMED_MARKERS = ("__UNNAMED__", "Unnamed:")
 
@@ -89,18 +81,12 @@ def flatten_two_row_header(pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 def read_excel_sheet(path: str, sheet_name: str | int = 0) -> pd.DataFrame:
-    """Read one worksheet into pandas (driver-side).
-
-    openpyxl (via ``pd.read_excel``) when available; otherwise the
-    stdlib zip/XML codec below handles ``.xlsx`` natively — only legacy
-    binary ``.xls`` remains gated (its BIFF format genuinely needs xlrd).
-    """
-    if HAVE_OPENPYXL:  # pragma: no cover - openpyxl absent here
-        return pd.read_excel(path, sheet_name=sheet_name)
+    """Read one worksheet into pandas (driver-side) through the stdlib
+    zip/XML codec below. Legacy binary ``.xls`` (BIFF) is refused with a
+    clear message."""
     if str(path).lower().endswith(".xls"):
         raise NotImplementedError(
-            "legacy .xls (BIFF) needs xlrd/openpyxl; re-save as .xlsx or "
-            "install an Excel library"
+            "legacy .xls (BIFF) is not supported; re-save it as .xlsx"
         )
     return read_xlsx_stdlib(path, sheet_name)
 
@@ -124,9 +110,8 @@ def excel_sheet_to_spark(
 
 # ---------------------------------------------------------------------------
 # Stdlib XLSX codec: an .xlsx file is a zip of XML parts, so basic reading
-# (and template-preserving cell writes) need no external library. This
-# ungates S3/K3 in environments without openpyxl; when openpyxl IS present
-# it stays the preferred reader (fuller format support).
+# (and template-preserving cell writes) need no external library. It is
+# the only xlsx reader and writer, so every host runs the same codec.
 # ---------------------------------------------------------------------------
 
 _SSML = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"

@@ -29,8 +29,8 @@ def read_spectrum(spark: SparkSession, path: str) -> DataFrame:
     """Suffix-dispatched scan: ``.parquet`` / ``.csv`` / ``.xlsx``.
 
     CSV reads with header + schema inference (the reference relies on
-    polars inference the same way); xlsx goes through the gated
-    driver-side Excel path.
+    polars inference the same way); xlsx goes through the driver-side
+    stdlib Excel codec.
     """
     suffix = os.path.splitext(path)[1].lower()
     if suffix in (".parquet", ".pq"):
@@ -40,8 +40,8 @@ def read_spectrum(spark: SparkSession, path: str) -> DataFrame:
     if suffix == ".xlsx":
         return excel_sheet_to_spark(spark, read_excel_sheet(path))
     if suffix == ".xls":
-        # openpyxl cannot parse legacy .xls (needs xlrd, not shipped) —
-        # fail with the real reason instead of a misleading openpyxl gate
+        # the stdlib xlsx codec cannot parse legacy binary .xls (BIFF) —
+        # fail with the real reason before the Excel path is tried
         raise ValueError("legacy .xls is not supported (requires xlrd); convert to .xlsx")
     raise ValueError(f"unsupported spectrum file format: {suffix!r}")
 

@@ -1,21 +1,20 @@
-"""Sinks: per-period CSV export, parquet state writes, Excel review sheet.
+"""Sinks: per-period CSV export, Excel review sheet.
 
 Reference semantics (K1-K3):
 
 - K1 per-period CSV export (``update_pnls_report/utils.py:395-418``): one
   ``<period>.csv`` file per distinct month.
 - K2 parquet state write (``update_pnls_report/extract_chu_data.py:381,
-  502``) — see ``operators.fuzzy.upsert_parquet_state`` for the atomic
-  read-modify-write variant.
+  502``) lives in ``operators.fuzzy.upsert_parquet_state`` (atomic
+  read-modify-write).
 - K3 Excel template writer (``update_pnls_report/utils.py:186-194``):
-  flagged review rows into a pre-styled workbook — driver-side, gated on
-  openpyxl.
+  flagged review rows into a pre-styled workbook — driver-side, through
+  the stdlib xlsx codec.
 
-Scale notes: ``export_csv_partitioned`` is the 100 TB path (one shuffle-free
-``partitionBy`` write, files named by Spark); ``export_csv_per_period``
-reproduces the reference's exact one-file-per-period naming with a
-driver-side loop over the (bounded, ≤ dozens) period set — each iteration
-is a pushed-down filter + single-file write of one month's slice.
+``export_csv_per_period`` reproduces the reference's exact
+one-file-per-period naming with a driver-side loop over the (bounded,
+≤ dozens) period set — each iteration is a pushed-down filter +
+single-file write of one month's slice.
 """
 
 from __future__ import annotations
@@ -27,27 +26,14 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hiv_data_integration_spark.io.excel import HAVE_OPENPYXL
+from hiv_data_integration_spark.io.excel import write_xlsx_cells
 
 __all__ = [
-    "export_csv_partitioned",
     "export_csv_per_period",
-    "write_parquet_state",
     "write_excel_review",
     "run_notebook_hook",
     "export_training_shards",
 ]
-
-
-def export_csv_partitioned(df: DataFrame, period_col: str, out_dir: str) -> None:
-    """Scale path: hive-style ``period=<p>/part-*.csv`` layout, written in
-    one distributed job (dynamic partition overwrite semantics)."""
-    (
-        df.write.mode("overwrite")
-        .partitionBy(period_col)
-        .option("header", True)
-        .csv(out_dir)
-    )
 
 
 def export_csv_per_period(
@@ -92,12 +78,6 @@ def export_csv_per_period(
         df.unpersist()
 
 
-def write_parquet_state(df: DataFrame, path: str) -> None:
-    """Plain overwrite parquet state write (K2). For read-modify-write of
-    the same path use ``operators.fuzzy.upsert_parquet_state``."""
-    df.write.mode("overwrite").parquet(path)
-
-
 def write_excel_review(
     df: DataFrame,
     template_path: str,
@@ -112,26 +92,12 @@ def write_excel_review(
     leave the previous run's stale rows in the sheet). Driver-side
     ``toPandas`` is correct here: review extracts are human-scale.
 
-    openpyxl when present; otherwise the stdlib template-preserving cell
-    writer (``io.excel.write_xlsx_cells``) — every untouched workbook part
-    is copied byte-identical, so the template's styling survives."""
-    if not HAVE_OPENPYXL:
-        from hiv_data_integration_spark.io.excel import write_xlsx_cells
-
-        pdf = df.toPandas()
-        rows = [list(t) for t in pdf.itertuples(index=False)]
-        write_xlsx_cells(template_path, sheet, output_path, rows, start_row)
-        return
-    import openpyxl  # pragma: no cover - openpyxl absent here
-
-    wb = openpyxl.load_workbook(template_path)  # pragma: no cover
-    ws = wb[sheet]  # pragma: no cover
-    for r_off, row in enumerate(  # pragma: no cover
-        df.toPandas().itertuples(index=False)
-    ):
-        for c_off, val in enumerate(row):
-            ws.cell(row=start_row + r_off, column=1 + c_off, value=val)
-    wb.save(output_path)  # pragma: no cover
+    Cells go through the stdlib template-preserving writer
+    (``io.excel.write_xlsx_cells``) — every untouched workbook part is
+    copied byte-identical, so the template's styling survives."""
+    pdf = df.toPandas()
+    rows = [list(t) for t in pdf.itertuples(index=False)]
+    write_xlsx_cells(template_path, sheet, output_path, rows, start_row)
 
 
 def run_notebook_hook(

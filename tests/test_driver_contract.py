@@ -3,7 +3,8 @@
 Two things break the driver's correctness gate silently:
 
 1. the verification-window ordering in __spark_entry__ (only the first 50
-   ``queries()`` entries are hash-checked per round), and
+   ``queries()`` entries are hash-checked per round; the order is derived
+   from the CORRECTNESS_r*.json ledger), and
 2. oracle SQL output typing — DuckDB renders HUGEINT (its int128 result
    type for ``sum()`` over integers) differently from Spark's BIGINT in
    the driver's value hash even when the values are identical (root cause
@@ -15,6 +16,7 @@ Two things break the driver's correctness gate silently:
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import sys
@@ -41,58 +43,73 @@ def test_registry_complete_and_oracled():
     assert set(o) <= set(q)
 
 
-def test_window_prioritizes_unverified_entries():
-    names = list(contract.queries())
-    window = names[:50]
-    pending = [k for k in contract._PENDING_NEVER_VERIFIED if k in names]
-    # the pinned never-driver-verified backlog verifies FIRST, in its
-    # original registration order — oldest unverified signal first
-    assert names[: len(pending)] == pending
-    # once the backlog drops below 50 the window legitimately spills into
-    # newer/green tiers, so only assert the prefix relationship
-    assert window[: min(50, len(pending))] == pending[:50]
-    # brand-new entries (no tier row yet) come directly after the
-    # pending backlog, still ahead of every previously-green entry
-    green_tiers = [
-        contract._R2_GREEN_STALE, contract._R3_GREEN, contract._R4_GREEN,
-        contract._R5_GREEN, contract._R6_GREEN, contract._R7_GREEN,
-        contract._R8_GREEN, contract._R9_GREEN, contract._R10_GREEN,
-        contract._R11_GREEN,
-    ]
-    tiered = set(contract._PENDING_NEVER_VERIFIED).union(*map(set, green_tiers))
-    new_this_round = [k for k in names if k not in tiered]
-    n_unverified = len(pending) + len(new_this_round)
-    assert names[len(pending): n_unverified] == new_this_round
-    # no previously-green entry may displace a never-driver-verified one
-    greens = set().union(*map(set, green_tiers))
-    assert not greens & set(names[:n_unverified])
-    # steady-state re-verification policy: previously-green tiers appear
-    # oldest-signal-first (r2 before r3 before r4 …), so once the backlog
-    # drains the window automatically rotates over the stalest greens
-    # (fully-recycled tiers — e.g. _R2_GREEN_STALE after round 9 — are
-    # empty and skipped)
-    pos = {k: i for i, k in enumerate(names)}
-    nonempty = [t for t in green_tiers if any(k in pos for k in t)]
-    for older, newer in zip(nonempty, nonempty[1:]):
-        older_max = max(pos[k] for k in older if k in pos)
-        newer_min = min(pos[k] for k in newer if k in pos)
-        assert older_max < newer_min, (
-            "green tiers must stay oldest-signal-first in queries() order"
-        )
-    # a name may live in exactly ONE tier — duplicates would let an old
-    # tier's position shadow the rotation (the ordering loop dedups, so
-    # this is the only place a double-listing would surface)
-    from collections import Counter
+_GREEN = {"hash_match": True, "err": None}
+_MISMATCH = {"hash_match": False, "err": None}
+_ERRORED = {"hash_match": None, "err": "no_oracle"}
 
-    all_tier_names = contract._PENDING_NEVER_VERIFIED + sum(green_tiers, [])
-    dupes = [k for k, c in Counter(all_tier_names).items() if c > 1]
-    assert dupes == [], f"names listed in more than one tier: {dupes}"
-    # nothing is dropped or duplicated by the ordering
-    assert len(names) == len(set(names))
-    merged = set(contract.QUERIES) | set(contract.EXT_QUERIES) | set(
-        contract.SQL2_QUERIES
+
+@pytest.mark.parametrize(
+    "ledgers, names, expected",
+    [
+        pytest.param(
+            {1: {"a": _GREEN, "b": _GREEN, "c": _GREEN},
+             2: {"b": _MISMATCH, "c": _ERRORED}},
+            ["a", "b", "c"], ["b", "c", "a"], id="failed_last_first",
+        ),
+        pytest.param(
+            {1: {"a": _GREEN, "b": _GREEN}},
+            ["a", "b", "new"], ["new", "a", "b"], id="never_seen_first",
+        ),
+        pytest.param(
+            {1: {"a": _GREEN, "c": _GREEN}, 2: {"b": _GREEN, "c": _MISMATCH},
+             3: {"c": _GREEN}},
+            ["c", "b", "a"], ["a", "b", "c"], id="oldest_last_green_first",
+        ),
+        pytest.param(
+            {1: {"a": _GREEN, "b": _GREEN, "c": _GREEN}},
+            ["c", "a", "b"], ["c", "a", "b"], id="ties_keep_registration",
+        ),
+        pytest.param(
+            {1: {"retired": _MISMATCH, "b": _GREEN}, 2: {"a": _GREEN}},
+            ["a", "b"], ["b", "a"], id="retired_name_ignored",
+        ),
+        pytest.param(
+            {13: {"a": _MISMATCH}, 50: {"b": _GREEN}, 100: {"a": _GREEN}},
+            ["a", "b"], ["b", "a"], id="r100_after_r13",
+        ),
+        pytest.param({}, ["c", "a", "b"], ["c", "a", "b"], id="no_ledger"),
+        pytest.param(
+            {1: "{not json"}, ["a"], json.JSONDecodeError, id="corrupt_raises",
+        ),
+    ],
+)
+def test_verification_order_policy(tmp_path, ledgers, names, expected):
+    for rnd, rows in ledgers.items():
+        text = rows if isinstance(rows, str) else json.dumps(rows)
+        (tmp_path / f"CORRECTNESS_r{rnd}.json").write_text(text)
+    if isinstance(expected, type):
+        with pytest.raises(expected):
+            contract.verification_order(names, tmp_path)
+    else:
+        assert contract.verification_order(names, tmp_path) == expected
+
+
+def test_window_rotates_past_the_last_ledger_round(tmp_path, monkeypatch):
+    """On the committed ledger, the next window shares no green entry
+    with the newest round, and no entry inside it was green more
+    recently than any entry left outside it. The ledger is found next to
+    the module, whatever the working directory."""
+    monkeypatch.chdir(tmp_path)
+    names = list(contract.queries())
+    ledger = contract._last_green(contract._LEDGER_DIR)
+    last = {n: ledger.get(n) or 0 for n in names}
+    newest = max(r for r in ledger.values() if r)
+    window, rest = names[:50], names[50:]
+    assert not [n for n in window if last[n] == newest]
+    assert max(last[n] for n in window) <= min(last[n] for n in rest)
+    assert sorted(names) == sorted(
+        {**contract.QUERIES, **contract.EXT_QUERIES, **contract.SQL2_QUERIES}
     )
-    assert set(names) == merged
 
 
 @pytest.fixture(scope="module")

@@ -188,10 +188,8 @@ def test_excel_sheet_to_spark_roundtrip(spark):
 
 
 def test_read_excel_sheet_gating():
-    """.xlsx reads work openpyxl-free (stdlib codec); only legacy binary
-    .xls stays gated with a clear message."""
-    if excel.HAVE_OPENPYXL:
-        pytest.skip("openpyxl present")
+    """.xlsx reads go through the stdlib codec; only legacy binary .xls
+    stays gated with a clear message."""
     with pytest.raises(NotImplementedError, match="xls"):
         excel.read_excel_sheet("/nonexistent.xls")
     # .xlsx goes to the stdlib codec (missing file -> normal file error)
@@ -215,23 +213,6 @@ def test_export_csv_per_period(spark, tmp_path):
     assert {r["site"] for r in rows} == {"a", "b"}
     # no staging debris
     assert not [p for p in os.listdir(out_dir) if "staging" in p]
-
-
-def test_export_csv_partitioned(spark, tmp_path):
-    df = spark.createDataFrame(
-        [("a", "202401", 1), ("c", "202402", 3)],
-        "site string, periode string, v int",
-    )
-    out_dir = str(tmp_path / "part_csv")
-    sinks.export_csv_partitioned(df, "periode", out_dir)
-    back = spark.read.option("header", True).csv(out_dir)
-    assert back.count() == 2
-    # partition-dir values come back through partition-column type
-    # inference (int here) — compare as strings
-    assert {str(r.periode) for r in back.select("periode").collect()} == {
-        "202401",
-        "202402",
-    }
 
 
 def test_read_spectrum_dispatch(spark, tmp_path):
@@ -386,7 +367,7 @@ def _make_xlsx(path, sheets):
 
 def test_stdlib_xlsx_read_roundtrip(tmp_path):
     """S3 ungated: a real .xlsx (built independently) read through
-    read_excel_sheet without openpyxl — headers, Unnamed placeholders,
+    read_excel_sheet's stdlib codec — headers, Unnamed placeholders,
     shared strings, numbers, gaps."""
     path = str(tmp_path / "chu.xlsx")
     _make_xlsx(
