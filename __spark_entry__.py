@@ -5,22 +5,23 @@ each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
-The actual implementations live in ``hiv_data_integration_spark.battery``;
-this file is just the stable driver-facing façade.
+The implementations and their oracles live in the ``ENTRIES`` tables of
+``hiv_data_integration_spark.battery``, ``battery_ext`` and
+``battery_sql``; this file merges them into ``REGISTRY`` and is the
+stable driver-facing façade.
 """
 
 from __future__ import annotations
 
 import json
 import re
-from collections.abc import Callable, Iterable
+from collections.abc import Iterable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from hiv_data_integration_spark.battery import ORACLE, QUERIES, q_flagship
-from hiv_data_integration_spark.battery_ext import EXT_ORACLE, EXT_QUERIES
-from hiv_data_integration_spark.battery_sql import SQL2_ORACLE, SQL2_QUERIES
+from hiv_data_integration_spark import battery, battery_ext, battery_sql
+from hiv_data_integration_spark.battery import Entry, QueryFn, q_flagship
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
@@ -67,19 +68,30 @@ def verification_order(
     return sorted(names, key=lambda n: last.get(n) or 0)
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+def merge_entries(*tables: Iterable[Entry]) -> dict[str, tuple[QueryFn, str]]:
+    """name -> (query, oracle SQL) over ``tables`` in order; a name
+    registered twice, within one table or across two, raises."""
+    merged: dict[str, tuple[QueryFn, str]] = {}
+    for table in tables:
+        for name, fn, sql in table:
+            if name in merged:
+                raise ValueError(f"battery entry {name!r} is registered twice")
+            merged[name] = (fn, sql)
+    return merged
+
+
+# Every battery entry, in registration order: the one place the tables meet.
+REGISTRY = merge_entries(battery.ENTRIES, battery_ext.ENTRIES, battery_sql.ENTRIES)
+
+
+def queries() -> dict[str, QueryFn]:
     """One entry per implemented operator from SURVEY.md §2 (+ §2.14
     extensions: dedup / similarity / text analysis / multimodal), in
     ``verification_order``."""
-    merged = {**QUERIES, **EXT_QUERIES, **SQL2_QUERIES}
-    return {k: merged[k] for k in verification_order(merged)}
+    return {k: REGISTRY[k][0] for k in verification_order(REGISTRY)}
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL mirror for each query (same column names).
-
-    Every registered query carries a full hash-checkable oracle — the
-    last rows-only entries (the mapInPandas decode/frame stubs) gained
-    deterministic byte-arithmetic oracles in round 5.
-    """
-    return {**ORACLE, **EXT_ORACLE, **SQL2_ORACLE}
+    """DuckDB-runnable ANSI SQL mirror for each query (same column names);
+    a table row cannot register a query without one."""
+    return {k: sql for k, (_, sql) in REGISTRY.items()}

@@ -18,18 +18,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from hiv_data_integration_spark.battery import QUERIES  # noqa: E402
-from hiv_data_integration_spark.battery_ext import EXT_QUERIES  # noqa: E402
-from hiv_data_integration_spark.battery_sql import SQL2_QUERIES  # noqa: E402
 from hiv_data_integration_spark.benchmarks import (  # noqa: E402
     pipeline_a_ist_scaled,
 )
 from hiv_data_integration_spark.session import get_spark  # noqa: E402
+from __spark_entry__ import REGISTRY  # noqa: E402
 
 ALL_QUERIES = {
-    **QUERIES,
-    **EXT_QUERIES,
-    **SQL2_QUERIES,
+    **{name: fn for name, (fn, _) in REGISTRY.items()},
     # bench-only (no DuckDB oracle; pipeline goldens cover correctness in
     # tests/test_pipelines.py): the full report pipeline at real width —
     # 154-col IST contract × 86 compiled rules over a 107,800-row fact —

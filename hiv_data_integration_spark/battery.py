@@ -34,6 +34,8 @@ from hiv_data_integration_spark.operators import reshape
 from hiv_data_integration_spark.operators.rules import Rule, split_by_consistency
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
+# one battery entry: (name, query, DuckDB oracle SQL with the same columns)
+Entry = tuple[str, QueryFn, str]
 
 TABLES = [
     "region",
@@ -1125,73 +1127,40 @@ SELECT n_name, period, 3, CAST(ROUND(CAST(r_f AS DOUBLE), 0) AS BIGINT),
 
 
 # ---------------------------------------------------------------------------
-# Registry
+# Registry: one row per entry; __spark_entry__ merges the battery tables
 # ---------------------------------------------------------------------------
 
-QUERIES: dict[str, QueryFn] = {
-    "flagship_pnls_chain": q_flagship,
-    "pricing_summary": q_pricing_summary,
-    "filter_membership": q_filter_membership,
-    "date_range_filter": q_date_range_filter,
-    "conditional_bucket": q_conditional_bucket,
-    "join_fact_dim": q_join_fact_dim,
-    "multi_hop_join": q_multi_hop_join,
-    "semi_join_orders": q_semi_join,
-    "anti_join_customers": q_anti_join,
-    "cross_join_replicate": q_cross_join_replicate,
-    "union_relaxed": q_union_relaxed,
-    "distinct_pairs": q_distinct_pairs,
-    "pivot_sum_returnflag": q_pivot_sum,
-    "pivot_min_status": q_pivot_min,
-    "null_preserving_sum": q_null_preserving_sum,
-    "semester_rollup": q_semester_rollup,
-    "topk_customers": q_topk_customers,
-    "window_rank_customers": q_window_rank,
-    "window_lag_events": q_window_lag,
-    "tumbling_window_events": q_tumbling_window,
-    "sessionize_events": q_sessionize,
-    "rules_engine_lineitem": q_rules_engine,
-    "rules_consistent_only": q_rules_consistent_only,
-    "rules_inconsistent_routing": q_rules_inconsistent_routing,
-    "stack_wide_to_long": q_stack_wide_to_long,
-    "pad_to_contract": q_pad_to_contract,
-    "string_path_ops": q_string_path_ops,
-    "period_roundtrip": q_period_roundtrip,
-    "lenient_numeric_parse": q_lenient_parse,
-    "dict_lookup_priority": q_dict_lookup,
-    "fuzzy_levenshtein_match": q_fuzzy_levenshtein,
-}
-
-ORACLE: dict[str, str] = {
-    "flagship_pnls_chain": SQL_FLAGSHIP,
-    "pricing_summary": SQL_PRICING_SUMMARY,
-    "filter_membership": SQL_FILTER_MEMBERSHIP,
-    "date_range_filter": SQL_DATE_RANGE_FILTER,
-    "conditional_bucket": SQL_CONDITIONAL_BUCKET,
-    "join_fact_dim": SQL_JOIN_FACT_DIM,
-    "multi_hop_join": SQL_MULTI_HOP_JOIN,
-    "semi_join_orders": SQL_SEMI_JOIN,
-    "anti_join_customers": SQL_ANTI_JOIN,
-    "cross_join_replicate": SQL_CROSS_JOIN_REPLICATE,
-    "union_relaxed": SQL_UNION_RELAXED,
-    "distinct_pairs": SQL_DISTINCT_PAIRS,
-    "pivot_sum_returnflag": SQL_PIVOT_SUM,
-    "pivot_min_status": SQL_PIVOT_MIN,
-    "null_preserving_sum": SQL_NULL_PRESERVING_SUM,
-    "semester_rollup": SQL_SEMESTER_ROLLUP,
-    "topk_customers": SQL_TOPK_CUSTOMERS,
-    "window_rank_customers": SQL_WINDOW_RANK,
-    "window_lag_events": SQL_WINDOW_LAG,
-    "tumbling_window_events": SQL_TUMBLING_WINDOW,
-    "sessionize_events": SQL_SESSIONIZE,
-    "rules_engine_lineitem": SQL_RULES_ENGINE,
-    "rules_consistent_only": SQL_RULES_CONSISTENT_ONLY,
-    "rules_inconsistent_routing": SQL_RULES_INCONSISTENT_ROUTING,
-    "stack_wide_to_long": SQL_STACK_WIDE_TO_LONG,
-    "pad_to_contract": SQL_PAD_TO_CONTRACT,
-    "string_path_ops": SQL_STRING_PATH_OPS,
-    "period_roundtrip": SQL_PERIOD_ROUNDTRIP,
-    "lenient_numeric_parse": SQL_LENIENT_PARSE,
-    "dict_lookup_priority": SQL_DICT_LOOKUP,
-    "fuzzy_levenshtein_match": SQL_FUZZY_LEVENSHTEIN,
-}
+ENTRIES: list[Entry] = [
+    ("flagship_pnls_chain", q_flagship, SQL_FLAGSHIP),
+    ("pricing_summary", q_pricing_summary, SQL_PRICING_SUMMARY),
+    ("filter_membership", q_filter_membership, SQL_FILTER_MEMBERSHIP),
+    ("date_range_filter", q_date_range_filter, SQL_DATE_RANGE_FILTER),
+    ("conditional_bucket", q_conditional_bucket, SQL_CONDITIONAL_BUCKET),
+    ("join_fact_dim", q_join_fact_dim, SQL_JOIN_FACT_DIM),
+    ("multi_hop_join", q_multi_hop_join, SQL_MULTI_HOP_JOIN),
+    ("semi_join_orders", q_semi_join, SQL_SEMI_JOIN),
+    ("anti_join_customers", q_anti_join, SQL_ANTI_JOIN),
+    ("cross_join_replicate", q_cross_join_replicate, SQL_CROSS_JOIN_REPLICATE),
+    ("union_relaxed", q_union_relaxed, SQL_UNION_RELAXED),
+    ("distinct_pairs", q_distinct_pairs, SQL_DISTINCT_PAIRS),
+    ("pivot_sum_returnflag", q_pivot_sum, SQL_PIVOT_SUM),
+    ("pivot_min_status", q_pivot_min, SQL_PIVOT_MIN),
+    ("null_preserving_sum", q_null_preserving_sum, SQL_NULL_PRESERVING_SUM),
+    ("semester_rollup", q_semester_rollup, SQL_SEMESTER_ROLLUP),
+    ("topk_customers", q_topk_customers, SQL_TOPK_CUSTOMERS),
+    ("window_rank_customers", q_window_rank, SQL_WINDOW_RANK),
+    ("window_lag_events", q_window_lag, SQL_WINDOW_LAG),
+    ("tumbling_window_events", q_tumbling_window, SQL_TUMBLING_WINDOW),
+    ("sessionize_events", q_sessionize, SQL_SESSIONIZE),
+    ("rules_engine_lineitem", q_rules_engine, SQL_RULES_ENGINE),
+    ("rules_consistent_only", q_rules_consistent_only, SQL_RULES_CONSISTENT_ONLY),
+    ("rules_inconsistent_routing",
+     q_rules_inconsistent_routing, SQL_RULES_INCONSISTENT_ROUTING),
+    ("stack_wide_to_long", q_stack_wide_to_long, SQL_STACK_WIDE_TO_LONG),
+    ("pad_to_contract", q_pad_to_contract, SQL_PAD_TO_CONTRACT),
+    ("string_path_ops", q_string_path_ops, SQL_STRING_PATH_OPS),
+    ("period_roundtrip", q_period_roundtrip, SQL_PERIOD_ROUNDTRIP),
+    ("lenient_numeric_parse", q_lenient_parse, SQL_LENIENT_PARSE),
+    ("dict_lookup_priority", q_dict_lookup, SQL_DICT_LOOKUP),
+    ("fuzzy_levenshtein_match", q_fuzzy_levenshtein, SQL_FUZZY_LEVENSHTEIN),
+]

@@ -14,7 +14,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hiv_data_integration_spark.battery import QueryFn, dsum, read_events_stream, tbl
+from hiv_data_integration_spark.battery import (
+    Entry,
+    QueryFn,
+    dsum,
+    read_events_stream,
+    tbl,
+)
 from hiv_data_integration_spark.operators.aggregate import (
     cohort_retention as agg_cohort,
     funnel_conversion as agg_funnel,
@@ -1375,7 +1381,7 @@ def q_decode_media_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# the fake decoder (operators/multimodal.py _fake_decode): payload = UTF-8
+# the stub branch of operators/multimodal.py decode_media: payload = UTF-8
 # bytes of text; width = 16 + n%64, height = 16 + (n//64)%64
 SQL_DECODE_STUB = """
 SELECT doc_id,
@@ -2087,56 +2093,6 @@ SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n_cust,
        min(c_custkey) AS min_key, max(c_custkey) AS max_key
 FROM customer WHERE c_acctbal > 0
 GROUP BY c_mktsegment
-"""
-
-
-def q_dynamic_partition_overwrite(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Dynamic partition overwrite — the incremental-reprocessing write
-    path: a Hive-partitioned dataset gets ONE partition rewritten
-    (``partitionOverwriteMode=dynamic`` as a per-write option, static
-    mode would truncate the whole table), the untouched partitions must
-    read back byte-identical. The oracle reproduces the end state with a
-    CASE filter: 'F' rows only where reprocessing kept them, every other
-    partition complete."""
-    import shutil
-    import tempfile
-
-    orders = tbl(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderstatus"
-    )
-    base = tempfile.mkdtemp(prefix="dpo_")
-    try:
-        orders.write.partitionBy("o_orderstatus").mode("overwrite").parquet(
-            base
-        )
-        # reprocess ONLY the 'F' partition: keep the big orders
-        repro = orders.filter(
-            (F.col("o_orderstatus") == "F") & (F.col("o_totalprice") > 5000.0)
-        )
-        repro.write.partitionBy("o_orderstatus").mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).parquet(base)
-        back = spark.read.parquet(base)
-        result = back.groupBy("o_orderstatus").agg(
-            F.count("*").alias("n_orders"),
-            dsum("o_totalprice", scale=2, prec=28).alias("sum_price"),
-            F.min("o_orderkey").alias("min_key"),
-        )
-        out = _local_result(result)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return out
-
-
-SQL_DYNAMIC_PARTITION_OVERWRITE = """
-SELECT o_orderstatus, count(*) AS n_orders,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(28,2))) AS DOUBLE) AS sum_price,
-       min(o_orderkey) AS min_key
-FROM orders
-WHERE o_orderstatus <> 'F' OR o_totalprice > 5000.0
-GROUP BY o_orderstatus
 """
 
 
@@ -15645,572 +15601,325 @@ FROM links GROUP BY 1, 2
 """
 
 
-EXT_QUERIES: dict[str, QueryFn] = {
-    "streaming_outer_join_expiry": _retry_stream_once(q_streaming_outer_join_expiry),
-    "streaming_chained_windows": _retry_stream_once(q_streaming_chained_windows),
-    "business_day_latency": q_business_day_latency,
-    "sketch_hll_grouped": q_hll_grouped,
-    "layout_range_boundaries": q_range_boundaries,
-    "coverage_set_orders": q_coverage_set,
-    "seasonality_heatmap_events": q_seasonality_heatmap,
-    "nearest_event_probe": q_nearest_event_probe,
-    "freshness_audit_events": q_freshness_audit,
-    "multimodal_audio_framing_stub": q_audio_framing_stub,
-    "multimodal_audio_decode": q_audio_decode,
-    "multimodal_audio_energy": q_audio_energy,
-    "multimodal_image_phash": q_image_phash,
-    "multimodal_image_dhash": q_image_dhash,
-    "multimodal_phash_near_pairs": q_phash_near_pairs,
-    "multimodal_phash_class_pairs": q_phash_class_pairs,
-    "multimodal_crossmodal_neardup": q_crossmodal_neardup,
-    "multimodal_crossmodal_clusters": q_crossmodal_clusters,
-    "multimodal_frame_class_pairs": q_frame_class_pairs,
-    "warc_record_parse": q_warc_record_parse,
-    "html_text_extract": q_html_text_extract,
-    "robots_prefix_filter": q_robots_prefix_filter,
-    "quality_linear_classifier": q_quality_linear_classifier,
-    "crawl_frontier_schedule": q_crawl_frontier_schedule,
-    "url_pld_quota": q_url_pld_quota,
-    "streaming_warc_ingest": _retry_stream_once(q_streaming_warc_ingest),
-    "record_linkage_fs": q_record_linkage_fs,
-    "record_linkage_fs_capped": q_record_linkage_fs_capped,
-    "crawl_link_hostgraph": q_crawl_link_hostgraph,
-    "multimodal_phash_clusters": q_phash_clusters,
-    "multimodal_media_router": q_media_router,
-    "streaming_media_router": _retry_stream_once(q_streaming_media_router),
-    "streaming_frame_decode": _retry_stream_once(q_streaming_frame_decode),
-    "data_temporal_split_purged": q_temporal_split_purged,
-    "corpus_gate_funnel": q_gate_funnel,
-    "text_stopword_matrix": q_stopword_matrix,
-    "streaming_update_mode_counts": _retry_stream_once(q_streaming_update_mode),
-    "pivot_multi_agg": q_pivot_multi_agg,
-    "sketch_kmv_setops": q_kmv_setops,
-    "sketch_kmv_jaccard": q_kmv_jaccard,
-    "data_stratified_exact_split": q_stratified_exact_split,
-    "seasonal_index_dow": q_seasonal_index_dow,
-    "text_heaps_law_curve": q_heaps_law_curve,
-    "key_candidate_audit": q_key_candidate_audit,
-    "graph_kcore_peel": q_kcore_peel,
-    "fuzzy_blocking_quality": q_blocking_quality,
-    "text_tokenizer_fertility": q_tokenizer_fertility,
-    "streaming_hll_distinct": _retry_stream_once(q_streaming_hll_distinct),
-    "sketch_histogram_quantiles": q_hist_quantile_sketch,
-    "sketch_hll_distinct": q_hll_distinct,
-    "graph_label_propagation": q_label_propagation,
-    "padding_waste_audit": q_padding_waste_audit,
-    "temperature_mixture_alloc": q_temperature_mixture,
-    "multimodal_resize_thumb": q_gif_resize_thumb,
-    "bpe_encoded_symbols": q_bpe_encoded_symbols,
-    "bpe_learn_merges": q_bpe_learn_merges,
-    "dedup_minhash_eval": q_minhash_eval,
-    "split_leakage_audit": q_split_leakage_audit,
-    "corpus_budget_select": q_corpus_budget_select,
-    "pii_risk_triage": q_pii_risk_triage,
-    "vocab_coverage_curve": q_vocab_coverage_curve,
-    "weighted_median_price": q_weighted_median,
-    "user_rfm_features": q_rfm_features,
-    "event_linear_attribution": q_linear_attribution,
-    "benford_price_profile": q_benford_profile,
-    "text_ngram_containment": q_ngram_containment,
-    "join_key_skew_profile": q_key_skew_profile,
-    "embed_rrf_fusion": q_rrf_fusion,
-    "source_quantile_norm": q_rank_quantile_norm,
-    "corpus_curriculum_interleave": q_curriculum_interleave,
-    "quality_length_rank_corr": q_rank_correlation,
-    "expectations_suite_lineitem": q_expectations_suite,
-    "fk_orphan_profile": q_fk_orphan_profile,
-    "event_pattern_match": q_event_pattern_match,
-    "grouped_ols_trend": q_grouped_ols,
-    "contingency_chi2_profile": q_contingency_profile,
-    "conversion_latency_deciles": q_conversion_latency,
-    "event_cooccurrence_lift": q_cooccurrence_lift,
-    "incremental_agg_maintenance": q_incremental_agg,
-    "dynamic_partition_overwrite": q_dynamic_partition_overwrite,
-    "python_udtf_sentences": q_udtf_sentences,
-    "pit_join_scd2_orders": q_pit_join,
-    "discount_share_wilson_ci": q_proportion_ci,
-    "bpe_pair_topk": q_bpe_pairs,
-    "streaming_windowed_topk": _retry_stream_once(q_streaming_windowed_topk),
-    "largest_remainder_proration": q_largest_remainder,
-    "k_anonymity_audit": q_k_anonymity,
-    "interval_union_engagement": q_interval_union,
-    "rolling_wau_exact": q_rolling_wau,
-    "group_median_impute": q_median_impute,
-    "null_safe_join_histograms": q_null_safe_join,
-    "collated_group_counts": q_collated_groups,
-    "stable_global_row_ids": q_stable_row_ids,
-    "user_value_trailing_ema": q_trailing_ema,
-    "churn_label_generation": q_churn_labels,
-    "loo_target_encoding": q_loo_target_encoding,
-    "cdc_chunk_dedup": q_cdc_chunk_dedup,
-    "ab_test_ztest_purchase": q_ab_test_ztest,
-    "class_balance_weights": q_class_balance_weights,
-    "interval_overlap_join": q_interval_overlap_join,
-    "sequence_bigram_support": q_sequence_bigram_support,
-    "calibration_bins": q_calibration_bins,
-    "dedup_sorted_neighborhood": q_sorted_neighborhood,
-    "ohlc_value_bars": q_ohlc_value_bars,
-    "grouped_mode_event": q_grouped_mode_event,
-    "twap_user_day": q_twap_user_day,
-    "segmented_running_total": q_segmented_running_total,
-    "weighted_priority_sample": q_weighted_priority_sample,
-    "l_diversity_customers": q_l_diversity_customers,
-    "link_prediction_suppliers": q_link_prediction_suppliers,
-    "fifo_match_returns": q_fifo_match_returns,
-    "gini_profile_orders": q_gini_profile_orders,
-    "roc_auc_value_purchase": q_roc_auc_value_purchase,
-    "zscore_outliers_dow": q_zscore_outliers_dow,
-    "feature_hash_customers": q_feature_hash_customers,
-    "km_signup_to_purchase": q_km_signup_to_purchase,
-    "mann_kendall_daily": q_mann_kendall_daily,
-    "cusum_change_daily": q_cusum_change_daily,
-    "theil_sen_daily": q_theil_sen_daily,
-    "abc_parts_by_brand": q_abc_parts_by_brand,
-    "rolling_band_daily": q_rolling_band_daily,
-    "top_session_paths": q_top_session_paths,
-    "golden_record_users": q_golden_record_users,
-    "cohort_ltv_events": q_cohort_ltv_events,
-    "seasonal_naive_mdape": q_seasonal_naive_mdape,
-    "audience_overlap_events": q_audience_overlap_events,
-    "attribution_position_based": q_attribution_position_based,
-    "debounce_clicks": q_debounce_clicks,
-    "gap_fill_interp_daily": q_gap_fill_interp_daily,
-    "dataset_fingerprints": q_dataset_fingerprints,
-    "ks_value_user_parity": q_ks_value_user_parity,
-    "tv_drift_user_parity": q_tv_drift_user_parity,
-    "pvm_brand_yoy": q_pvm_brand_yoy,
-    "lump_rare_part_types": q_lump_rare_part_types,
-    "embed_prefix_rerank_topk": q_embed_prefix_rerank,
-    "embed_centroid_confusion": q_embed_centroid_confusion,
-    "rake_keyphrases_docs": q_rake_keyphrases_docs,
-    "bigram_next_token_acc": q_bigram_next_token_acc,
-    "share_of_parent_revenue": q_share_of_parent_revenue,
-    "price_band_clusters": q_price_band_clusters,
-    "fd_audit_lineitem": q_fd_audit_lineitem,
-    "trending_event_types": q_trending_event_types,
-    "trimmed_mean_value": q_trimmed_mean_value,
-    "conformal_naive_width": q_conformal_naive_width,
-    "ma_crossover_daily": q_ma_crossover_daily,
-    "weighted_jaccard_sources": q_weighted_jaccard_sources,
-    "corr_qty_revenue": q_corr_qty_revenue,
-    "autocorr_lag7_daily": q_autocorr_lag7_daily,
-    "cross_source_dups": q_cross_source_dups,
-    "ess_doc_weights": q_ess_doc_weights,
-    "behavior_segments": q_behavior_segments,
-    "peak_concurrency_sessions": q_peak_concurrency_sessions,
-    "abc_xyz_matrix": q_abc_xyz_matrix,
-    "sla_p95_ship_delay": q_sla_p95_ship_delay,
-    "top_decile_revenue_share": q_top_decile_revenue_share,
-    "xlsx_report_roundtrip": q_xlsx_report_roundtrip,
-    "csv_per_period_export": q_csv_per_period_export,
-    "json_dict_scan": q_json_dict_scan,
-    "registry_upsert_state": q_registry_upsert_state,
-    "corpus_token_packing": q_token_packing,
-    "corpus_unigram_logprob": q_unigram_logprob,
-    "corpus_dsir_resample": q_dsir_resample,
-    "quality_decile_stats": q_quality_deciles,
-    "source_quota_cap": q_source_quota,
-    "funnel_events": q_funnel,
-    "windowed_funnel_events": q_windowed_funnel,
-    "variant_json_extract": q_variant_json_extract,
-    "cohort_retention_events": q_cohort_retention,
-    "text_token_counts": q_token_counts,
-    "text_quality_scores": q_quality_scores,
-    "text_lang_id": q_lang_id,
-    "doc_fingerprint": q_fingerprint,
-    "dedup_exact_docs": q_dedup_exact,
-    "dedup_minhash_lsh_pairs": q_minhash_pairs,
-    "dedup_ngram_jaccard_pairs": q_ngram_jaccard,
-    "dedup_ngram_prefix_filter": q_ngram_prefix_filter,
-    "dedup_ngram_dfcap_pairs": q_ngram_dfcap,
-    "dedup_simhash_fingerprints": q_simhash,
-    "dedup_embedding_cosine_pairs": q_embedding_cosine_dedup,
-    "dedup_connected_components": q_connected_components,
-    "graph_pagerank_fixed_point": q_pagerank_fixed_point,
-    "dedup_canonical_corpus": q_canonical_corpus,
-    "text_rolling_fingerprint": q_rolling_fingerprint,
-    "text_chunking": q_text_chunking,
-    "text_pii_redaction": q_pii_redaction,
-    "text_vocab_topk": q_vocab_topk,
-    "text_winnow_fingerprints": q_winnow_fingerprints,
-    "text_winnow_overlap_pairs": q_winnow_overlap_pairs,
-    "text_repetition_filter": q_repetition_filter,
-    "text_contamination_check": q_contamination_check,
-    "text_tfidf_topk": q_tfidf_topk,
-    "data_split_sample": q_split_sample,
-    "group_split_no_leakage": q_group_split,
-    "jsonl_corpus_roundtrip": q_jsonl_roundtrip,
-    "scd2_customer_history": q_scd2_history,
-    "embed_quantize_int8": q_embed_quantize,
-    "embed_quantized_rerank_topk": q_quantized_rerank,
-    "streaming_pii_redaction": _retry_stream_once(q_streaming_pii),
-    "corpus_dataset_card": q_dataset_card,
-    "embed_cosine_topk": q_cosine_topk,
-    "embed_ivf_topk_label": q_ivf_topk,
-    "embed_lsh_ann_topk": q_lsh_topk,
-    "embed_ivf_kmeans_topk": q_kmeans_ivf_topk,
-    "embed_pq_adc_topk": q_pq_adc_topk,
-    "embed_ann_recall": q_ann_recall,
-    "multimodal_payload_meta": q_payload_meta,
-    "multimodal_decode_stub": q_decode_media_stub,
-    "python_datasource_scan": q_python_datasource,
-    "python_datasource_stream": _retry_stream_once(q_python_datasource_stream),
-    "python_datasource_pstream": _retry_stream_once(q_python_datasource_pstream),
-    "multimodal_frame_decode": q_gif_frame_decode,
-    "multimodal_gif_interlaced": q_gif_interlaced,
-    "multimodal_scene_cuts": q_scene_cuts,
-    "multimodal_shot_segments": q_shot_segments,
-    "multimodal_audio_activity": q_audio_activity,
-    "multimodal_frame_sample": q_gif_frame_sample,
-    "multimodal_audio_haar_bands": q_audio_haar_bands,
-    "multimodal_audio_decimate": q_audio_decimate,
-    "fuzzy_normalize_fold": q_normalize_fold,
-    "fuzzy_resolve_suppliers": q_fuzzy_resolve,
-    "fuzzy_resolve_blocked": q_fuzzy_resolve_blocked,
-    "org_uuid5_ids": q_uuid5_ids,
-    "rest_fanout_analytics": q_rest_fanout_analytics,
-    "rest_naomi_json_flatten": q_rest_naomi_flatten,
-    "salted_skew_join": q_salted_join,
-    "bucketed_colocated_join": q_bucketed_join,
-    "llm_corpus_prep": q_corpus_prep,
-    "spectrum_csv_scan": q_spectrum_csv,
-    "partitioned_parquet_pruning": q_partition_pruning,
-    "zorder_clustered_scan": q_zorder_scan,
-    "dedup_semantic_clusters": q_semantic_dedup,
-    "dedup_semantic_sampled_trainer": q_semantic_dedup_sampled,
-    "text_line_dedup": q_line_dedup,
-    "text_url_canonicalize": q_url_canonicalize,
-    "text_duplicate_ngram_spans": q_duplicate_ngram_spans,
-    "sketch_countmin_tokens": q_countmin_tokens,
-    "graph_triangle_count_parts": q_triangle_count,
-    "data_kfold_assignment": q_kfold_assignment,
-    "text_bm25_topk": q_bm25_topk,
-    "sketch_bloom_membership": q_bloom_membership,
-    "profile_winsorized_stats": q_winsorized_stats,
-    "profile_robust_outliers": q_robust_outliers,
-    "sliding_window_events": q_sliding_window,
-    "event_transition_matrix": q_event_transitions,
-    "text_token_diversity": q_token_diversity,
-    "dedup_incremental_batch": q_incremental_dedup,
-    "corpus_shuffle_shards": q_shuffle_shards,
-    "orc_source_roundtrip": q_orc_roundtrip,
-    "xml_source_roundtrip": q_xml_roundtrip,
-    "binaryfile_blob_ingest": q_binaryfile_ingest,
-    "sql_ddl_managed_table": q_sql_ddl_managed_table,
-    "dynamic_partition_overwrite": q_dynamic_partition_overwrite,
-    "dataset_diff_audit": q_dataset_diff,
-    "compaction_plan_bins": q_compaction_plan,
-    "text_clean_corpus": q_clean_corpus_text,
-    "user_event_sequences": q_user_event_sequences,
-    "trailing_window_features": q_trailing_window_features,
-    "corpus_mixture_sample": q_mixture_sample,
-    "asof_join_two_table": q_asof_join_orders,
-    "embed_mean_pool": q_mean_pool,
-    "profile_numeric_histogram": q_numeric_histogram,
-    "profile_completeness": q_completeness_profile,
-    "approx_sketches_events": q_approx_sketches,
-    "streaming_tumbling_counts": _retry_stream_once(q_streaming_tumbling),
-    "streaming_exactly_once_dedup": _retry_stream_once(q_streaming_dedup),
-    "streaming_dedup_within_watermark": _retry_stream_once(q_streaming_dedup_within_watermark),
-    "streaming_foreach_batch_upsert": _retry_stream_once(q_streaming_foreach_batch_upsert),
-    "streaming_corpus_chunking": _retry_stream_once(q_streaming_chunking),
-    "streaming_interval_join": _retry_stream_once(q_streaming_interval_join),
-    "streaming_session_windows": _retry_stream_once(q_streaming_session_windows),
-    "streaming_stateful_totals": _retry_stream_once(q_streaming_stateful_totals),
-    "streaming_static_enrich": _retry_stream_once(q_streaming_static_enrich),
-    "gap_fill_locf_hourly": q_gap_fill_locf,
-}
-
-EXT_ORACLE: dict[str, str] = {
-    "streaming_outer_join_expiry": SQL_STREAMING_OUTER_JOIN,
-    "streaming_chained_windows": SQL_STREAMING_CHAINED_WINDOWS,
-    "business_day_latency": SQL_BUSINESS_DAY_LATENCY,
-    "sketch_hll_grouped": SQL_HLL_GROUPED,
-    "layout_range_boundaries": SQL_RANGE_BOUNDARIES,
-    "coverage_set_orders": SQL_COVERAGE_SET,
-    "seasonality_heatmap_events": SQL_SEASONALITY_HEATMAP,
-    "nearest_event_probe": SQL_NEAREST_EVENT_PROBE,
-    "freshness_audit_events": SQL_FRESHNESS_AUDIT,
-    "multimodal_audio_framing_stub": SQL_AUDIO_FRAMING_STUB,
-    "multimodal_audio_decode": SQL_AUDIO_DECODE,
-    "multimodal_audio_energy": SQL_AUDIO_ENERGY,
-    "multimodal_image_phash": SQL_IMAGE_PHASH,
-    "multimodal_image_dhash": SQL_IMAGE_DHASH,
-    "multimodal_phash_near_pairs": SQL_PHASH_NEAR_PAIRS,
-    "multimodal_phash_class_pairs": SQL_PHASH_CLASS_PAIRS,
-    "multimodal_crossmodal_neardup": SQL_CROSSMODAL_NEARDUP,
-    "multimodal_crossmodal_clusters": SQL_CROSSMODAL_CLUSTERS,
-    "multimodal_frame_class_pairs": SQL_FRAME_CLASS_PAIRS,
-    "warc_record_parse": SQL_WARC_RECORD_PARSE,
-    "html_text_extract": SQL_HTML_TEXT_EXTRACT,
-    "robots_prefix_filter": SQL_ROBOTS_PREFIX_FILTER,
-    "quality_linear_classifier": SQL_QUALITY_LINEAR_CLASSIFIER,
-    "crawl_frontier_schedule": SQL_CRAWL_FRONTIER_SCHEDULE,
-    "url_pld_quota": SQL_URL_PLD_QUOTA,
-    "streaming_warc_ingest": SQL_STREAMING_WARC_INGEST,
-    "record_linkage_fs": SQL_RECORD_LINKAGE_FS,
-    "record_linkage_fs_capped": SQL_RECORD_LINKAGE_FS_CAPPED,
-    "crawl_link_hostgraph": SQL_CRAWL_LINK_HOSTGRAPH,
-    "multimodal_phash_clusters": SQL_PHASH_CLUSTERS,
-    "multimodal_media_router": SQL_MEDIA_ROUTER,
-    "streaming_media_router": SQL_MEDIA_ROUTER,
-    "data_temporal_split_purged": SQL_TEMPORAL_SPLIT,
-    "corpus_gate_funnel": SQL_GATE_FUNNEL,
-    "text_stopword_matrix": SQL_STOPWORD_MATRIX,
-    "streaming_update_mode_counts": SQL_STREAMING_UPDATE_MODE,
-    "pivot_multi_agg": SQL_PIVOT_MULTI_AGG,
-    "sketch_kmv_setops": SQL_KMV_SETOPS,
-    "sketch_kmv_jaccard": SQL_KMV_JACCARD,
-    "data_stratified_exact_split": SQL_STRATIFIED_EXACT_SPLIT,
-    "seasonal_index_dow": SQL_SEASONAL_INDEX_DOW,
-    "text_heaps_law_curve": SQL_HEAPS_LAW_CURVE,
-    "key_candidate_audit": SQL_KEY_CANDIDATE_AUDIT,
-    "graph_kcore_peel": SQL_KCORE_PEEL,
-    "fuzzy_blocking_quality": SQL_BLOCKING_QUALITY,
-    "text_tokenizer_fertility": SQL_TOKENIZER_FERTILITY,
-    "streaming_hll_distinct": SQL_STREAMING_HLL,
-    "sketch_histogram_quantiles": SQL_HIST_QUANTILE,
-    "sketch_hll_distinct": SQL_HLL_DISTINCT,
-    "graph_label_propagation": SQL_LABEL_PROPAGATION,
-    "padding_waste_audit": SQL_PADDING_WASTE,
-    "temperature_mixture_alloc": SQL_TEMPERATURE_MIXTURE,
-    "multimodal_resize_thumb": SQL_GIF_RESIZE,
-    "bpe_encoded_symbols": SQL_BPE_ENCODED_SYMBOLS,
-    "bpe_learn_merges": SQL_BPE_LEARN_MERGES,
-    "dedup_minhash_eval": SQL_MINHASH_EVAL,
-    "split_leakage_audit": SQL_SPLIT_LEAKAGE_AUDIT,
-    "corpus_budget_select": SQL_CORPUS_BUDGET_SELECT,
-    "pii_risk_triage": SQL_PII_RISK_TRIAGE,
-    "vocab_coverage_curve": SQL_VOCAB_COVERAGE_CURVE,
-    "weighted_median_price": SQL_WEIGHTED_MEDIAN,
-    "user_rfm_features": SQL_RFM,
-    "event_linear_attribution": SQL_LINEAR_ATTRIBUTION,
-    "benford_price_profile": SQL_BENFORD,
-    "text_ngram_containment": SQL_NGRAM_CONTAINMENT,
-    "join_key_skew_profile": SQL_KEY_SKEW,
-    "embed_rrf_fusion": SQL_RRF_FUSION,
-    "source_quantile_norm": SQL_RANK_QUANTILE_NORM,
-    "corpus_curriculum_interleave": SQL_CURRICULUM_INTERLEAVE,
-    "quality_length_rank_corr": SQL_RANK_CORRELATION,
-    "expectations_suite_lineitem": SQL_EXPECTATIONS_SUITE,
-    "fk_orphan_profile": SQL_FK_ORPHAN_PROFILE,
-    "event_pattern_match": SQL_EVENT_PATTERN_MATCH,
-    "grouped_ols_trend": SQL_GROUPED_OLS,
-    "contingency_chi2_profile": SQL_CONTINGENCY,
-    "conversion_latency_deciles": SQL_CONVERSION_LATENCY,
-    "event_cooccurrence_lift": SQL_COOCCURRENCE_LIFT,
-    "incremental_agg_maintenance": SQL_INCREMENTAL_AGG,
-    "dynamic_partition_overwrite": SQL_DYNAMIC_PARTITION_OVERWRITE,
-    "python_udtf_sentences": SQL_UDTF_SENTENCES,
-    "pit_join_scd2_orders": SQL_PIT_JOIN,
-    "discount_share_wilson_ci": SQL_PROPORTION_CI,
-    "bpe_pair_topk": SQL_BPE_PAIRS,
-    "streaming_windowed_topk": SQL_STREAMING_WINDOWED_TOPK,
-    "largest_remainder_proration": SQL_LARGEST_REMAINDER,
-    "k_anonymity_audit": SQL_K_ANONYMITY,
-    "interval_union_engagement": SQL_INTERVAL_UNION,
-    "rolling_wau_exact": SQL_ROLLING_WAU,
-    "group_median_impute": SQL_MEDIAN_IMPUTE,
-    "null_safe_join_histograms": SQL_NULL_SAFE_JOIN,
-    "collated_group_counts": SQL_COLLATED_GROUPS,
-    "stable_global_row_ids": SQL_STABLE_ROW_IDS,
-    "user_value_trailing_ema": SQL_TRAILING_EMA,
-    "churn_label_generation": SQL_CHURN_LABELS,
-    "loo_target_encoding": SQL_LOO_TARGET_ENCODING,
-    "cdc_chunk_dedup": SQL_CDC_CHUNK_DEDUP,
-    "ab_test_ztest_purchase": SQL_AB_TEST_ZTEST,
-    "class_balance_weights": SQL_CLASS_BALANCE,
-    "interval_overlap_join": SQL_INTERVAL_OVERLAP_JOIN,
-    "sequence_bigram_support": SQL_SEQUENCE_BIGRAM_SUPPORT,
-    "calibration_bins": SQL_CALIBRATION_BINS,
-    "dedup_sorted_neighborhood": SQL_SORTED_NEIGHBORHOOD,
-    "ohlc_value_bars": SQL_OHLC_VALUE_BARS,
-    "grouped_mode_event": SQL_GROUPED_MODE_EVENT,
-    "twap_user_day": SQL_TWAP_USER_DAY,
-    "segmented_running_total": SQL_SEGMENTED_RUNNING_TOTAL,
-    "weighted_priority_sample": SQL_WEIGHTED_PRIORITY_SAMPLE,
-    "l_diversity_customers": SQL_L_DIVERSITY_CUSTOMERS,
-    "link_prediction_suppliers": SQL_LINK_PREDICTION_SUPPLIERS,
-    "fifo_match_returns": SQL_FIFO_MATCH_RETURNS,
-    "gini_profile_orders": SQL_GINI_PROFILE_ORDERS,
-    "roc_auc_value_purchase": SQL_ROC_AUC_VALUE_PURCHASE,
-    "zscore_outliers_dow": SQL_ZSCORE_OUTLIERS_DOW,
-    "feature_hash_customers": SQL_FEATURE_HASH_CUSTOMERS,
-    "km_signup_to_purchase": SQL_KM_SIGNUP_TO_PURCHASE,
-    "mann_kendall_daily": SQL_MANN_KENDALL_DAILY,
-    "cusum_change_daily": SQL_CUSUM_CHANGE_DAILY,
-    "theil_sen_daily": SQL_THEIL_SEN_DAILY,
-    "abc_parts_by_brand": SQL_ABC_PARTS_BY_BRAND,
-    "rolling_band_daily": SQL_ROLLING_BAND_DAILY,
-    "top_session_paths": SQL_TOP_SESSION_PATHS,
-    "golden_record_users": SQL_GOLDEN_RECORD_USERS,
-    "cohort_ltv_events": SQL_COHORT_LTV_EVENTS,
-    "seasonal_naive_mdape": SQL_SEASONAL_NAIVE_MDAPE,
-    "audience_overlap_events": SQL_AUDIENCE_OVERLAP_EVENTS,
-    "attribution_position_based": SQL_ATTRIBUTION_POSITION_BASED,
-    "debounce_clicks": SQL_DEBOUNCE_CLICKS,
-    "gap_fill_interp_daily": SQL_GAP_FILL_INTERP_DAILY,
-    "dataset_fingerprints": SQL_DATASET_FINGERPRINTS,
-    "ks_value_user_parity": SQL_KS_VALUE_USER_PARITY,
-    "tv_drift_user_parity": SQL_TV_DRIFT_USER_PARITY,
-    "pvm_brand_yoy": SQL_PVM_BRAND_YOY,
-    "lump_rare_part_types": SQL_LUMP_RARE_PART_TYPES,
-    "embed_prefix_rerank_topk": SQL_EMBED_PREFIX_RERANK,
-    "embed_centroid_confusion": SQL_EMBED_CENTROID_CONFUSION,
-    "rake_keyphrases_docs": SQL_RAKE_KEYPHRASES_DOCS,
-    "bigram_next_token_acc": SQL_BIGRAM_NEXT_TOKEN_ACC,
-    "share_of_parent_revenue": SQL_SHARE_OF_PARENT_REVENUE,
-    "price_band_clusters": SQL_PRICE_BAND_CLUSTERS,
-    "fd_audit_lineitem": SQL_FD_AUDIT_LINEITEM,
-    "trending_event_types": SQL_TRENDING_EVENT_TYPES,
-    "trimmed_mean_value": SQL_TRIMMED_MEAN_VALUE,
-    "conformal_naive_width": SQL_CONFORMAL_NAIVE_WIDTH,
-    "ma_crossover_daily": SQL_MA_CROSSOVER_DAILY,
-    "weighted_jaccard_sources": SQL_WEIGHTED_JACCARD_SOURCES,
-    "corr_qty_revenue": SQL_CORR_QTY_REVENUE,
-    "autocorr_lag7_daily": SQL_AUTOCORR_LAG7_DAILY,
-    "cross_source_dups": SQL_CROSS_SOURCE_DUPS,
-    "ess_doc_weights": SQL_ESS_DOC_WEIGHTS,
-    "behavior_segments": SQL_BEHAVIOR_SEGMENTS,
-    "peak_concurrency_sessions": SQL_PEAK_CONCURRENCY_SESSIONS,
-    "abc_xyz_matrix": SQL_ABC_XYZ_MATRIX,
-    "sla_p95_ship_delay": SQL_SLA_P95_SHIP_DELAY,
-    "top_decile_revenue_share": SQL_TOP_DECILE_REVENUE_SHARE,
-    "xlsx_report_roundtrip": SQL_XLSX_ROUNDTRIP,
-    "csv_per_period_export": SQL_CSV_PER_PERIOD,
-    "json_dict_scan": SQL_JSON_DICT_SCAN,
-    "registry_upsert_state": SQL_REGISTRY_UPSERT,
-    "corpus_token_packing": SQL_TOKEN_PACKING,
-    "corpus_unigram_logprob": SQL_UNIGRAM_LOGPROB,
-    "corpus_dsir_resample": SQL_DSIR_RESAMPLE,
-    "quality_decile_stats": SQL_QUALITY_DECILES,
-    "source_quota_cap": SQL_SOURCE_QUOTA,
-    "funnel_events": SQL_FUNNEL,
-    "windowed_funnel_events": SQL_WINDOWED_FUNNEL,
-    "variant_json_extract": SQL_VARIANT_JSON_EXTRACT,
-    "cohort_retention_events": SQL_COHORT_RETENTION,
-    "text_token_counts": SQL_TOKEN_COUNTS,
-    "text_quality_scores": SQL_QUALITY_SCORES,
-    "text_lang_id": SQL_LANG_ID,
-    "doc_fingerprint": SQL_FINGERPRINT,
-    "dedup_exact_docs": SQL_DEDUP_EXACT,
-    "dedup_minhash_lsh_pairs": SQL_MINHASH_PAIRS,
-    "dedup_ngram_jaccard_pairs": SQL_NGRAM_JACCARD,
-    "dedup_ngram_prefix_filter": SQL_NGRAM_JACCARD,
-    "dedup_ngram_dfcap_pairs": SQL_NGRAM_DFCAP,
-    "dedup_simhash_fingerprints": SQL_SIMHASH,
-    "dedup_embedding_cosine_pairs": SQL_EMBED_COSINE_DEDUP,
-    "dedup_connected_components": SQL_CONNECTED_COMPONENTS.format(
-        minhash_sql=SQL_MINHASH_PAIRS
-    ),
-    "graph_pagerank_fixed_point": SQL_PAGERANK_FIXED_POINT,
-    "dedup_canonical_corpus": SQL_CANONICAL_CORPUS.format(
-        minhash_sql=SQL_MINHASH_PAIRS, dup_corpus_sql=_DUP_CORPUS_SQL
-    ),
-    "text_rolling_fingerprint": SQL_ROLLING_FINGERPRINT,
-    "text_chunking": SQL_TEXT_CHUNKING,
-    "text_pii_redaction": SQL_PII_REDACTION,
-    "text_vocab_topk": SQL_VOCAB_TOPK,
-    "text_winnow_fingerprints": SQL_WINNOW_FINGERPRINTS,
-    "text_winnow_overlap_pairs": SQL_WINNOW_OVERLAP,
-    "text_repetition_filter": SQL_REPETITION_FILTER,
-    "text_contamination_check": SQL_CONTAMINATION,
-    "text_tfidf_topk": SQL_TFIDF_TOPK,
-    "data_split_sample": SQL_SPLIT_SAMPLE,
-    "group_split_no_leakage": SQL_GROUP_SPLIT,
-    "jsonl_corpus_roundtrip": SQL_JSONL_ROUNDTRIP,
-    "scd2_customer_history": SQL_SCD2_HISTORY,
-    "embed_quantize_int8": SQL_EMBED_QUANTIZE,
-    "embed_quantized_rerank_topk": SQL_QUANTIZED_RERANK,
-    "streaming_pii_redaction": SQL_STREAMING_PII.format(
-        email=tx.PII_PATTERNS["email"],
-        ipv4=tx.PII_PATTERNS["ipv4"],
-        phone=tx.PII_PATTERNS["phone"],
-    ),
-    "corpus_dataset_card": SQL_DATASET_CARD.format(
-        repetition_sql=SQL_REPETITION_FILTER
-    ),
-    "embed_cosine_topk": SQL_COSINE_TOPK,
-    "embed_ivf_topk_label": SQL_IVF_TOPK,
-    "embed_ivf_kmeans_topk": SQL_KMEANS_IVF_TOPK,
-    "embed_pq_adc_topk": SQL_PQ_ADC_TOPK,
-    "embed_lsh_ann_topk": SQL_LSH_TOPK,
-    "approx_sketches_events": SQL_APPROX_SKETCHES,
-    "embed_ann_recall": SQL_ANN_RECALL,
-    "multimodal_payload_meta": SQL_PAYLOAD_META,
-    "fuzzy_normalize_fold": SQL_NORMALIZE_FOLD,
-    "fuzzy_resolve_blocked": SQL_FUZZY_RESOLVE_BLOCKED,
-    "rest_fanout_analytics": SQL_REST_FANOUT,
-    "rest_naomi_json_flatten": SQL_NAOMI_FLATTEN,
-    "salted_skew_join": SQL_SALTED_JOIN,
-    "streaming_exactly_once_dedup": SQL_STREAMING_DEDUP,
-    "streaming_dedup_within_watermark": SQL_STREAMING_DEDUP,
-    "streaming_foreach_batch_upsert": SQL_STREAMING_FOREACH_BATCH,
-    "streaming_corpus_chunking": SQL_STREAMING_CHUNKING,
-    "streaming_interval_join": SQL_STREAMING_INTERVAL_JOIN,
-    "streaming_session_windows": SQL_STREAMING_SESSION_WINDOWS,
-    "streaming_stateful_totals": SQL_STREAMING_STATEFUL_TOTALS,
-    "streaming_static_enrich": SQL_STREAMING_STATIC_ENRICH,
-    "gap_fill_locf_hourly": SQL_GAP_FILL_LOCF,
-    "bucketed_colocated_join": SQL_BUCKETED_JOIN,
-    "llm_corpus_prep": SQL_CORPUS_PREP,
-    "spectrum_csv_scan": SQL_SPECTRUM_CSV,
-    "partitioned_parquet_pruning": SQL_PARTITION_PRUNING,
-    "zorder_clustered_scan": SQL_ZORDER_SCAN,
-    "dedup_semantic_clusters": SQL_SEMANTIC_DEDUP,
-    "dedup_semantic_sampled_trainer": SQL_SEMANTIC_DEDUP_SAMPLED,
-    "text_line_dedup": SQL_LINE_DEDUP,
-    "text_duplicate_ngram_spans": SQL_DUP_NGRAM_SPANS,
-    "sketch_countmin_tokens": SQL_COUNTMIN_TOKENS,
-    "graph_triangle_count_parts": SQL_TRIANGLE_COUNT,
-    "data_kfold_assignment": SQL_KFOLD_ASSIGNMENT,
-    "text_bm25_topk": SQL_BM25_TOPK,
-    "sketch_bloom_membership": SQL_BLOOM_MEMBERSHIP,
-    "profile_winsorized_stats": SQL_WINSORIZED_STATS,
-    "profile_robust_outliers": SQL_ROBUST_OUTLIERS,
-    "sliding_window_events": SQL_SLIDING_WINDOW,
-    "event_transition_matrix": SQL_EVENT_TRANSITIONS,
-    "text_token_diversity": SQL_TOKEN_DIVERSITY,
-    "text_url_canonicalize": SQL_URL_CANONICALIZE,
-    "dedup_incremental_batch": SQL_INCREMENTAL_DEDUP,
-    "corpus_shuffle_shards": SQL_SHUFFLE_SHARDS,
-    "orc_source_roundtrip": SQL_ORC_ROUNDTRIP,
-    "xml_source_roundtrip": SQL_XML_ROUNDTRIP,
-    "binaryfile_blob_ingest": SQL_BINARYFILE_INGEST,
-    "sql_ddl_managed_table": SQL_DDL_MANAGED_TABLE,
-    "dynamic_partition_overwrite": SQL_DYNAMIC_PARTITION_OVERWRITE,
-    "dataset_diff_audit": SQL_DATASET_DIFF,
-    "compaction_plan_bins": SQL_COMPACTION_PLAN,
-    "text_clean_corpus": SQL_CLEAN_CORPUS_TEXT,
-    "user_event_sequences": SQL_USER_EVENT_SEQUENCES,
-    "trailing_window_features": SQL_TRAILING_WINDOW,
-    "corpus_mixture_sample": SQL_MIXTURE_SAMPLE,
-    "asof_join_two_table": SQL_ASOF_JOIN_ORDERS,
-    "embed_mean_pool": SQL_MEAN_POOL,
-    "profile_numeric_histogram": SQL_NUMERIC_HISTOGRAM,
-    "profile_completeness": SQL_COMPLETENESS_PROFILE,
-    # streaming result == batch tumbling aggregation over the same file
-    "streaming_tumbling_counts": """
+# streaming result == batch tumbling aggregation over the same file
+SQL_STREAMING_TUMBLING_COUNTS = """
 SELECT event_type, date_trunc('hour', ts) AS window_start,
        count(*) AS n_events,
        CAST(SUM(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS sum_value
 FROM events GROUP BY 1, 2
-""",
-    "multimodal_decode_stub": SQL_DECODE_STUB,
-    "python_datasource_scan": SQL_PYTHON_DATASOURCE,
-    "python_datasource_stream": SQL_PYTHON_DATASOURCE_STREAM,
-    "python_datasource_pstream": SQL_PYTHON_DATASOURCE_STREAM,
-    "multimodal_frame_decode": SQL_GIF_FRAME_DECODE,
-    "multimodal_gif_interlaced": SQL_GIF_INTERLACED,
-    "multimodal_scene_cuts": SQL_SCENE_CUTS,
-    "multimodal_shot_segments": SQL_SHOT_SEGMENTS,
-    "multimodal_audio_activity": SQL_AUDIO_ACTIVITY,
-    "streaming_frame_decode": SQL_STREAMING_FRAME_DECODE,
-    "multimodal_frame_sample": SQL_GIF_FRAME_SAMPLE,
-    "multimodal_audio_haar_bands": SQL_AUDIO_HAAR,
-    "multimodal_audio_decimate": SQL_AUDIO_DECIMATE,
-    "org_uuid5_ids": SQL_UUID5_IDS,
+"""
+
+
+ENTRIES: list[Entry] = [
+    ("streaming_outer_join_expiry",
+     _retry_stream_once(q_streaming_outer_join_expiry), SQL_STREAMING_OUTER_JOIN),
+    ("streaming_chained_windows",
+     _retry_stream_once(q_streaming_chained_windows), SQL_STREAMING_CHAINED_WINDOWS),
+    ("business_day_latency", q_business_day_latency, SQL_BUSINESS_DAY_LATENCY),
+    ("sketch_hll_grouped", q_hll_grouped, SQL_HLL_GROUPED),
+    ("layout_range_boundaries", q_range_boundaries, SQL_RANGE_BOUNDARIES),
+    ("coverage_set_orders", q_coverage_set, SQL_COVERAGE_SET),
+    ("seasonality_heatmap_events", q_seasonality_heatmap, SQL_SEASONALITY_HEATMAP),
+    ("nearest_event_probe", q_nearest_event_probe, SQL_NEAREST_EVENT_PROBE),
+    ("freshness_audit_events", q_freshness_audit, SQL_FRESHNESS_AUDIT),
+    ("multimodal_audio_framing_stub", q_audio_framing_stub, SQL_AUDIO_FRAMING_STUB),
+    ("multimodal_audio_decode", q_audio_decode, SQL_AUDIO_DECODE),
+    ("multimodal_audio_energy", q_audio_energy, SQL_AUDIO_ENERGY),
+    ("multimodal_image_phash", q_image_phash, SQL_IMAGE_PHASH),
+    ("multimodal_image_dhash", q_image_dhash, SQL_IMAGE_DHASH),
+    ("multimodal_phash_near_pairs", q_phash_near_pairs, SQL_PHASH_NEAR_PAIRS),
+    ("multimodal_phash_class_pairs", q_phash_class_pairs, SQL_PHASH_CLASS_PAIRS),
+    ("multimodal_crossmodal_neardup", q_crossmodal_neardup, SQL_CROSSMODAL_NEARDUP),
+    ("multimodal_crossmodal_clusters", q_crossmodal_clusters, SQL_CROSSMODAL_CLUSTERS),
+    ("multimodal_frame_class_pairs", q_frame_class_pairs, SQL_FRAME_CLASS_PAIRS),
+    ("warc_record_parse", q_warc_record_parse, SQL_WARC_RECORD_PARSE),
+    ("html_text_extract", q_html_text_extract, SQL_HTML_TEXT_EXTRACT),
+    ("robots_prefix_filter", q_robots_prefix_filter, SQL_ROBOTS_PREFIX_FILTER),
+    ("quality_linear_classifier",
+     q_quality_linear_classifier, SQL_QUALITY_LINEAR_CLASSIFIER),
+    ("crawl_frontier_schedule", q_crawl_frontier_schedule, SQL_CRAWL_FRONTIER_SCHEDULE),
+    ("url_pld_quota", q_url_pld_quota, SQL_URL_PLD_QUOTA),
+    ("streaming_warc_ingest",
+     _retry_stream_once(q_streaming_warc_ingest), SQL_STREAMING_WARC_INGEST),
+    ("record_linkage_fs", q_record_linkage_fs, SQL_RECORD_LINKAGE_FS),
+    ("record_linkage_fs_capped",
+     q_record_linkage_fs_capped, SQL_RECORD_LINKAGE_FS_CAPPED),
+    ("crawl_link_hostgraph", q_crawl_link_hostgraph, SQL_CRAWL_LINK_HOSTGRAPH),
+    ("multimodal_phash_clusters", q_phash_clusters, SQL_PHASH_CLUSTERS),
+    ("multimodal_media_router", q_media_router, SQL_MEDIA_ROUTER),
+    ("streaming_media_router",
+     _retry_stream_once(q_streaming_media_router), SQL_MEDIA_ROUTER),
+    ("streaming_frame_decode",
+     _retry_stream_once(q_streaming_frame_decode), SQL_STREAMING_FRAME_DECODE),
+    ("data_temporal_split_purged", q_temporal_split_purged, SQL_TEMPORAL_SPLIT),
+    ("corpus_gate_funnel", q_gate_funnel, SQL_GATE_FUNNEL),
+    ("text_stopword_matrix", q_stopword_matrix, SQL_STOPWORD_MATRIX),
+    ("streaming_update_mode_counts",
+     _retry_stream_once(q_streaming_update_mode), SQL_STREAMING_UPDATE_MODE),
+    ("pivot_multi_agg", q_pivot_multi_agg, SQL_PIVOT_MULTI_AGG),
+    ("sketch_kmv_setops", q_kmv_setops, SQL_KMV_SETOPS),
+    ("sketch_kmv_jaccard", q_kmv_jaccard, SQL_KMV_JACCARD),
+    ("data_stratified_exact_split",
+     q_stratified_exact_split, SQL_STRATIFIED_EXACT_SPLIT),
+    ("seasonal_index_dow", q_seasonal_index_dow, SQL_SEASONAL_INDEX_DOW),
+    ("text_heaps_law_curve", q_heaps_law_curve, SQL_HEAPS_LAW_CURVE),
+    ("key_candidate_audit", q_key_candidate_audit, SQL_KEY_CANDIDATE_AUDIT),
+    ("graph_kcore_peel", q_kcore_peel, SQL_KCORE_PEEL),
+    ("fuzzy_blocking_quality", q_blocking_quality, SQL_BLOCKING_QUALITY),
+    ("text_tokenizer_fertility", q_tokenizer_fertility, SQL_TOKENIZER_FERTILITY),
+    ("streaming_hll_distinct",
+     _retry_stream_once(q_streaming_hll_distinct), SQL_STREAMING_HLL),
+    ("sketch_histogram_quantiles", q_hist_quantile_sketch, SQL_HIST_QUANTILE),
+    ("sketch_hll_distinct", q_hll_distinct, SQL_HLL_DISTINCT),
+    ("graph_label_propagation", q_label_propagation, SQL_LABEL_PROPAGATION),
+    ("padding_waste_audit", q_padding_waste_audit, SQL_PADDING_WASTE),
+    ("temperature_mixture_alloc", q_temperature_mixture, SQL_TEMPERATURE_MIXTURE),
+    ("multimodal_resize_thumb", q_gif_resize_thumb, SQL_GIF_RESIZE),
+    ("bpe_encoded_symbols", q_bpe_encoded_symbols, SQL_BPE_ENCODED_SYMBOLS),
+    ("bpe_learn_merges", q_bpe_learn_merges, SQL_BPE_LEARN_MERGES),
+    ("dedup_minhash_eval", q_minhash_eval, SQL_MINHASH_EVAL),
+    ("split_leakage_audit", q_split_leakage_audit, SQL_SPLIT_LEAKAGE_AUDIT),
+    ("corpus_budget_select", q_corpus_budget_select, SQL_CORPUS_BUDGET_SELECT),
+    ("pii_risk_triage", q_pii_risk_triage, SQL_PII_RISK_TRIAGE),
+    ("vocab_coverage_curve", q_vocab_coverage_curve, SQL_VOCAB_COVERAGE_CURVE),
+    ("weighted_median_price", q_weighted_median, SQL_WEIGHTED_MEDIAN),
+    ("user_rfm_features", q_rfm_features, SQL_RFM),
+    ("event_linear_attribution", q_linear_attribution, SQL_LINEAR_ATTRIBUTION),
+    ("benford_price_profile", q_benford_profile, SQL_BENFORD),
+    ("text_ngram_containment", q_ngram_containment, SQL_NGRAM_CONTAINMENT),
+    ("join_key_skew_profile", q_key_skew_profile, SQL_KEY_SKEW),
+    ("embed_rrf_fusion", q_rrf_fusion, SQL_RRF_FUSION),
+    ("source_quantile_norm", q_rank_quantile_norm, SQL_RANK_QUANTILE_NORM),
+    ("corpus_curriculum_interleave",
+     q_curriculum_interleave, SQL_CURRICULUM_INTERLEAVE),
+    ("quality_length_rank_corr", q_rank_correlation, SQL_RANK_CORRELATION),
+    ("expectations_suite_lineitem", q_expectations_suite, SQL_EXPECTATIONS_SUITE),
+    ("fk_orphan_profile", q_fk_orphan_profile, SQL_FK_ORPHAN_PROFILE),
+    ("event_pattern_match", q_event_pattern_match, SQL_EVENT_PATTERN_MATCH),
+    ("grouped_ols_trend", q_grouped_ols, SQL_GROUPED_OLS),
+    ("contingency_chi2_profile", q_contingency_profile, SQL_CONTINGENCY),
+    ("conversion_latency_deciles", q_conversion_latency, SQL_CONVERSION_LATENCY),
+    ("event_cooccurrence_lift", q_cooccurrence_lift, SQL_COOCCURRENCE_LIFT),
+    ("incremental_agg_maintenance", q_incremental_agg, SQL_INCREMENTAL_AGG),
+    ("dynamic_partition_overwrite",
+     q_dynamic_partition_overwrite, SQL_DYNAMIC_PARTITION_OVERWRITE),
+    ("python_udtf_sentences", q_udtf_sentences, SQL_UDTF_SENTENCES),
+    ("pit_join_scd2_orders", q_pit_join, SQL_PIT_JOIN),
+    ("discount_share_wilson_ci", q_proportion_ci, SQL_PROPORTION_CI),
+    ("bpe_pair_topk", q_bpe_pairs, SQL_BPE_PAIRS),
+    ("streaming_windowed_topk",
+     _retry_stream_once(q_streaming_windowed_topk), SQL_STREAMING_WINDOWED_TOPK),
+    ("largest_remainder_proration", q_largest_remainder, SQL_LARGEST_REMAINDER),
+    ("k_anonymity_audit", q_k_anonymity, SQL_K_ANONYMITY),
+    ("interval_union_engagement", q_interval_union, SQL_INTERVAL_UNION),
+    ("rolling_wau_exact", q_rolling_wau, SQL_ROLLING_WAU),
+    ("group_median_impute", q_median_impute, SQL_MEDIAN_IMPUTE),
+    ("null_safe_join_histograms", q_null_safe_join, SQL_NULL_SAFE_JOIN),
+    ("collated_group_counts", q_collated_groups, SQL_COLLATED_GROUPS),
+    ("stable_global_row_ids", q_stable_row_ids, SQL_STABLE_ROW_IDS),
+    ("user_value_trailing_ema", q_trailing_ema, SQL_TRAILING_EMA),
+    ("churn_label_generation", q_churn_labels, SQL_CHURN_LABELS),
+    ("loo_target_encoding", q_loo_target_encoding, SQL_LOO_TARGET_ENCODING),
+    ("cdc_chunk_dedup", q_cdc_chunk_dedup, SQL_CDC_CHUNK_DEDUP),
+    ("ab_test_ztest_purchase", q_ab_test_ztest, SQL_AB_TEST_ZTEST),
+    ("class_balance_weights", q_class_balance_weights, SQL_CLASS_BALANCE),
+    ("interval_overlap_join", q_interval_overlap_join, SQL_INTERVAL_OVERLAP_JOIN),
+    ("sequence_bigram_support", q_sequence_bigram_support, SQL_SEQUENCE_BIGRAM_SUPPORT),
+    ("calibration_bins", q_calibration_bins, SQL_CALIBRATION_BINS),
+    ("dedup_sorted_neighborhood", q_sorted_neighborhood, SQL_SORTED_NEIGHBORHOOD),
+    ("ohlc_value_bars", q_ohlc_value_bars, SQL_OHLC_VALUE_BARS),
+    ("grouped_mode_event", q_grouped_mode_event, SQL_GROUPED_MODE_EVENT),
+    ("twap_user_day", q_twap_user_day, SQL_TWAP_USER_DAY),
+    ("segmented_running_total", q_segmented_running_total, SQL_SEGMENTED_RUNNING_TOTAL),
+    ("weighted_priority_sample",
+     q_weighted_priority_sample, SQL_WEIGHTED_PRIORITY_SAMPLE),
+    ("l_diversity_customers", q_l_diversity_customers, SQL_L_DIVERSITY_CUSTOMERS),
+    ("link_prediction_suppliers",
+     q_link_prediction_suppliers, SQL_LINK_PREDICTION_SUPPLIERS),
+    ("fifo_match_returns", q_fifo_match_returns, SQL_FIFO_MATCH_RETURNS),
+    ("gini_profile_orders", q_gini_profile_orders, SQL_GINI_PROFILE_ORDERS),
+    ("roc_auc_value_purchase", q_roc_auc_value_purchase, SQL_ROC_AUC_VALUE_PURCHASE),
+    ("zscore_outliers_dow", q_zscore_outliers_dow, SQL_ZSCORE_OUTLIERS_DOW),
+    ("feature_hash_customers", q_feature_hash_customers, SQL_FEATURE_HASH_CUSTOMERS),
+    ("km_signup_to_purchase", q_km_signup_to_purchase, SQL_KM_SIGNUP_TO_PURCHASE),
+    ("mann_kendall_daily", q_mann_kendall_daily, SQL_MANN_KENDALL_DAILY),
+    ("cusum_change_daily", q_cusum_change_daily, SQL_CUSUM_CHANGE_DAILY),
+    ("theil_sen_daily", q_theil_sen_daily, SQL_THEIL_SEN_DAILY),
+    ("abc_parts_by_brand", q_abc_parts_by_brand, SQL_ABC_PARTS_BY_BRAND),
+    ("rolling_band_daily", q_rolling_band_daily, SQL_ROLLING_BAND_DAILY),
+    ("top_session_paths", q_top_session_paths, SQL_TOP_SESSION_PATHS),
+    ("golden_record_users", q_golden_record_users, SQL_GOLDEN_RECORD_USERS),
+    ("cohort_ltv_events", q_cohort_ltv_events, SQL_COHORT_LTV_EVENTS),
+    ("seasonal_naive_mdape", q_seasonal_naive_mdape, SQL_SEASONAL_NAIVE_MDAPE),
+    ("audience_overlap_events", q_audience_overlap_events, SQL_AUDIENCE_OVERLAP_EVENTS),
+    ("attribution_position_based",
+     q_attribution_position_based, SQL_ATTRIBUTION_POSITION_BASED),
+    ("debounce_clicks", q_debounce_clicks, SQL_DEBOUNCE_CLICKS),
+    ("gap_fill_interp_daily", q_gap_fill_interp_daily, SQL_GAP_FILL_INTERP_DAILY),
+    ("dataset_fingerprints", q_dataset_fingerprints, SQL_DATASET_FINGERPRINTS),
+    ("ks_value_user_parity", q_ks_value_user_parity, SQL_KS_VALUE_USER_PARITY),
+    ("tv_drift_user_parity", q_tv_drift_user_parity, SQL_TV_DRIFT_USER_PARITY),
+    ("pvm_brand_yoy", q_pvm_brand_yoy, SQL_PVM_BRAND_YOY),
+    ("lump_rare_part_types", q_lump_rare_part_types, SQL_LUMP_RARE_PART_TYPES),
+    ("embed_prefix_rerank_topk", q_embed_prefix_rerank, SQL_EMBED_PREFIX_RERANK),
+    ("embed_centroid_confusion",
+     q_embed_centroid_confusion, SQL_EMBED_CENTROID_CONFUSION),
+    ("rake_keyphrases_docs", q_rake_keyphrases_docs, SQL_RAKE_KEYPHRASES_DOCS),
+    ("bigram_next_token_acc", q_bigram_next_token_acc, SQL_BIGRAM_NEXT_TOKEN_ACC),
+    ("share_of_parent_revenue", q_share_of_parent_revenue, SQL_SHARE_OF_PARENT_REVENUE),
+    ("price_band_clusters", q_price_band_clusters, SQL_PRICE_BAND_CLUSTERS),
+    ("fd_audit_lineitem", q_fd_audit_lineitem, SQL_FD_AUDIT_LINEITEM),
+    ("trending_event_types", q_trending_event_types, SQL_TRENDING_EVENT_TYPES),
+    ("trimmed_mean_value", q_trimmed_mean_value, SQL_TRIMMED_MEAN_VALUE),
+    ("conformal_naive_width", q_conformal_naive_width, SQL_CONFORMAL_NAIVE_WIDTH),
+    ("ma_crossover_daily", q_ma_crossover_daily, SQL_MA_CROSSOVER_DAILY),
+    ("weighted_jaccard_sources",
+     q_weighted_jaccard_sources, SQL_WEIGHTED_JACCARD_SOURCES),
+    ("corr_qty_revenue", q_corr_qty_revenue, SQL_CORR_QTY_REVENUE),
+    ("autocorr_lag7_daily", q_autocorr_lag7_daily, SQL_AUTOCORR_LAG7_DAILY),
+    ("cross_source_dups", q_cross_source_dups, SQL_CROSS_SOURCE_DUPS),
+    ("ess_doc_weights", q_ess_doc_weights, SQL_ESS_DOC_WEIGHTS),
+    ("behavior_segments", q_behavior_segments, SQL_BEHAVIOR_SEGMENTS),
+    ("peak_concurrency_sessions",
+     q_peak_concurrency_sessions, SQL_PEAK_CONCURRENCY_SESSIONS),
+    ("abc_xyz_matrix", q_abc_xyz_matrix, SQL_ABC_XYZ_MATRIX),
+    ("sla_p95_ship_delay", q_sla_p95_ship_delay, SQL_SLA_P95_SHIP_DELAY),
+    ("top_decile_revenue_share",
+     q_top_decile_revenue_share, SQL_TOP_DECILE_REVENUE_SHARE),
+    ("xlsx_report_roundtrip", q_xlsx_report_roundtrip, SQL_XLSX_ROUNDTRIP),
+    ("csv_per_period_export", q_csv_per_period_export, SQL_CSV_PER_PERIOD),
+    ("json_dict_scan", q_json_dict_scan, SQL_JSON_DICT_SCAN),
+    ("registry_upsert_state", q_registry_upsert_state, SQL_REGISTRY_UPSERT),
+    ("corpus_token_packing", q_token_packing, SQL_TOKEN_PACKING),
+    ("corpus_unigram_logprob", q_unigram_logprob, SQL_UNIGRAM_LOGPROB),
+    ("corpus_dsir_resample", q_dsir_resample, SQL_DSIR_RESAMPLE),
+    ("quality_decile_stats", q_quality_deciles, SQL_QUALITY_DECILES),
+    ("source_quota_cap", q_source_quota, SQL_SOURCE_QUOTA),
+    ("funnel_events", q_funnel, SQL_FUNNEL),
+    ("windowed_funnel_events", q_windowed_funnel, SQL_WINDOWED_FUNNEL),
+    ("variant_json_extract", q_variant_json_extract, SQL_VARIANT_JSON_EXTRACT),
+    ("cohort_retention_events", q_cohort_retention, SQL_COHORT_RETENTION),
+    ("text_token_counts", q_token_counts, SQL_TOKEN_COUNTS),
+    ("text_quality_scores", q_quality_scores, SQL_QUALITY_SCORES),
+    ("text_lang_id", q_lang_id, SQL_LANG_ID),
+    ("doc_fingerprint", q_fingerprint, SQL_FINGERPRINT),
+    ("dedup_exact_docs", q_dedup_exact, SQL_DEDUP_EXACT),
+    ("dedup_minhash_lsh_pairs", q_minhash_pairs, SQL_MINHASH_PAIRS),
+    ("dedup_ngram_jaccard_pairs", q_ngram_jaccard, SQL_NGRAM_JACCARD),
+    ("dedup_ngram_prefix_filter", q_ngram_prefix_filter, SQL_NGRAM_JACCARD),
+    ("dedup_ngram_dfcap_pairs", q_ngram_dfcap, SQL_NGRAM_DFCAP),
+    ("dedup_simhash_fingerprints", q_simhash, SQL_SIMHASH),
+    ("dedup_embedding_cosine_pairs", q_embedding_cosine_dedup, SQL_EMBED_COSINE_DEDUP),
+    ("dedup_connected_components", q_connected_components,
+     SQL_CONNECTED_COMPONENTS.format(minhash_sql=SQL_MINHASH_PAIRS)),
+    ("graph_pagerank_fixed_point", q_pagerank_fixed_point, SQL_PAGERANK_FIXED_POINT),
+    ("dedup_canonical_corpus", q_canonical_corpus,
+     SQL_CANONICAL_CORPUS.format(minhash_sql=SQL_MINHASH_PAIRS,
+                                 dup_corpus_sql=_DUP_CORPUS_SQL)),
+    ("text_rolling_fingerprint", q_rolling_fingerprint, SQL_ROLLING_FINGERPRINT),
+    ("text_chunking", q_text_chunking, SQL_TEXT_CHUNKING),
+    ("text_pii_redaction", q_pii_redaction, SQL_PII_REDACTION),
+    ("text_vocab_topk", q_vocab_topk, SQL_VOCAB_TOPK),
+    ("text_winnow_fingerprints", q_winnow_fingerprints, SQL_WINNOW_FINGERPRINTS),
+    ("text_winnow_overlap_pairs", q_winnow_overlap_pairs, SQL_WINNOW_OVERLAP),
+    ("text_repetition_filter", q_repetition_filter, SQL_REPETITION_FILTER),
+    ("text_contamination_check", q_contamination_check, SQL_CONTAMINATION),
+    ("text_tfidf_topk", q_tfidf_topk, SQL_TFIDF_TOPK),
+    ("data_split_sample", q_split_sample, SQL_SPLIT_SAMPLE),
+    ("group_split_no_leakage", q_group_split, SQL_GROUP_SPLIT),
+    ("jsonl_corpus_roundtrip", q_jsonl_roundtrip, SQL_JSONL_ROUNDTRIP),
+    ("scd2_customer_history", q_scd2_history, SQL_SCD2_HISTORY),
+    ("embed_quantize_int8", q_embed_quantize, SQL_EMBED_QUANTIZE),
+    ("embed_quantized_rerank_topk", q_quantized_rerank, SQL_QUANTIZED_RERANK),
+    ("streaming_pii_redaction", _retry_stream_once(q_streaming_pii),
+     SQL_STREAMING_PII.format(**tx.PII_PATTERNS)),
+    ("corpus_dataset_card", q_dataset_card,
+     SQL_DATASET_CARD.format(repetition_sql=SQL_REPETITION_FILTER)),
+    ("embed_cosine_topk", q_cosine_topk, SQL_COSINE_TOPK),
+    ("embed_ivf_topk_label", q_ivf_topk, SQL_IVF_TOPK),
+    ("embed_lsh_ann_topk", q_lsh_topk, SQL_LSH_TOPK),
+    ("embed_ivf_kmeans_topk", q_kmeans_ivf_topk, SQL_KMEANS_IVF_TOPK),
+    ("embed_pq_adc_topk", q_pq_adc_topk, SQL_PQ_ADC_TOPK),
+    ("embed_ann_recall", q_ann_recall, SQL_ANN_RECALL),
+    ("multimodal_payload_meta", q_payload_meta, SQL_PAYLOAD_META),
+    ("multimodal_decode_stub", q_decode_media_stub, SQL_DECODE_STUB),
+    ("python_datasource_scan", q_python_datasource, SQL_PYTHON_DATASOURCE),
+    ("python_datasource_stream",
+     _retry_stream_once(q_python_datasource_stream), SQL_PYTHON_DATASOURCE_STREAM),
+    ("python_datasource_pstream",
+     _retry_stream_once(q_python_datasource_pstream), SQL_PYTHON_DATASOURCE_STREAM),
+    ("multimodal_frame_decode", q_gif_frame_decode, SQL_GIF_FRAME_DECODE),
+    ("multimodal_gif_interlaced", q_gif_interlaced, SQL_GIF_INTERLACED),
+    ("multimodal_scene_cuts", q_scene_cuts, SQL_SCENE_CUTS),
+    ("multimodal_shot_segments", q_shot_segments, SQL_SHOT_SEGMENTS),
+    ("multimodal_audio_activity", q_audio_activity, SQL_AUDIO_ACTIVITY),
+    ("multimodal_frame_sample", q_gif_frame_sample, SQL_GIF_FRAME_SAMPLE),
+    ("multimodal_audio_haar_bands", q_audio_haar_bands, SQL_AUDIO_HAAR),
+    ("multimodal_audio_decimate", q_audio_decimate, SQL_AUDIO_DECIMATE),
+    ("fuzzy_normalize_fold", q_normalize_fold, SQL_NORMALIZE_FOLD),
     # the typo-mangle makes the difflib winner + score provable (see
-    # q_fuzzy_resolve docstring) — no rows-only entries remain
-    "fuzzy_resolve_suppliers": SQL_FUZZY_RESOLVE_SUPPLIERS,
-}
+    # q_fuzzy_resolve docstring)
+    ("fuzzy_resolve_suppliers", q_fuzzy_resolve, SQL_FUZZY_RESOLVE_SUPPLIERS),
+    ("fuzzy_resolve_blocked", q_fuzzy_resolve_blocked, SQL_FUZZY_RESOLVE_BLOCKED),
+    ("org_uuid5_ids", q_uuid5_ids, SQL_UUID5_IDS),
+    ("rest_fanout_analytics", q_rest_fanout_analytics, SQL_REST_FANOUT),
+    ("rest_naomi_json_flatten", q_rest_naomi_flatten, SQL_NAOMI_FLATTEN),
+    ("salted_skew_join", q_salted_join, SQL_SALTED_JOIN),
+    ("bucketed_colocated_join", q_bucketed_join, SQL_BUCKETED_JOIN),
+    ("llm_corpus_prep", q_corpus_prep, SQL_CORPUS_PREP),
+    ("spectrum_csv_scan", q_spectrum_csv, SQL_SPECTRUM_CSV),
+    ("partitioned_parquet_pruning", q_partition_pruning, SQL_PARTITION_PRUNING),
+    ("zorder_clustered_scan", q_zorder_scan, SQL_ZORDER_SCAN),
+    ("dedup_semantic_clusters", q_semantic_dedup, SQL_SEMANTIC_DEDUP),
+    ("dedup_semantic_sampled_trainer",
+     q_semantic_dedup_sampled, SQL_SEMANTIC_DEDUP_SAMPLED),
+    ("text_line_dedup", q_line_dedup, SQL_LINE_DEDUP),
+    ("text_url_canonicalize", q_url_canonicalize, SQL_URL_CANONICALIZE),
+    ("text_duplicate_ngram_spans", q_duplicate_ngram_spans, SQL_DUP_NGRAM_SPANS),
+    ("sketch_countmin_tokens", q_countmin_tokens, SQL_COUNTMIN_TOKENS),
+    ("graph_triangle_count_parts", q_triangle_count, SQL_TRIANGLE_COUNT),
+    ("data_kfold_assignment", q_kfold_assignment, SQL_KFOLD_ASSIGNMENT),
+    ("text_bm25_topk", q_bm25_topk, SQL_BM25_TOPK),
+    ("sketch_bloom_membership", q_bloom_membership, SQL_BLOOM_MEMBERSHIP),
+    ("profile_winsorized_stats", q_winsorized_stats, SQL_WINSORIZED_STATS),
+    ("profile_robust_outliers", q_robust_outliers, SQL_ROBUST_OUTLIERS),
+    ("sliding_window_events", q_sliding_window, SQL_SLIDING_WINDOW),
+    ("event_transition_matrix", q_event_transitions, SQL_EVENT_TRANSITIONS),
+    ("text_token_diversity", q_token_diversity, SQL_TOKEN_DIVERSITY),
+    ("dedup_incremental_batch", q_incremental_dedup, SQL_INCREMENTAL_DEDUP),
+    ("corpus_shuffle_shards", q_shuffle_shards, SQL_SHUFFLE_SHARDS),
+    ("orc_source_roundtrip", q_orc_roundtrip, SQL_ORC_ROUNDTRIP),
+    ("xml_source_roundtrip", q_xml_roundtrip, SQL_XML_ROUNDTRIP),
+    ("binaryfile_blob_ingest", q_binaryfile_ingest, SQL_BINARYFILE_INGEST),
+    ("sql_ddl_managed_table", q_sql_ddl_managed_table, SQL_DDL_MANAGED_TABLE),
+    ("dataset_diff_audit", q_dataset_diff, SQL_DATASET_DIFF),
+    ("compaction_plan_bins", q_compaction_plan, SQL_COMPACTION_PLAN),
+    ("text_clean_corpus", q_clean_corpus_text, SQL_CLEAN_CORPUS_TEXT),
+    ("user_event_sequences", q_user_event_sequences, SQL_USER_EVENT_SEQUENCES),
+    ("trailing_window_features", q_trailing_window_features, SQL_TRAILING_WINDOW),
+    ("corpus_mixture_sample", q_mixture_sample, SQL_MIXTURE_SAMPLE),
+    ("asof_join_two_table", q_asof_join_orders, SQL_ASOF_JOIN_ORDERS),
+    ("embed_mean_pool", q_mean_pool, SQL_MEAN_POOL),
+    ("profile_numeric_histogram", q_numeric_histogram, SQL_NUMERIC_HISTOGRAM),
+    ("profile_completeness", q_completeness_profile, SQL_COMPLETENESS_PROFILE),
+    ("approx_sketches_events", q_approx_sketches, SQL_APPROX_SKETCHES),
+    ("streaming_tumbling_counts",
+     _retry_stream_once(q_streaming_tumbling), SQL_STREAMING_TUMBLING_COUNTS),
+    ("streaming_exactly_once_dedup",
+     _retry_stream_once(q_streaming_dedup), SQL_STREAMING_DEDUP),
+    ("streaming_dedup_within_watermark",
+     _retry_stream_once(q_streaming_dedup_within_watermark), SQL_STREAMING_DEDUP),
+    ("streaming_foreach_batch_upsert",
+     _retry_stream_once(q_streaming_foreach_batch_upsert), SQL_STREAMING_FOREACH_BATCH),
+    ("streaming_corpus_chunking",
+     _retry_stream_once(q_streaming_chunking), SQL_STREAMING_CHUNKING),
+    ("streaming_interval_join",
+     _retry_stream_once(q_streaming_interval_join), SQL_STREAMING_INTERVAL_JOIN),
+    ("streaming_session_windows",
+     _retry_stream_once(q_streaming_session_windows), SQL_STREAMING_SESSION_WINDOWS),
+    ("streaming_stateful_totals",
+     _retry_stream_once(q_streaming_stateful_totals), SQL_STREAMING_STATEFUL_TOTALS),
+    ("streaming_static_enrich",
+     _retry_stream_once(q_streaming_static_enrich), SQL_STREAMING_STATIC_ENRICH),
+    ("gap_fill_locf_hourly", q_gap_fill_locf, SQL_GAP_FILL_LOCF),
+]

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hiv_data_integration_spark.battery import QueryFn, dsum, tbl
+from hiv_data_integration_spark.battery import Entry, dsum, tbl
 
 # ---------------------------------------------------------------------------
 # Multi-dimensional aggregation
@@ -554,7 +554,7 @@ def q_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     one per-order aggregate (distinct suppliers, distinct LATE
     suppliers) joined back onto the late rows — a late row qualifies
     iff ``n_supp >= 2 AND n_late_supp = 1`` (it is then necessarily the
-    only late supplier). The ORACLE keeps the textbook correlated
+    only late supplier). The oracle keeps the textbook correlated
     EXISTS / NOT EXISTS formulation, so the hash check proves the
     rewrite equivalent row-for-row. Spark's own subquery decorrelation
     would instead expand the derived table three times (CTEs inline);
@@ -1796,94 +1796,49 @@ def q_sql_range_value_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_SQL_RANGE_VALUE_FRAME = _RANGE_VALUE_FRAME_SQL.format(table="orders")
 
 
-SQL2_QUERIES: dict[str, QueryFn] = {
-    "sql_range_value_frame": q_sql_range_value_frame,
-    "sql_group_by_all": q_sql_group_by_all,
-    "sql_named_window_clause": q_sql_named_window,
-    "sql_pivot_clause": q_sql_pivot_clause,
-    "sql_unpivot_clause": q_sql_unpivot_clause,
-    "rollup_lineitem": q_rollup,
-    "cube_orders": q_cube,
-    "grouping_sets_orders": q_grouping_sets,
-    "count_distinct_parts": q_count_distinct,
-    "grouped_quantiles": q_quantiles,
-    "intersect_nations": q_intersect,
-    "except_balance_buckets": q_except,
-    "range_join_events": q_range_join,
-    "asof_last_event_per_day": q_asof_last_event_per_day,
-    "string_agg_nations": q_string_agg,
-    "correlated_subquery_balance": q_correlated_subquery,
-    "embed_vector_norms": q_vector_norms,
-    "skyline_suppliers": q_skyline,
-    "recursive_org_rollup": q_recursive_closure,
-    "window_distribution_funcs": q_window_distribution,
-    "shipping_priority_top10": q_shipping_priority,
-    "region_local_supplier_revenue": q_region_revenue,
-    "large_order_customers": q_large_order_customers,
-    "waiting_supplier_ranking": q_waiting_suppliers,
-    "inactive_above_avg_balance": q_inactive_above_avg,
-    "promo_revenue_share": q_promo_revenue_share,
-    "lateral_topn_orders": q_lateral_topn,
-    "nation_volume_shipping": q_nation_volume_shipping,
-    "market_share_by_year": q_market_share,
-    "returned_item_revenue": q_returned_item_revenue,
-    "order_count_distribution": q_order_count_distribution,
-    "top_revenue_supplier": q_top_revenue_supplier,
-    "small_quantity_revenue": q_small_quantity_revenue,
-    "disjunctive_part_filter": q_disjunctive_part_filter,
-    "min_cost_supplier_part": q_min_cost_supplier,
-    "order_priority_check": q_order_priority_check,
-    "forecast_revenue_change": q_forecast_revenue_change,
-    "product_type_profit": q_product_type_profit,
-    "important_part_value": q_important_part_value,
-    "late_shipment_priority": q_late_shipment_priority,
-    "supplier_count_by_part": q_supplier_count_by_part,
-    "promotion_qty_suppliers": q_promotion_qty_suppliers,
-    "revenue_mom_growth": q_revenue_mom_growth,
-}
-
-SQL2_ORACLE: dict[str, str] = {
-    "sql_range_value_frame": SQL_SQL_RANGE_VALUE_FRAME,
-    "sql_group_by_all": SQL_SQL_GROUP_BY_ALL,
-    "sql_named_window_clause": SQL_SQL_NAMED_WINDOW,
-    "sql_pivot_clause": SQL_SQL_PIVOT_CLAUSE,
-    "sql_unpivot_clause": SQL_SQL_UNPIVOT_CLAUSE,
-    "rollup_lineitem": SQL_ROLLUP,
-    "cube_orders": SQL_CUBE,
-    "grouping_sets_orders": SQL_GROUPING_SETS,
-    "count_distinct_parts": SQL_COUNT_DISTINCT,
-    "grouped_quantiles": SQL_QUANTILES,
-    "intersect_nations": SQL_INTERSECT,
-    "except_balance_buckets": SQL_EXCEPT,
-    "range_join_events": SQL_RANGE_JOIN,
-    "asof_last_event_per_day": SQL_ASOF,
-    "string_agg_nations": SQL_STRING_AGG,
-    "correlated_subquery_balance": SQL_CORRELATED,
-    "embed_vector_norms": SQL_VECTOR_NORMS,
-    "skyline_suppliers": SQL_SKYLINE,
-    "recursive_org_rollup": SQL_RECURSIVE_CLOSURE,
-    "window_distribution_funcs": SQL_WINDOW_DISTRIBUTION,
-    "shipping_priority_top10": SQL_SHIPPING_PRIORITY,
-    "region_local_supplier_revenue": SQL_REGION_REVENUE,
-    "large_order_customers": SQL_LARGE_ORDER_CUSTOMERS,
-    "waiting_supplier_ranking": SQL_WAITING_SUPPLIERS,
-    "inactive_above_avg_balance": SQL_INACTIVE_ABOVE_AVG,
-    "promo_revenue_share": SQL_PROMO_REVENUE_SHARE,
-    "lateral_topn_orders": SQL_LATERAL_TOPN,
-    "nation_volume_shipping": SQL_NATION_VOLUME,
-    "market_share_by_year": SQL_MARKET_SHARE,
-    "returned_item_revenue": SQL_RETURNED_ITEM_REVENUE,
-    "order_count_distribution": SQL_ORDER_COUNT_DISTRIBUTION,
-    "top_revenue_supplier": SQL_TOP_REVENUE_SUPPLIER,
-    "small_quantity_revenue": SQL_SMALL_QUANTITY_REVENUE,
-    "disjunctive_part_filter": SQL_DISJUNCTIVE_PART_FILTER,
-    "min_cost_supplier_part": SQL_MIN_COST_SUPPLIER,
-    "order_priority_check": SQL_ORDER_PRIORITY_CHECK,
-    "forecast_revenue_change": SQL_FORECAST_REVENUE_CHANGE,
-    "product_type_profit": SQL_PRODUCT_TYPE_PROFIT,
-    "important_part_value": SQL_IMPORTANT_PART_VALUE,
-    "late_shipment_priority": SQL_LATE_SHIPMENT_PRIORITY,
-    "supplier_count_by_part": SQL_SUPPLIER_COUNT_BY_PART,
-    "promotion_qty_suppliers": SQL_PROMOTION_QTY_SUPPLIERS,
-    "revenue_mom_growth": SQL_REVENUE_MOM_GROWTH,
-}
+ENTRIES: list[Entry] = [
+    ("sql_range_value_frame", q_sql_range_value_frame, SQL_SQL_RANGE_VALUE_FRAME),
+    ("sql_group_by_all", q_sql_group_by_all, SQL_SQL_GROUP_BY_ALL),
+    ("sql_named_window_clause", q_sql_named_window, SQL_SQL_NAMED_WINDOW),
+    ("sql_pivot_clause", q_sql_pivot_clause, SQL_SQL_PIVOT_CLAUSE),
+    ("sql_unpivot_clause", q_sql_unpivot_clause, SQL_SQL_UNPIVOT_CLAUSE),
+    ("rollup_lineitem", q_rollup, SQL_ROLLUP),
+    ("cube_orders", q_cube, SQL_CUBE),
+    ("grouping_sets_orders", q_grouping_sets, SQL_GROUPING_SETS),
+    ("count_distinct_parts", q_count_distinct, SQL_COUNT_DISTINCT),
+    ("grouped_quantiles", q_quantiles, SQL_QUANTILES),
+    ("intersect_nations", q_intersect, SQL_INTERSECT),
+    ("except_balance_buckets", q_except, SQL_EXCEPT),
+    ("range_join_events", q_range_join, SQL_RANGE_JOIN),
+    ("asof_last_event_per_day", q_asof_last_event_per_day, SQL_ASOF),
+    ("string_agg_nations", q_string_agg, SQL_STRING_AGG),
+    ("correlated_subquery_balance", q_correlated_subquery, SQL_CORRELATED),
+    ("embed_vector_norms", q_vector_norms, SQL_VECTOR_NORMS),
+    ("skyline_suppliers", q_skyline, SQL_SKYLINE),
+    ("recursive_org_rollup", q_recursive_closure, SQL_RECURSIVE_CLOSURE),
+    ("window_distribution_funcs", q_window_distribution, SQL_WINDOW_DISTRIBUTION),
+    ("shipping_priority_top10", q_shipping_priority, SQL_SHIPPING_PRIORITY),
+    ("region_local_supplier_revenue", q_region_revenue, SQL_REGION_REVENUE),
+    ("large_order_customers", q_large_order_customers, SQL_LARGE_ORDER_CUSTOMERS),
+    ("waiting_supplier_ranking", q_waiting_suppliers, SQL_WAITING_SUPPLIERS),
+    ("inactive_above_avg_balance", q_inactive_above_avg, SQL_INACTIVE_ABOVE_AVG),
+    ("promo_revenue_share", q_promo_revenue_share, SQL_PROMO_REVENUE_SHARE),
+    ("lateral_topn_orders", q_lateral_topn, SQL_LATERAL_TOPN),
+    ("nation_volume_shipping", q_nation_volume_shipping, SQL_NATION_VOLUME),
+    ("market_share_by_year", q_market_share, SQL_MARKET_SHARE),
+    ("returned_item_revenue", q_returned_item_revenue, SQL_RETURNED_ITEM_REVENUE),
+    ("order_count_distribution",
+     q_order_count_distribution, SQL_ORDER_COUNT_DISTRIBUTION),
+    ("top_revenue_supplier", q_top_revenue_supplier, SQL_TOP_REVENUE_SUPPLIER),
+    ("small_quantity_revenue", q_small_quantity_revenue, SQL_SMALL_QUANTITY_REVENUE),
+    ("disjunctive_part_filter", q_disjunctive_part_filter, SQL_DISJUNCTIVE_PART_FILTER),
+    ("min_cost_supplier_part", q_min_cost_supplier, SQL_MIN_COST_SUPPLIER),
+    ("order_priority_check", q_order_priority_check, SQL_ORDER_PRIORITY_CHECK),
+    ("forecast_revenue_change", q_forecast_revenue_change, SQL_FORECAST_REVENUE_CHANGE),
+    ("product_type_profit", q_product_type_profit, SQL_PRODUCT_TYPE_PROFIT),
+    ("important_part_value", q_important_part_value, SQL_IMPORTANT_PART_VALUE),
+    ("late_shipment_priority", q_late_shipment_priority, SQL_LATE_SHIPMENT_PRIORITY),
+    ("supplier_count_by_part", q_supplier_count_by_part, SQL_SUPPLIER_COUNT_BY_PART),
+    ("promotion_qty_suppliers", q_promotion_qty_suppliers, SQL_PROMOTION_QTY_SUPPLIERS),
+    ("revenue_mom_growth", q_revenue_mom_growth, SQL_REVENUE_MOM_GROWTH),
+]

@@ -12,7 +12,7 @@ Reference sites are cited per function (SURVEY.md §2.10-2.11).
 
 from __future__ import annotations
 
-from collections.abc import Callable, Mapping
+from collections.abc import Mapping
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -22,17 +22,14 @@ from hiv_data_integration_spark.constants import COC_AGE_LABELS, REPORT_AGE_GROU
 __all__ = [
     "multi_replace",
     "canonicalize_coc_name",
-    "process_indicator_name",
     "standardize_column_name",
     "dict_lookup",
     "period_to_date",
-    "date_to_period",
     "path_segment",
     "idsite_from_path",
     "lenient_double",
     "round_to_long",
     "compound_key",
-    "rename_fn",
 ]
 
 
@@ -79,30 +76,6 @@ def canonicalize_coc_name(
         .when(col.contains("Masculin"), _sexed("Masculin", "_M"))
         .otherwise(base)
     )
-
-
-def process_indicator_name(
-    col: Column, age_labels: Mapping[str, str] | None = None
-) -> Column:
-    """First-matching-age-label extraction with gender suffix.
-
-    Native re-expression of ``process_column``
-    (update_pnls_report/utils.py:269-289): scan the age-label map in order;
-    on the first label contained in the name return its token, suffixed
-    ``_F``/``_M`` when the name mentions Féminin/Masculin; NULL if no label
-    matches.
-    """
-    age_labels = age_labels or COC_AGE_LABELS
-    expr: Column = F.lit(None).cast("string")
-    # Build the when-chain in reverse so the FIRST matching label wins.
-    for label, token in reversed(list(age_labels.items())):
-        sexed = (
-            F.when(col.contains("Féminin"), F.lit(f"{token}_F"))
-            .when(col.contains("Masculin"), F.lit(f"{token}_M"))
-            .otherwise(F.lit(token))
-        )
-        expr = F.when(col.contains(label), sexed).otherwise(expr)
-    return expr
 
 
 def standardize_column_name(
@@ -157,11 +130,6 @@ def period_to_date(col: Column) -> Column:
     return F.to_date(col.cast("string"), "yyyyMM")
 
 
-def date_to_period(col: Column) -> Column:
-    """Date/timestamp → ``"YYYYMM"`` period string (inverse of above)."""
-    return F.date_format(col, "yyyyMM")
-
-
 def path_segment(col: Column, segment: int) -> Column:
     """0-based segment of a ``"/uid1/uid2/..."`` org path.
 
@@ -212,12 +180,6 @@ def compound_key(*cols: Column, sep: str = ".") -> Column:
     """``"<a>.<b>"`` compound key used for data-element × COC mapping ids
     (update_pnls_report/extract_ptme_data.py:68-90)."""
     return F.concat_ws(sep, *cols)
-
-
-def rename_fn(df_columns: list[str], fn: Callable[[str], str]) -> dict[str, str]:
-    """Plan-time helper: build a rename map by applying ``fn`` to each name
-    (reference ``.rename(lambda c: ...)``, extract_ist_data.py:101)."""
-    return {c: fn(c) for c in df_columns}
 
 
 def business_days_between(start: Column, end: Column) -> Column:

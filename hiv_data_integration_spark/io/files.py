@@ -21,7 +21,6 @@ __all__ = [
     "read_spectrum",
     "json_dict_source",
     "read_jsonl_corpus",
-    "write_jsonl_corpus",
 ]
 
 
@@ -80,11 +79,3 @@ def read_jsonl_corpus(
     if schema is not None:
         reader = reader.schema(schema)
     return reader.json(path)
-
-
-def write_jsonl_corpus(df: DataFrame, path: str, shards: int | None = None) -> None:
-    """Write a corpus as newline-delimited JSON, optionally coalesced to a
-    fixed shard count (small exports); large exports keep the natural
-    partitioning — one file per task, no driver bottleneck."""
-    out = df.coalesce(shards) if shards else df
-    out.write.mode("overwrite").json(path)

@@ -17,7 +17,6 @@ __all__ = [
     "pivot_agg",
     "semester_bounds",
     "calendar_bucket_agg",
-    "has_any_null",
     "tumbling_window_agg",
     "sessionize",
     "funnel_conversion",
@@ -209,13 +208,6 @@ def calendar_bucket_agg(
     }
     out = df.withColumn("bucket", exprs[bucket])
     return grouped_sum(out, [*keys, "bucket"], value_cols)
-
-
-def has_any_null(df: DataFrame, col: str) -> bool:
-    """Existence test: does any row have a NULL in ``col``? (A7,
-    update_pnls_report/extract_chu_data.py:310). ``limit(1)`` keeps it an
-    early-out scan, not a full count."""
-    return df.filter(F.col(col).isNull()).limit(1).count() > 0
 
 
 def tumbling_window_agg(

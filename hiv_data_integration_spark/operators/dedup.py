@@ -32,7 +32,6 @@ __all__ = [
     "md5_long",
     "word_shingles",
     "exact_dedup",
-    "minhash_signature",
     "minhash_band_entries",
     "minhash_candidate_pairs",
     "incremental_dedup",
@@ -110,44 +109,6 @@ def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
         (1 + (0x9E3779B1 * (i + 1)) % (p - 1), (0x85EBCA77 * (i + 1)) % p)
         for i in range(num_hashes)
     ]
-
-
-def minhash_signature(shingles_col: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature: per-family minima over the shingle set.
-
-    One md5 per shingle (the expensive part), then ``num_hashes`` cheap
-    affine permutations ``(a·h + b) mod P`` — 16× less hashing than
-    seeded-md5-per-family with the same LSH guarantees. ``h`` is 32-bit and
-    ``a`` 31-bit so ``a·h + b < 2^63`` — exact in BIGINT on any engine (the
-    DuckDB oracle mirrors the arithmetic verbatim).
-
-    Per-row projection — embarrassingly parallel, no shuffle. Empty shingle
-    sets yield NULL minima; callers filter ``size(shingles) > 0`` first.
-
-    NB on lambdas: closure factories, never ``lambda s, i=i`` — PySpark
-    treats a two-parameter lambda as (element, index).
-    """
-    base = F.transform(
-        shingles_col,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"),
-    )
-    coeffs = minhash_coeffs(num_hashes)
-    p = F.lit(MINHASH_PRIME)
-
-    # Single traversal: fold the base-hash array once, keeping the running
-    # per-family minima in the accumulator. Crucially the md5 transform
-    # appears ONCE in the plan — expressing this as num_hashes separate
-    # array_min(transform(base, ...)) branches re-evaluates the md5 array
-    # per family (no common-subexpression elimination inside higher-order
-    # functions; measured 16x slower).
-    def step(acc: Column, h: Column) -> Column:
-        fam = F.array(*[(h * F.lit(a) + F.lit(b)) % p for a, b in coeffs])
-        return F.zip_with(acc, fam, lambda x, y: F.least(x, y))
-
-    init = F.array(*[F.lit(MINHASH_PRIME).cast("long")] * num_hashes)
-    sig = F.aggregate(base, init, step)
-    # empty shingle set => NULL signature (callers filter size > 0 anyway)
-    return F.when(F.size(shingles_col) > 0, sig)
 
 
 def minhash_band_entries(

@@ -42,7 +42,6 @@ __all__ = [
     "gif_sample_frames",
     "gif_resize_nearest",
     "sample_frames",
-    "resize_thumbnail_checksum",
 ]
 
 # Typed metadata contract for decoded media.
@@ -81,18 +80,6 @@ def payload_meta(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     return df.withColumn("n_bytes", F.octet_length(payload_col).cast("long")).withColumn(
         "digest", F.sha2(F.col(payload_col), 256)
     )
-
-
-def _fake_decode(payload: bytes) -> tuple[int, int, int]:
-    """Deterministic fake decoder: dims derived from payload bytes.
-
-    STUB — replaces PIL/ffmpeg in this container. Keeps every decoded
-    value a pure function of the payload so tests are reproducible.
-    """
-    n = len(payload)
-    width = 16 + (n % 64)
-    height = 16 + ((n // 64) % 64)
-    return width, height, 3
 
 
 def decode_media(
@@ -181,7 +168,8 @@ def decode_media(
                         continue
                     except Exception:
                         pass  # malformed PNG -> stub below
-                # deterministic fake decode (see _fake_decode)
+                # deterministic stub: dims a pure function of the byte
+                # length (SQL_DECODE_STUB mirrors it)
                 w, h, c = 16 + (n % 64), 16 + ((n // 64) % 64), 3
                 metas.append(
                     {
@@ -659,8 +647,8 @@ def decode_audio(
                 except Exception:
                     meta = None
                 if meta is None:
-                    # deterministic fake (mirrors _fake_decode's shape):
-                    # every value a pure function of the byte length
+                    # deterministic stub (as in decode_media): every value
+                    # a pure function of the byte length
                     nb = len(data)
                     sr = 16000
                     meta = {
@@ -720,62 +708,6 @@ def sample_frames(
             yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
 
     return df.mapInPandas(frame_batches, out_schema)
-
-
-def resize_thumbnail_checksum(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    size: int = 8,
-) -> DataFrame:
-    """Nearest-neighbor thumbnail resize via Arrow-batched ``mapInPandas``
-    — the image-resize stage of a multimodal pipeline. The Spark-side
-    plumbing (schema, batching, per-row fan-in) is the real thing; with a
-    real decoder the same stage would call ``PIL.Image.resize`` and emit
-    thumbnail bytes. STUB pixels: the source grid is synthesized
-    deterministically from the payload (dims from the fake decode,
-    ``pixel(x, y) = (31x + 17y + n_bytes) % 256``), so the
-    nearest-neighbor INDEX ARITHMETIC (``sx = tx*w // size``) and the
-    weighted thumbnail checksum are pure integer math a SQL oracle can
-    verify bit-for-bit.
-    """
-    in_fields = [f for f in df.schema.fields if f.name == id_col]
-    out_schema = T.StructType(
-        [
-            *in_fields,
-            T.StructField("src_width", T.IntegerType()),
-            T.StructField("src_height", T.IntegerType()),
-            T.StructField("thumb_checksum", T.LongType()),
-        ]
-    )
-
-    def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure (see decode_media): ships by value, no
-        # package import needed on the Python worker
-        for pdf in batches:
-            ws, hs, cks = [], [], []
-            for payload in pdf[payload_col]:
-                data = bytes(payload) if payload is not None else b""
-                n = len(data)
-                w, h = 16 + (n % 64), 16 + ((n // 64) % 64)
-                ck = 0
-                for ty in range(size):
-                    sy = ty * h // size
-                    for tx in range(size):
-                        sx = tx * w // size
-                        ck += ((31 * sx + 17 * sy + n) % 256) * (
-                            ty * size + tx + 1
-                        )
-                ws.append(w)
-                hs.append(h)
-                cks.append(ck)
-            out = pdf[[id_col]].copy()
-            out["src_width"] = ws
-            out["src_height"] = hs
-            out["thumb_checksum"] = cks
-            yield out
-
-    return df.mapInPandas(resize_batches, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1248,8 +1180,7 @@ def gif_resize_nearest(
 ) -> DataFrame:
     """Nearest-neighbor thumbnail resize over the REAL decoded first GIF
     frame — the image-resize stage of a multimodal pipeline running on
-    actual decoded pixels (supersedes the synthetic-grid
-    :func:`resize_thumbnail_checksum` stub). Source pixel for thumb cell
+    actual decoded pixels. Source pixel for thumb cell
     ``(tx, ty)`` is ``(tx·w//size, ty·h//size)`` (exact integer index
     arithmetic); the checksum ``Σ v·(ty·size+tx+1)`` is SQL-oracle-able.
     O(pixels) decode + O(size²) gather per blob, no shuffle."""

@@ -25,7 +25,6 @@ __all__ = [
     "topk",
     "salted_join",
     "skyline",
-    "skip_rows",
     "dataset_diff",
     "asof_join_last",
     "hierarchy_closure",
@@ -180,14 +179,6 @@ def topk(df: DataFrame, order_by: list[Column], k: int) -> DataFrame:
     (per-partition heap + driver merge of k·partitions rows), safe at any
     input scale. Engine extension (SURVEY.md §2.7: absent in reference)."""
     return df.orderBy(*order_by).limit(k)
-
-
-def skip_rows(df: DataFrame, n: int) -> DataFrame:
-    """Drop the first ``n`` rows (P7 — Excel header-row skipping,
-    update_pnls_report/extract_chu_data.py:252). Only meaningful for small
-    driver-ingested frames where input order is defined; uses ``offset``
-    which Spark pushes into the scan."""
-    return df.offset(n)
 
 
 def salted_join(

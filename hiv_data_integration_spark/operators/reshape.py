@@ -1,11 +1,11 @@
-"""Reshaping operators: wide↔long stacking, schema contracts, renames.
+"""Reshaping operators: wide↔long stacking and schema contracts.
 
-Maps SURVEY.md §2.9 (R1op-R4op). These are the reference's workhorse ops:
-``transform_for_pnls_reporting`` (update_pnls_report/utils.py:214-249),
-schema padding to declared contracts (extract_ist_data.py:156-169), and
-rename maps. All are pure plan rewrites — Catalyst collapses the per-prefix
-select/union loop into one plan, so "loop over indicators" costs nothing
-extra at 100 TB.
+Maps SURVEY.md §2.9 (R1op, R3op). These are the reference's workhorse ops:
+``transform_for_pnls_reporting`` (update_pnls_report/utils.py:214-249) and
+schema padding to declared contracts (extract_ist_data.py:156-169). Both
+are pure plan rewrites — Catalyst collapses the per-prefix select/union
+loop into one plan, so "loop over indicators" costs nothing extra at
+100 TB.
 """
 
 from __future__ import annotations
@@ -21,8 +21,6 @@ from hiv_data_integration_spark.operators.relational import _common_supertype
 __all__ = [
     "stack_by_prefix",
     "pad_to_contract",
-    "rename_columns",
-    "unpivot_long",
 ]
 
 
@@ -173,26 +171,3 @@ def pad_to_contract(
         declared = {name for name, _ in contract}
         exprs += [q(c) for c in df.columns if c not in declared]
     return df.selectExpr(*exprs)
-
-
-def rename_columns(
-    df: DataFrame, mapping: Mapping[str, str] | Callable[[str], str]
-) -> DataFrame:
-    """Rename via map or function (R2op; reference ``.rename({...})`` /
-    ``.rename(lambda c: ...)``, extract_ist_data.py:101,126)."""
-    if callable(mapping):
-        mapping = {c: mapping(c) for c in df.columns}
-    return df.withColumnsRenamed(dict(mapping))
-
-
-def unpivot_long(
-    df: DataFrame,
-    key_cols: list[str],
-    value_cols: list[str] | None = None,
-    var_name: str = "variable",
-    value_name: str = "value",
-) -> DataFrame:
-    """Wide→long melt via native ``unpivot`` (inverse of pivot_agg; engine
-    extension used by the text/report paths)."""
-    value_cols = value_cols or [c for c in df.columns if c not in key_cols]
-    return df.unpivot(key_cols, value_cols, var_name, value_name)

@@ -4,8 +4,9 @@ The reference delegates all execution to eager single-node Polars
 (`update_pnls_report/pipeline.py`); our engine delegates to Catalyst +
 Tungsten and therefore only needs to pick good session defaults:
 
-- AQE on (runtime shuffle-partition coalescing, skew-join splitting,
-  dynamic join-strategy switch) — at 100 TB these replace any hand-tuning.
+- AQE is Spark's default (runtime shuffle-partition coalescing, skew-join
+  splitting, dynamic join-strategy switch), as are parquet filter pushdown
+  and 10,000-row Arrow batches; none is restated here.
 - Arrow on for driver transfers and the pandas_udf islands (NFD fold,
   and fuzzy scoring of frames whose work exceeds
   ``operators.fuzzy.MAX_DRIVER_WORK``). Frames built on the driver (the
@@ -54,13 +55,8 @@ def get_spark(
         .master(master)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or _DEFAULT_SHUFFLE_PARTITIONS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # parquet scans: keep filter pushdown + schema pruning observable
-        .config("spark.sql.parquet.filterPushdown", "true")
+        # parquet scans answer MIN/MAX/COUNT from footer statistics
         .config("spark.sql.parquet.aggregatePushdown", "true")
         # let custom Python data sources (pyspark.sql.datasource) consume
         # pushed filters at the source; readers stay conf-adaptive so

@@ -43,6 +43,16 @@ def test_registry_complete_and_oracled():
     assert set(o) <= set(q)
 
 
+def test_merge_rejects_a_repeated_name():
+    """``{**a, **b}`` keeps one of two rows silently; the merge raises,
+    whether the name repeats within one table or across two."""
+    row = ("a", lambda spark, sf_dir: None, "SELECT 1")
+    with pytest.raises(ValueError, match="'a'"):
+        contract.merge_entries([row, ("b", *row[1:]), row])
+    with pytest.raises(ValueError, match="'a'"):
+        contract.merge_entries([row], [("b", *row[1:])], [row])
+
+
 _GREEN = {"hash_match": True, "err": None}
 _MISMATCH = {"hash_match": False, "err": None}
 _ERRORED = {"hash_match": None, "err": "no_oracle"}
@@ -107,9 +117,7 @@ def test_window_rotates_past_the_last_ledger_round(tmp_path, monkeypatch):
     window, rest = names[:50], names[50:]
     assert not [n for n in window if last[n] == newest]
     assert max(last[n] for n in window) <= min(last[n] for n in rest)
-    assert sorted(names) == sorted(
-        {**contract.QUERIES, **contract.EXT_QUERIES, **contract.SQL2_QUERIES}
-    )
+    assert sorted(names) == sorted(contract.REGISTRY)
 
 
 @pytest.fixture(scope="module")

@@ -12,17 +12,18 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from hiv_data_integration_spark.battery import QUERIES
-from hiv_data_integration_spark.battery_ext import EXT_QUERIES
-from hiv_data_integration_spark.battery_sql import SQL2_QUERIES
+from __spark_entry__ import REGISTRY
 from tools.plan_audit import audit, final_plan_string
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def _query(spark, name):
+    return REGISTRY[name][0](spark, SF_DIR)
+
+
 def _audit(spark, name):
-    fn = {**QUERIES, **EXT_QUERIES, **SQL2_QUERIES}[name]
-    return audit(final_plan_string(spark, fn(spark, SF_DIR)))
+    return audit(final_plan_string(spark, _query(spark, name)))
 
 
 def test_flagship_all_joins_broadcast_no_python(spark):
@@ -289,8 +290,7 @@ def test_pq_adc_stays_jvm_broadcast_nlj(spark):
     a = _audit(spark, "embed_pq_adc_topk")
     assert a["python"] == 0 and a["smj"] == 0
     assert a["nlj"] == 1
-    fn = EXT_QUERIES["embed_pq_adc_topk"]
-    plan = final_plan_string(spark, fn(spark, SF_DIR))
+    plan = final_plan_string(spark, _query(spark, "embed_pq_adc_topk"))
     assert "CartesianProduct" not in plan
 
 
@@ -306,9 +306,7 @@ def test_budget_select_never_globally_sorts_the_corpus(spark):
     bucket-cardinality-bounded boundary placement and the boundary-bucket
     prefix sum), never a range-partitioned global Sort of the data; the
     bucket metadata must come back via broadcast joins."""
-    from hiv_data_integration_spark.battery_ext import EXT_QUERIES
-
-    df = EXT_QUERIES["corpus_budget_select"](spark, SF_DIR)
+    df = _query(spark, "corpus_budget_select")
     df.collect()
     plan = final_plan_string(spark, df)
     assert "rangepartitioning" not in plan.lower(), (
@@ -326,9 +324,7 @@ def test_minhash_eval_truth_is_posting_join_not_cartesian(spark):
     be the all-pairs trap that dies at corpus scale. The only nested
     loops allowed are the two broadcast 1-row×1-row joins that stitch the
     three count aggregates into the summary row."""
-    from hiv_data_integration_spark.battery_ext import EXT_QUERIES
-
-    df = EXT_QUERIES["dedup_minhash_eval"](spark, SF_DIR)
+    df = _query(spark, "dedup_minhash_eval")
     df.collect()
     plan = final_plan_string(spark, df)
     assert "CartesianProduct" not in plan, (

@@ -18,18 +18,14 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from hiv_data_integration_spark.battery import QUERIES  # noqa: E402
-from hiv_data_integration_spark.battery_ext import EXT_QUERIES  # noqa: E402
-from hiv_data_integration_spark.battery_sql import SQL2_QUERIES  # noqa: E402
 from hiv_data_integration_spark.benchmarks import (  # noqa: E402
     pipeline_a_ist_scaled,
 )
 from hiv_data_integration_spark.session import get_spark  # noqa: E402
+from __spark_entry__ import REGISTRY  # noqa: E402
 
 ALL = {
-    **QUERIES,
-    **EXT_QUERIES,
-    **SQL2_QUERIES,
+    **{name: fn for name, (fn, _) in REGISTRY.items()},
     # bench-only full-width report pipeline (see bench.py): audited here
     # because it is a recurring top-5 battery cost
     "pipeline_a_ist_scaled": pipeline_a_ist_scaled,

@@ -235,12 +235,9 @@ def gen() -> None:
 
 def run(entries: list[str]) -> None:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from hiv_data_integration_spark.battery import QUERIES
-    from hiv_data_integration_spark.battery_ext import EXT_QUERIES
-    from hiv_data_integration_spark.battery_sql import SQL2_QUERIES
+    from __spark_entry__ import REGISTRY
     from hiv_data_integration_spark.session import get_spark
 
-    Q = {**QUERIES, **EXT_QUERIES, **SQL2_QUERIES}
     spark = get_spark(app_name="scale-slopes")
     out: dict[str, dict[str, float]] = {}
     for sf_dir, tag in ((SRC, "x1"), (DST, "x10")):
@@ -248,7 +245,7 @@ def run(entries: list[str]) -> None:
             samples = []
             for _ in range(3):
                 t0 = time.perf_counter()
-                Q[name](spark, sf_dir).write.format("noop").mode(
+                REGISTRY[name][0](spark, sf_dir).write.format("noop").mode(
                     "overwrite"
                 ).save()
                 samples.append(time.perf_counter() - t0)
@@ -308,7 +305,7 @@ def run_linkage10x() -> None:
     sys.path.insert(
         0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
-    from hiv_data_integration_spark.battery_ext import EXT_QUERIES
+    from __spark_entry__ import REGISTRY
     from hiv_data_integration_spark.session import get_spark
 
     spark = get_spark(app_name="scale-slopes-linkage")
@@ -319,7 +316,7 @@ def run_linkage10x() -> None:
             samples = []
             for _ in range(3):
                 t0 = time.perf_counter()
-                EXT_QUERIES[name](spark, sf_dir).write.format(
+                REGISTRY[name][0](spark, sf_dir).write.format(
                     "noop"
                 ).mode("overwrite").save()
                 samples.append(time.perf_counter() - t0)
