@@ -199,9 +199,10 @@ def main() -> None:
         "unit": "sec",
     }
     # the complete artifact, always parseable regardless of tail budget.
-    # SPARK_GRAFT_BENCH_ONLY runs write a separate focused file so
-    # BENCH_full_latest.json always holds the full battery it promises.
-    artifact = "BENCH_focused_latest.json" if only else "BENCH_full_latest.json"
+    # SPARK_GRAFT_BENCH_ONLY runs write a separate, git-ignored focused
+    # file, so BENCH_full_latest.json always holds the full battery it
+    # promises and a profiling run leaves the tree clean.
+    artifact = ".bench_focused_latest.json" if only else "BENCH_full_latest.json"
     if only:
         full_payload["only_filter"] = sorted(timings)
     full_path = os.path.join(
