@@ -10702,6 +10702,65 @@ FROM f
 """
 
 
+def _make_wav_encoder():
+    """Build ``wav_for(doc_id, odd_list=True)``: the synthetic corpus's
+    canonical-PCM WAV for one document — RIFF header, an odd-length
+    ``LIST`` chunk on every 5th doc when ``odd_list`` (exercising the RIFF
+    even-padding rule), ``fmt `` with doc-derived rate/channels, and a
+    ``data`` chunk whose byte i is ``(i·7 + doc_id) % 256``. The audio
+    oracles rebuild samples from this arithmetic. A by-value closure, as
+    in ``operators/multimodal.py``."""
+    import struct as _struct
+
+    def wav_for(doc_id: int, odd_list: bool = True) -> bytes:
+        sr = 8000 + 4000 * (doc_id % 3)
+        ch = 1 + (doc_id % 2)
+        ba = ch * 2  # 16-bit PCM
+        ns = 100 + (doc_id * 2654435761) % 1000
+        data_len = ns * ba
+        body = bytes((i * 7 + doc_id) % 256 for i in range(data_len))
+        chunks = b""
+        if odd_list and doc_id % 5 == 0:
+            # odd-length metadata chunk: 7-byte body + 1 pad byte
+            chunks += b"LIST" + _struct.pack("<I", 7) + b"INFOxyz" + b"\x00"
+        chunks += b"fmt " + _struct.pack("<IHHIIHH", 16, 1, ch, sr, sr * ba, ba, 16)
+        chunks += b"data" + _struct.pack("<I", data_len) + body
+        return b"RIFF" + _struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+
+    return wav_for
+
+
+def _make_png_encoder():
+    """Build ``png_for(doc_id)``: the synthetic corpus's 8-bit grayscale
+    PNG for one document — zlib IDAT, CRC'd chunks, filter-0 scanlines,
+    dims ``8·(1 + doc_id % 5) × 8·(1 + (doc_id // 5) % 4)`` and pixel
+    ``(7x + 13y + doc_id) % 256``, which the image-hash oracles rebuild.
+    A by-value closure, as in ``operators/multimodal.py``."""
+    import struct as _struct
+    import zlib as _zlib
+
+    def chunk(ctype: bytes, data: bytes) -> bytes:
+        crc = _struct.pack(">I", _zlib.crc32(ctype + data) & 0xFFFFFFFF)
+        return _struct.pack(">I", len(data)) + ctype + data + crc
+
+    def png_for(doc_id: int) -> bytes:
+        w = 8 * (1 + doc_id % 5)
+        h = 8 * (1 + (doc_id // 5) % 4)
+        raw = b"".join(
+            b"\x00" + bytes((7 * x + 13 * y + doc_id) % 256 for x in range(w))
+            for y in range(h)
+        )
+        ihdr = _struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
+        return (
+            b"\x89PNG\r\n\x1a\n"
+            + chunk(b"IHDR", ihdr)
+            + chunk(b"IDAT", _zlib.compress(raw))
+            + chunk(b"IEND", b"")
+        )
+
+    return png_for
+
+
 # Session-scoped cache for the synthesized WAV corpus — same pattern
 # and eviction discipline as _PHASH_CACHE/_GIF_CACHE (payloads are
 # INPUT data; synthesize once per (SparkContext, sf_dir), every audio
@@ -10733,28 +10792,10 @@ def _wav_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
+    wav_for = _make_wav_encoder()
+
     def synth_batches(batches):
-        # self-contained closure (ships by value; see decode_media)
-        import struct as _struct
-
         import pandas as _pd
-
-        def wav_for(doc_id: int) -> bytes:
-            sr = 8000 + 4000 * (doc_id % 3)
-            ch = 1 + (doc_id % 2)
-            ba = ch * 2  # 16-bit PCM
-            ns = 100 + (doc_id * 2654435761) % 1000
-            data_len = ns * ba
-            body = bytes((i * 7 + doc_id) % 256 for i in range(data_len))
-            chunks = b""
-            if doc_id % 5 == 0:
-                # odd-length metadata chunk: 7-byte body + 1 pad byte
-                chunks += b"LIST" + _struct.pack("<I", 7) + b"INFOxyz" + b"\x00"
-            chunks += b"fmt " + _struct.pack(
-                "<IHHIIHH", 16, 1, ch, sr, sr * ba, ba, 16
-            )
-            chunks += b"data" + _struct.pack("<I", data_len) + body
-            return b"RIFF" + _struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
 
         for pdf in batches:
             out = _pd.DataFrame(
@@ -10957,36 +10998,10 @@ def _png_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
+    png_for = _make_png_encoder()
+
     def synth_batches(batches):
-        # self-contained closure (ships by value; see decode_media)
-        import struct as _struct
-        import zlib as _zlib
-
         import pandas as _pd
-
-        def chunk(ctype: bytes, data: bytes) -> bytes:
-            return (
-                _struct.pack(">I", len(data))
-                + ctype
-                + data
-                + _struct.pack(">I", _zlib.crc32(ctype + data) & 0xFFFFFFFF)
-            )
-
-        def png_for(doc_id: int) -> bytes:
-            w = 8 * (1 + doc_id % 5)
-            h = 8 * (1 + (doc_id // 5) % 4)
-            raw = b"".join(
-                b"\x00"
-                + bytes((7 * x + 13 * y + doc_id) % 256 for x in range(w))
-                for y in range(h)
-            )
-            ihdr = _struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-            return (
-                b"\x89PNG\r\n\x1a\n"
-                + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", _zlib.compress(raw))
-                + chunk(b"IEND", b"")
-            )
 
         for pdf in batches:
             yield _pd.DataFrame(
@@ -11916,7 +11931,7 @@ def _gif_payloads(
     )
 
     def synth_batches(batches):
-        # self-contained closure (ships by value; see decode_media)
+        # self-contained closure (ships by value; see operators/multimodal.py)
         import struct as _struct
 
         import numpy as _np
@@ -13229,53 +13244,18 @@ def _mixed_media_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
+    png_for = _make_png_encoder()
+    wav_for = _make_wav_encoder()
+
     def synth_batches(batches):
-        # self-contained closure (ships by value; see decode_media)
-        import struct as _struct
-        import zlib as _zlib
-
         import pandas as _pd
-
-        def chunk(ctype: bytes, data: bytes) -> bytes:
-            return (
-                _struct.pack(">I", len(data))
-                + ctype
-                + data
-                + _struct.pack(">I", _zlib.crc32(ctype + data) & 0xFFFFFFFF)
-            )
 
         def payload_for(doc_id: int) -> bytes:
             kind = doc_id % 3
             if kind == 0:  # real grayscale PNG (phash synth shape)
-                w = 8 * (1 + doc_id % 5)
-                h = 8 * (1 + (doc_id // 5) % 4)
-                raw = b"".join(
-                    b"\x00"
-                    + bytes((7 * x + 13 * y + doc_id) % 256 for x in range(w))
-                    for y in range(h)
-                )
-                ihdr = _struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-                return (
-                    b"\x89PNG\r\n\x1a\n"
-                    + chunk(b"IHDR", ihdr)
-                    + chunk(b"IDAT", _zlib.compress(raw))
-                    + chunk(b"IEND", b"")
-                )
+                return png_for(doc_id)
             if kind == 1:  # real canonical-PCM WAV (audio synth shape)
-                sr = 8000 + 4000 * (doc_id % 3)
-                ch = 1 + (doc_id % 2)
-                ba = ch * 2
-                ns = 100 + (doc_id * 2654435761) % 1000
-                body = bytes(
-                    (i * 7 + doc_id) % 256 for i in range(ns * ba)
-                )
-                chunks = b"fmt " + _struct.pack(
-                    "<IHHIIHH", 16, 1, ch, sr, sr * ba, ba, 16
-                )
-                chunks += b"data" + _struct.pack("<I", len(body)) + body
-                return (
-                    b"RIFF" + _struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-                )
+                return wav_for(doc_id, odd_list=False)
             # junk: deterministic bytes that match no container magic
             return b"JUNK" + bytes(
                 (i * 11 + doc_id) % 256 for i in range(64)

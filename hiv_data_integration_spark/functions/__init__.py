@@ -30,7 +30,21 @@ __all__ = [
     "lenient_double",
     "round_to_long",
     "compound_key",
+    "sql_ident",
+    "sql_str",
 ]
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a backquoted Spark-SQL identifier (backquotes doubled)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_str(s: str) -> str:
+    """``s`` as a single-quoted Spark-SQL string literal. Spark's parser
+    un-escapes backslashes inside literals (``'C:\\new'`` would read as
+    ``C:`` + newline + ``ew``), so backslashes are doubled, then quotes."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
 
 
 def multi_replace(col: Column, replacements: Mapping[str, str]) -> Column:

@@ -15,7 +15,11 @@ from collections.abc import Callable, Mapping
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from hiv_data_integration_spark.functions import standardize_column_name
+from hiv_data_integration_spark.functions import (
+    sql_ident,
+    sql_str,
+    standardize_column_name,
+)
 from hiv_data_integration_spark.operators.relational import _common_supertype
 
 __all__ = [
@@ -56,12 +60,6 @@ def stack_by_prefix(
     # and the rule compiler): at contract width the Column-object spelling
     # costs ~600 Py4J round trips per call; the SQL spelling of the exact
     # same expressions ships in three selectExpr calls.
-    def q(name: str) -> str:
-        return "`" + name.replace("`", "``") + "`"
-
-    def q_str(s: str) -> str:
-        return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
-
     # per-prefix expression dicts: output name -> unaliased SQL text
     groups: list[dict[str, str]] = []
     for prefix, indicator in prefix_to_indicator.items():
@@ -74,7 +72,7 @@ def stack_by_prefix(
         # only str|int are renderable faithfully as SQL literals here —
         # str(int(x)) on a float/bool would silently truncate/relabel
         if isinstance(indicator, str):
-            ind_sql = q_str(indicator)
+            ind_sql = sql_str(indicator)
         elif isinstance(indicator, int) and not isinstance(indicator, bool):
             ind_sql = str(indicator)
         else:
@@ -85,16 +83,16 @@ def stack_by_prefix(
         cols: dict[str, str] = {indicator_col: ind_sql}
         for new_name, sources in canonical.items():
             if len(sources) == 1:
-                cols[new_name] = q(sources[0])
+                cols[new_name] = sql_ident(sources[0])
             else:
                 # null-preserving merge: nulls count as 0 only if at least
                 # one source is non-null; an all-NULL set stays NULL (same
                 # invariant as grouped_sum / SQL SUM)
-                summed = f"coalesce({q(sources[0])}, 0)"
-                any_set = f"{q(sources[0])} IS NOT NULL"
+                summed = f"coalesce({sql_ident(sources[0])}, 0)"
+                any_set = f"{sql_ident(sources[0])} IS NOT NULL"
                 for s in sources[1:]:
-                    summed = f"({summed} + coalesce({q(s)}, 0))"
-                    any_set = f"({any_set} OR {q(s)} IS NOT NULL)"
+                    summed = f"({summed} + coalesce({sql_ident(s)}, 0))"
+                    any_set = f"({any_set} OR {sql_ident(s)} IS NOT NULL)"
                 cols[new_name] = f"CASE WHEN {any_set} THEN {summed} END"
         groups.append(cols)
     if not groups:
@@ -103,7 +101,7 @@ def stack_by_prefix(
     # unified field set: first-seen order, least-common-supertype per name
     # (ONE schema analysis over every group's fields — no execution)
     probe_exprs = [
-        f"{sql} AS {q(f'_g{gi}_{j}')}"
+        f"{sql} AS {sql_ident(f'_g{gi}_{j}')}"
         for gi, g in enumerate(groups)
         for j, sql in enumerate(g.values())
     ]
@@ -122,7 +120,7 @@ def stack_by_prefix(
     structs = [
         "named_struct("
         + ", ".join(
-            f"{q_str(n)}, CAST({g.get(n, 'NULL')} "
+            f"{sql_str(n)}, CAST({g.get(n, 'NULL')} "
             f"AS {field_type[n].simpleString()})"
             for n in field_order
         )
@@ -130,12 +128,12 @@ def stack_by_prefix(
         for g in groups
     ]
     exploded = df.selectExpr(
-        *[q(k) for k in key_cols],
+        *[sql_ident(k) for k in key_cols],
         f"explode(array({', '.join(structs)})) AS _stk",
     )
     return exploded.selectExpr(
-        *[q(k) for k in key_cols],
-        *[f"_stk.{q(n)} AS {q(n)}" for n in field_order],
+        *[sql_ident(k) for k in key_cols],
+        *[f"_stk.{sql_ident(n)} AS {sql_ident(n)}" for n in field_order],
     )
 
 
@@ -159,15 +157,12 @@ def pad_to_contract(
     # width (154-236 columns) the col/cast/alias triple costs ~3 Py4J
     # round trips per column (~1.7 s per call for the IST contract);
     # the SQL spelling is the identical CAST and ships in ONE call
-    def q(name: str) -> str:
-        return "`" + name.replace("`", "``") + "`"
-
     exprs = [
-        f"CAST({q(name) if name in existing else 'NULL'} "
-        f"AS {dtype.simpleString()}) AS {q(name)}"
+        f"CAST({sql_ident(name) if name in existing else 'NULL'} "
+        f"AS {dtype.simpleString()}) AS {sql_ident(name)}"
         for name, dtype in contract
     ]
     if keep_extra:
         declared = {name for name, _ in contract}
-        exprs += [q(c) for c in df.columns if c not in declared]
+        exprs += [sql_ident(c) for c in df.columns if c not in declared]
     return df.selectExpr(*exprs)

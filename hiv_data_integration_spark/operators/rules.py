@@ -33,6 +33,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hiv_data_integration_spark.functions import sql_ident, sql_str
+
 __all__ = [
     "Rule",
     "col_letter",
@@ -181,7 +183,7 @@ class _SqlParser:
             if val not in self.binding:
                 raise KeyError(f"formula letter {val} has no bound column")
             # fillna(0) semantics from update_pnls_report/utils.py:159
-            return f"coalesce(CAST({_q_ident(self.binding[val])} AS DOUBLE), 0.0D)"
+            return f"coalesce(CAST({sql_ident(self.binding[val])} AS DOUBLE), 0.0D)"
         if kind == "num":
             # repr() is the shortest exact decimal round-trip, 'D' makes it
             # a DOUBLE literal
@@ -202,14 +204,6 @@ def compile_formula(formula: str, binding: Mapping[str, str]) -> str:
     if parser._peek() is not None:
         raise ValueError(f"trailing tokens in formula {formula!r}")
     return pred
-
-
-def _sql_str(s: str) -> str:
-    return "'" + s.replace("'", "''") + "'"
-
-
-def _q_ident(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
 
 
 def compile_rule_projection(
@@ -245,22 +239,22 @@ def compile_rule_projection(
         pred = compile_formula(rule.formula, binding)
         letters = formula_letters(rule.formula) & data_letters
         if letters:
-            name = _q_ident(f"{RULE_PREFIX}{idx}")
+            name = sql_ident(f"{RULE_PREFIX}{idx}")
             stage1.append(f"{pred} AS {name}")
             fired.append((name, letters, rule.color))
 
-    stage2 = [_q_ident(c) for c in columns]
+    stage2 = [sql_ident(c) for c in columns]
     for c in columns:
         if c in key_cols:
             continue
         branches = [
-            f"WHEN {name} THEN {_sql_str(color)}"
+            f"WHEN {name} THEN {sql_str(color)}"
             for name, letters, color in fired
             if col_to_letter[c] in letters
         ]
         if branches:
             stage2.append(
-                f"CASE {' '.join(branches)} END AS {_q_ident(c + COLOR_SUFFIX)}"
+                f"CASE {' '.join(branches)} END AS {sql_ident(c + COLOR_SUFFIX)}"
             )
     if fired:
         any_fired = " OR ".join(name for name, _letters, _color in fired)

@@ -97,22 +97,19 @@ def reference_pathology_spec(
     return PathologySpec(**base)
 
 
-def run_pipeline_a(
-    spark: SparkSession,
+def _extract_and_route(
     pathologies: list[PathologySpec],
     coc: DataFrame,
-    org_units: DataFrame,
-    report_value_columns: list[str],
-    naomi_wide: tuple[DataFrame, Mapping[str, int]] | None = None,
-    exclude_inconsistent: bool = True,
-) -> tuple[DataFrame, dict[str, DataFrame]]:
-    """Entry point A: per-pathology extract → rule routing → stack →
-    golden long report. Returns ``(report, {pathology: flagged_rows})``.
-    """
-    keys = ["organisation_unit_id", "period"]
+    keys: list[str],
+    exclude_inconsistent: bool,
+) -> tuple[list[tuple[DataFrame, Mapping[str, int]]], dict[str, DataFrame]]:
+    """The pathology loop of pipelines A and B: extract each pathology's
+    wide frame and, when it has rules, route it through the consistency
+    split. Returns ``([(wide, prefix_to_indicator)], {pathology:
+    flagged_rows})``. Calls go through this module's names so tracing
+    wrappers installed on them see every call."""
     wides: list[tuple[DataFrame, Mapping[str, int]]] = []
     flagged_by_pathology: dict[str, DataFrame] = {}
-
     for spec in pathologies:
         wide = pathology_extract(
             spec.analytics,
@@ -132,7 +129,25 @@ def run_pipeline_a(
             flagged_by_pathology[spec.name] = flagged
             wide = consistent
         wides.append((wide, spec.prefix_to_indicator))
+    return wides, flagged_by_pathology
 
+
+def run_pipeline_a(
+    spark: SparkSession,
+    pathologies: list[PathologySpec],
+    coc: DataFrame,
+    org_units: DataFrame,
+    report_value_columns: list[str],
+    naomi_wide: tuple[DataFrame, Mapping[str, int]] | None = None,
+    exclude_inconsistent: bool = True,
+) -> tuple[DataFrame, dict[str, DataFrame]]:
+    """Entry point A: per-pathology extract → rule routing → stack →
+    golden long report. Returns ``(report, {pathology: flagged_rows})``.
+    """
+    keys = ["organisation_unit_id", "period"]
+    wides, flagged_by_pathology = _extract_and_route(
+        pathologies, coc, keys, exclude_inconsistent
+    )
     if naomi_wide is not None:
         wides.append(naomi_wide)
 
@@ -226,26 +241,12 @@ def run_pipeline_b(
     ]
     flagged_by_pathology: dict[str, DataFrame] = {}
     if pathologies:
-        assert coc is not None, "pathology extracts need the coc dim"
-        for spec in pathologies:
-            wide = pathology_extract(
-                spec.analytics,
-                coc,
-                spec.de_map,
-                spec.contract_value_cols,
-                compound_coc_keys=spec.compound_coc_keys,
-                pivot_agg_fn=spec.pivot_agg_fn,
-            )
-            if spec.rules:
-                consistent, flagged = split_by_consistency(
-                    wide,
-                    spec.rules,
-                    key_cols=keys,
-                    exclude_inconsistent=not include_inconsistent_data,
-                )
-                flagged_by_pathology[spec.name] = flagged
-                wide = consistent
-            wides.append((wide, spec.prefix_to_indicator))
+        if coc is None:
+            raise ValueError("pathology extracts need the coc dim")
+        routed, flagged_by_pathology = _extract_and_route(
+            pathologies, coc, keys, not include_inconsistent_data
+        )
+        wides += routed
 
     long_df = stack_pathologies(wides, keys)
     report = finalize_report(long_df, org_units, report_value_columns)

@@ -346,6 +346,24 @@ def test_pipeline_b_spectrum(spark, org_units):
     assert rows["r1_d1_f1"].periode == datetime.date(2024, 12, 1)
 
 
+def test_pipeline_b_pathologies_without_coc_raise(spark, org_units):
+    """Pathology extracts need the coc dim: a missing one is a ValueError
+    (a bare assert would vanish under ``python -O``)."""
+    spectrum = spark.createDataFrame(
+        [("f1", "202412", 1.0)],
+        "organisation_unit_id string, period string, indicateur_9_x double",
+    )
+    spec = PathologySpec(
+        name="ist", analytics=spectrum, de_map=spectrum,
+        contract_value_cols=[], prefix_to_indicator={"indicateur_9_": 9},
+    )
+    with pytest.raises(ValueError, match="coc dim"):
+        run_pipeline_b(
+            spark, spectrum, org_units, {"indicateur_9_": 9},
+            REPORT_VALUE_COLS, pathologies=[spec],
+        )
+
+
 def test_pipeline_c_chu_golden(spark, org_units, tmp_path):
     """Independent golden: every expected value below is re-derived by hand
     from the resolve-chain contract (pipeline/pnls.py run_pipeline_c

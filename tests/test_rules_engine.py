@@ -144,3 +144,22 @@ def test_apply_rules_reannotation_single_flag(spark):
     assert twice.columns.count("is_consistent") == 1
     # the recomputed flag is still referenceable (no ambiguity error)
     assert twice.filter(F.col("is_consistent")).count() in (0, 1)
+
+
+def test_apply_rules_color_literal_round_trips(spark):
+    """A rule colour reaches the output verbatim, backslashes and quotes
+    included: Spark's parser un-escapes backslashes inside string
+    literals, so ``C:\\new`` must not come back as ``C:`` + newline."""
+    from hiv_data_integration_spark.operators.reshape import stack_by_prefix
+
+    color = "C:\\new 'it''s' \\\\ end\\"
+    sdf = spark.createDataFrame(
+        [("ou1", "202401", 1, 5, 2, 0)],
+        schema="organisation_unit_id string, period string, "
+        "ind_1 long, ind_2 long, ind_3 long, ind_4 long",
+    )
+    out = apply_rules(sdf, {"r1": Rule("E<F", color, 1)}, KEY_COLS).collect()[0]
+    assert out["ind_1__color"] == out["ind_2__color"] == color
+    # the reshape stacker spells its indicator literal with the same quoter
+    long = stack_by_prefix(sdf, KEY_COLS, {"ind_": color}).collect()
+    assert {r["indicateur"] for r in long} == {color}
