@@ -3444,18 +3444,16 @@ def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge). The Spark side iterates to the fixpoint; the oracle computes
     the same fixpoint as a recursive-CTE reachability closure — both
     sides derive the pair graph identically (hash-green standalone as
-    dedup_minhash_lsh_pairs). r12: routes through the operator's
-    kernelized two-level path (``local_threshold`` — single-partition
-    union-find when the materialized edge count fits one task, the same
-    knob the phash cluster census already uses); above the threshold the
-    distributed rounds run unchanged, and the fixpoint is identical
-    either way (tested both sides of the threshold)."""
+    dedup_minhash_lsh_pairs). The operator solves graphs within its
+    driver edge budget with one union-find on the driver; above it the
+    distributed rounds run, and the fixpoint is identical either way
+    (tested both sides of the budget)."""
     corpus = _dup_corpus(spark, sf_dir)
     pairs = dd.minhash_candidate_pairs(
         corpus, "doc_id", "text", shingle_n=3, num_hashes=16, bands=4,
         jaccard_threshold=0.6, partitions=32,
     )
-    return dd.connected_components(pairs, local_threshold=2_000_000)
+    return dd.connected_components(pairs)
 
 
 SQL_CONNECTED_COMPONENTS = f"""
@@ -3479,15 +3477,13 @@ def q_canonical_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     components → drop every non-canonical cluster member → per-language
     corpus stats of what survives. Each stage is oracle-green standalone
     (dedup_minhash_lsh_pairs, dedup_connected_components); this entry
-    verifies their composition. r12: same kernelized CC routing as
-    dedup_connected_components (identical fixpoint both sides of the
-    threshold)."""
+    verifies their composition."""
     corpus = _dup_corpus(spark, sf_dir)
     pairs = dd.minhash_candidate_pairs(
         corpus, "doc_id", "text", shingle_n=3, num_hashes=16, bands=4,
         jaccard_threshold=0.6, partitions=32,
     )
-    comps = dd.connected_components(pairs, local_threshold=2_000_000)
+    comps = dd.connected_components(pairs)
     kept = dd.drop_non_canonical(corpus, comps, id_col="doc_id")
     return kept.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
@@ -11611,10 +11607,7 @@ def q_crossmodal_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = tpairs_ham.filter(F.col("t_hamming") <= 1).select(
         "doc_a", "doc_b"
     )
-    cc = connected_components(
-        edges, "doc_a", "doc_b", algorithm="star",
-        local_threshold=2_000_000,
-    )
+    cc = connected_components(edges, "doc_a", "doc_b", algorithm="star")
     return cc.groupBy("component").agg(
         F.count("*").cast("long").alias("n_members")
     )
@@ -11839,17 +11832,10 @@ def q_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups = _phash_classes(spark, sf_dir)  # session-cached checkpoint
     contracted = _phash_class_band_pairs(groups).select("rep_a", "rep_b")
     groups = groups.select("rep", F.col("n").alias("group_n"))
-    # two-level CC: the kernel is the distinct-fingerprint graph, so a
-    # 2M-edge local union-find bound covers it far past this corpus
-    # (4,382 contracted edges at sf0.1); bigger kernels fall back to
-    # the distributed star rounds automatically
-    cc = connected_components(
-        contracted,
-        "rep_a",
-        "rep_b",
-        algorithm="star",
-        local_threshold=2_000_000,
-    )
+    # two-level CC: the kernel is the distinct-fingerprint graph (4,382
+    # contracted edges at sf0.1), which the operator solves on the
+    # driver; bigger kernels fall back to the distributed star rounds
+    cc = connected_components(contracted, "rep_a", "rep_b", algorithm="star")
     # expand: every rep carries its group size. The census covers only
     # docs that PARTICIPATE in the pair graph (the un-kernelized
     # semantics): a group participates iff it has ≥2 members (identical

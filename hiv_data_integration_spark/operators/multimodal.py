@@ -209,9 +209,7 @@ def _make_png_reader():
     return read_png
 
 
-def decode_media(
-    df: DataFrame, payload_col: str = "payload", batch_hint: int | None = None
-) -> DataFrame:
+def decode_media(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Decode payloads to typed metadata via Arrow-batched ``mapInPandas``.
 
     Output schema = input columns (minus payload) + ``meta`` struct

@@ -615,14 +615,18 @@ def test_connected_components_chains_and_canonical(spark):
     assert kept == [1, 4, 7]
 
 
-def test_connected_components_star_deep_chain(spark):
+def test_connected_components_star_deep_chain(spark, monkeypatch):
     """Skew/depth hardening: a chain of diameter 60 — beyond plain
     propagation's reach at max_iters=10 — converges under the
     large-star/small-star variant in O(log diameter) rounds, and the
-    fixpoint matches the propagation answer."""
+    fixpoint matches the propagation answer. Budget -1 keeps the graph
+    off the driver union-find, which has no rounds."""
     import pytest
 
+    from hiv_data_integration_spark.operators import dedup
     from hiv_data_integration_spark.operators.dedup import connected_components
+
+    monkeypatch.setattr(dedup, "MAX_DRIVER_EDGES", -1)
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(60)], "id_a long, id_b long"
@@ -636,10 +640,15 @@ def test_connected_components_star_deep_chain(spark):
     assert comp == {i: 0 for i in range(61)}
 
 
-def test_connected_components_star_matches_propagation(spark):
+def test_connected_components_star_matches_propagation(spark, monkeypatch):
     """Algorithm equivalence on a deterministic pseudo-random multi-component
-    graph: both variants must land on the identical (id, component) fixpoint."""
+    graph: both distributed variants (budget -1 keeps the graph off the
+    driver union-find) must land on the identical (id, component)
+    fixpoint."""
+    from hiv_data_integration_spark.operators import dedup
     from hiv_data_integration_spark.operators.dedup import connected_components
+
+    monkeypatch.setattr(dedup, "MAX_DRIVER_EDGES", -1)
 
     edges = [((i * 37) % 83 + (i % 5) * 100, (i * 59) % 83 + (i % 5) * 100)
              for i in range(120)]
@@ -5024,13 +5033,15 @@ def test_audio_haar_bands_exact(spark):
     assert r2["decoder"] == "stub" and r2["n_stream_samples"] == 20
 
 
-def test_connected_components_local_unionfind_matches(spark):
-    """The opt-in local union-find fast path (kernel-sized graphs) must
+def test_connected_components_local_unionfind_matches(spark, monkeypatch):
+    """The driver union-find (graphs within ``MAX_DRIVER_EDGES``) must
     land on the identical min-label fixpoint as both distributed
     variants, including self-pair singletons."""
-    from hiv_data_integration_spark.operators.dedup import (
-        connected_components,
-    )
+    from hiv_data_integration_spark.operators import dedup
+
+    def connected_components(pairs, budget, **kwargs):
+        monkeypatch.setattr(dedup, "MAX_DRIVER_EDGES", budget)
+        return dedup.connected_components(pairs, **kwargs)
 
     edges = [((i * 37) % 83 + (i % 5) * 100, (i * 59) % 83 + (i % 5) * 100)
              for i in range(120)]
@@ -5039,34 +5050,32 @@ def test_connected_components_local_unionfind_matches(spark):
     )
     star = {
         r.id: r.component
-        for r in connected_components(pairs, algorithm="star").collect()
+        for r in connected_components(pairs, -1, algorithm="star").collect()
     }
     local = {
         r.id: r.component
         for r in connected_components(
-            pairs, algorithm="star", local_threshold=10_000
+            pairs, 10_000, algorithm="star"
         ).collect()
     }
     assert local == star
     assert local[9999] == 9999
-    # threshold below the edge count -> distributed path (same answer)
+    # budget below the edge count -> distributed path (same answer)
     dist = {
         r.id: r.component
         for r in connected_components(
-            pairs, algorithm="star", local_threshold=5
+            pairs, 5, algorithm="star"
         ).collect()
     }
     assert dist == star
     # OUTPUT SCHEMA must be runtime-independent: with Integer ids the
-    # local union-find branch must cast back to the input dtype, so the
-    # same graph above and below local_threshold yields identical
-    # schemas (the local path's pandas frame would otherwise widen both
-    # columns to LongType and the schema would depend on edge count)
+    # driver union-find must hand back the input dtype, so the same
+    # graph within and above the budget yields identical schemas
     int_pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (7, 7)], "id_a int, id_b int"
     )
-    lo = connected_components(int_pairs, local_threshold=10_000)
-    hi = connected_components(int_pairs, local_threshold=1)
+    lo = connected_components(int_pairs, 10_000)
+    hi = connected_components(int_pairs, 1)
     assert lo.schema == hi.schema
     assert [f.dataType.simpleString() for f in lo.schema.fields] == [
         "int", "int"

@@ -306,6 +306,41 @@ def test_pipeline_a_month_builds_without_jobs_or_python_workers(
         assert python_eval_nodes(df) == []
 
 
+def test_pipeline_c_build_job_count(spark, org_units, tmp_path, monkeypatch):
+    """Resolving pipeline C's names with all three tiers live launches
+    exactly five Spark jobs, all while the plan is built: three for the
+    bounded candidate collect and two for the row-limited probe of the
+    query names (``limit(n).collect()`` scans partitions in growing
+    rounds, one job each)."""
+    from hiv_data_integration_spark.pipeline import pnls
+
+    sc = spark.sparkContext
+    group = "pipeline-c-resolve"
+    resolve = pnls.resolve_entities
+
+    def resolve_in_group(*args, **kwargs):
+        sc.setJobGroup(group, "resolve pipeline C names")
+        try:
+            return resolve(*args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(pnls, "resolve_entities", resolve_in_group)
+    _run_chu(
+        spark,
+        org_units,
+        tmp_path,
+        [
+            ("Registered Clinic", "DS Cocody", "202401", "1", "2"),
+            ("CSU Abobo Nord", "DS Cocody", "202401", "3", "4"),
+            ("Clinique Inconnue", "Cocody", "202401", "5", "6"),
+        ],
+        registry_rows=[(f"/{ROOT}/r1/d1/reg", "Registered Clinic", "DS Cocody")],
+    )
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5
+
+
 def test_pipeline_a_month_fetches_naomi_once(spark, org_units, tmp_path):
     """Building a month and writing its CSV and Excel review call the
     NAOMI fetcher once per request: 28 calls, not one set per evaluation."""
