@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -51,6 +52,9 @@ TABLES = [
 ]
 
 
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
 def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load a testdata table, dispatching ``events.ts`` on its ACTUAL type.
 
@@ -60,8 +64,8 @@ def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     integer division — the same truncation DuckDB applies) and plain
     ``timestamp[us]`` (reads natively as TIMESTAMP_NTZ, no conversion
     needed). We inspect the schema Spark infers and convert ONLY when the
-    column actually reads as a long. No session conf is mutated here:
-    timezone determinism is the session factory's contract
+    column actually reads as a long. The caller's session conf is left
+    as it was: timezone determinism is the session factory's contract
     (``session.get_spark`` pins UTC), and TIMESTAMP_NTZ bucketing is
     timezone-independent anyway, so a hostile driver session cannot shift
     day boundaries on the events queries.
@@ -71,13 +75,23 @@ def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return spark.read.parquet(path)
     try:
         df = spark.read.parquet(path)
-    except Exception:
+    except AnalysisException as exc:
         # Legacy int64-nanos physical type: schema inference rejects it
-        # ("Illegal Parquet type") unless the legacy conf is on. Only this
-        # fallback branch touches session conf, and only for data that is
-        # unreadable without it.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        # (PARQUET_TYPE_ILLEGAL) unless the legacy conf is on. The conf is
+        # needed only while the schema is inferred — the scan then reads
+        # the column as the inferred LONG — so the prior value goes back
+        # at once. Any other read error (a missing file) propagates.
+        if exc.getCondition() != "PARQUET_TYPE_ILLEGAL":
+            raise
+        prior = spark.conf.getAll.get(_NANOS_AS_LONG)
+        spark.conf.set(_NANOS_AS_LONG, "true")
+        try:
+            df = spark.read.parquet(path)
+        finally:
+            if prior is None:
+                spark.conf.unset(_NANOS_AS_LONG)
+            else:
+                spark.conf.set(_NANOS_AS_LONG, prior)
     if isinstance(df.schema["ts"].dataType, T.LongType):
         # nanos -> µs -> TIMESTAMP_NTZ via interval arithmetic on the NTZ
         # epoch literal: session-timezone-INDEPENDENT, unlike
@@ -149,7 +163,7 @@ def read_events_stream(
         except Exception:
             # legacy int64-nanos footer: conf lands on the isolated
             # session only
-            s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            s.conf.set(_NANOS_AS_LONG, "true")
             raw_schema = s.read.parquet(probe_path).schema
         schemas[probe_path] = raw_schema
     reader = s.readStream.format("parquet").schema(raw_schema)

@@ -10,8 +10,16 @@ operator, built on the public Structured Streaming surface:
 - session windows (``F.session_window`` — native state, no Python)
 - a custom per-key stateful operator via ``applyInPandasWithState``
   (running per-user counters with timeout-based expiry)
-- ``availableNow`` runner: process-everything-then-stop, used by tests to
-  prove stream results equal their batch twins.
+- sinks: :func:`memory_table` (context manager: process everything
+  available, yield the result table, always clean up), the durable
+  parquet sink with checkpoint recovery, and two ``foreachBatch`` merge
+  sinks into parquet state.
+
+Every query in the package is started, awaited and stopped by one
+private runner here (a tier-1 test keeps ``writeStream`` out of other
+modules). It logs one ``stream progress`` line per query on this
+module's logger: batch count, input rows, trigger milliseconds and the
+last batch's state-operator row counts.
 
 Scale notes: all aggregations here are incremental state-store operators —
 the shuffle is on the grouping key once, state lives in the store, and
@@ -20,13 +28,20 @@ watermarks bound state size (without one, 100 TB of history accumulates).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import json
+import logging
+import shutil
+import tempfile
+import uuid
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 __all__ = [
@@ -35,12 +50,15 @@ __all__ = [
     "windowed_agg",
     "session_window_agg",
     "running_user_totals",
-    "run_available_now",
+    "memory_table",
     "run_available_now_to_parquet",
     "stream_interval_join",
     "first_seen_dedup",
     "foreach_batch_accumulate",
+    "foreach_batch_hll_merge",
 ]
+
+_log = logging.getLogger(__name__)
 
 # Driver testdata events shape (TESTDATA.md; ts stored as timestamp).
 EVENTS_SCHEMA = T.StructType(
@@ -195,34 +213,90 @@ def running_user_totals(
     )
 
 
-def run_available_now(
-    stream_df: DataFrame,
-    checkpoint_dir: str,
-    query_name: str = "snapshot",
-    output_mode: str = "append",
-) -> DataFrame:
-    """Process everything currently available, then stop; return the
-    results from an in-memory sink table.
+def _log_progress(q: StreamingQuery) -> None:
+    """Log one structured line for ``q`` from ``q.recentProgress``: batch
+    count, input rows and ``triggerExecution`` ms summed over the batches,
+    and the last batch's ``numRowsTotal`` per state operator. Spark keeps
+    the last ``spark.sql.streaming.numRecentProgressUpdates`` (100)
+    batches."""
+    progress = q.recentProgress
+    last_ops = progress[-1].stateOperators if progress else []
+    summary = {
+        "query": q.name,
+        "batches": len(progress),
+        "input_rows": sum(p.numInputRows for p in progress),
+        "trigger_ms": sum(p.durationMs.get("triggerExecution", 0) for p in progress),
+        "state_rows": [op.numRowsTotal for op in last_ops],
+    }
+    _log.info("stream progress %s", json.dumps(summary))
 
-    The batch-parity harness: stream → availableNow → memory table vs the
-    same transformation applied in batch.
 
-    ``checkpoint_dir`` must be FRESH per invocation: the memory table only
-    holds THIS run's output, so resuming from an old checkpoint (source
-    offsets already committed) yields a table silently missing previously
-    processed data. For incremental processing pair a reused checkpoint
-    with a durable sink (:func:`run_available_now_to_parquet`).
+def _run(
+    writer: DataStreamWriter, checkpoint_dir: str, available_now: bool = True
+) -> None:
+    """Start ``writer`` on ``checkpoint_dir``, wait until every input
+    available at start is processed, log the progress line and stop.
+
+    An ``availableNow`` query ends by itself, so the wait is
+    ``awaitTermination``. Python data-source streams run with
+    ``available_now=False``: ``availableNow`` falls back to a single
+    batch for them, so they take a 0 ms processing-time trigger (the
+    source's offsets set the batch bounds, not the clock) and the wait
+    is ``processAllAvailable``, which returns once the source's latest
+    offset is committed. Both waits raise the query's own error. The
+    query is stopped in ``finally``; stopping a finished query does
+    nothing.
     """
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    trigger = (
+        {"availableNow": True}
+        if available_now
+        else {"processingTime": "0 milliseconds"}
     )
-    q.awaitTermination()
-    return stream_df.sparkSession.table(query_name)
+    q = writer.option("checkpointLocation", checkpoint_dir).trigger(**trigger).start()
+    try:
+        if available_now:
+            q.awaitTermination()
+        else:
+            q.processAllAvailable()
+    finally:
+        _log_progress(q)
+        q.stop()
+
+
+@contextmanager
+def memory_table(
+    stream_df: DataFrame, output_mode: str, available_now: bool = True
+) -> Iterator[DataFrame]:
+    """Run ``stream_df`` into an in-memory sink and yield its table.
+
+    The batch-parity harness: stream → memory table vs the same
+    transformation applied in batch. Each call takes a fresh checkpoint
+    and a uuid query name: the memory table holds only one run's output,
+    so a resumed checkpoint would yield a table missing what earlier
+    runs processed (for incremental runs use a durable sink,
+    :func:`run_available_now_to_parquet`).
+
+    The table is looked up in the stream's own session, where the sink
+    registers it (for ``battery.read_events_stream`` that is the isolated
+    UTC session, not the caller's). Read the table inside the block: on
+    exit, error or not, the view is dropped and the checkpoint removed,
+    and the query has already been stopped.
+    """
+    session = stream_df.sparkSession
+    name = f"stream_{uuid.uuid4().hex[:12]}"
+    ckpt = tempfile.mkdtemp(prefix="ckpt_")
+    try:
+        _run(
+            stream_df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode),
+            ckpt,
+            available_now,
+        )
+        yield session.table(name)
+    finally:
+        session.catalog.dropTempView(name)
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def run_available_now_to_parquet(
@@ -235,15 +309,12 @@ def run_available_now_to_parquet(
     persisted offsets + watermark — the incremental-production shape.
     Returns the accumulated sink contents.
     """
-    q = (
+    _run(
         stream_df.writeStream.format("parquet")
         .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .option("path", out_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("path", out_dir),
+        checkpoint_dir,
     )
-    q.awaitTermination()
     return stream_df.sparkSession.read.schema(stream_df.schema).parquet(out_dir)
 
 
@@ -394,12 +465,55 @@ def first_seen_dedup(
     )
 
 
+def _foreach_batch_merge(
+    stream: DataFrame,
+    state_path: str,
+    checkpoint_dir: str,
+    key_cols: list[str],
+    partial: Callable[[DataFrame], DataFrame],
+    combine: Callable[[str], Column],
+) -> DataFrame:
+    """``foreachBatch`` driver shared by the two merge sinks: per
+    micro-batch, ``partial`` builds the batch's rows (key columns plus
+    value columns), ``combine`` (``F.sum`` or ``F.max``) merges each value
+    column with the stored rows by key, and
+    ``operators.fuzzy.upsert_parquet_state`` swaps the result into
+    ``state_path``. Runs with availableNow on the caller's durable
+    checkpoint and returns the final state read back from
+    ``state_path``."""
+    from pyspark.sql.utils import AnalysisException
+
+    from hiv_data_integration_spark.operators.fuzzy import (
+        upsert_parquet_state,
+    )
+
+    def merge(batch_df: DataFrame, batch_id: int) -> None:
+        sp = batch_df.sparkSession
+        part = partial(batch_df)
+        try:
+            cur = sp.read.parquet(state_path)
+        except AnalysisException:
+            cur = None
+        if cur is not None:
+            part = (
+                part.unionByName(cur)
+                .groupBy(*key_cols)
+                .agg(
+                    *[combine(c).alias(c) for c in part.columns if c not in key_cols]
+                )
+            )
+        upsert_parquet_state(sp, state_path, part, key_cols)
+
+    _run(stream.writeStream.foreachBatch(merge).outputMode("update"), checkpoint_dir)
+    return stream.sparkSession.read.parquet(state_path)
+
+
 def foreach_batch_accumulate(
     stream: DataFrame,
     state_path: str,
     checkpoint_dir: str,
     key_cols: list[str],
-    sum_cols: dict[str, "Column"],
+    sum_cols: dict[str, Column],
 ) -> DataFrame:
     """``foreachBatch`` sink: per micro-batch, aggregate the batch to
     per-key partial sums and MERGE them into a parquet state store
@@ -419,40 +533,16 @@ def foreach_batch_accumulate(
     (the swap is per-path); the pattern — partial agg per batch, exact
     accumulators, key-wise merge — is unchanged.
     """
-    from pyspark.sql.utils import AnalysisException
-
-    from hiv_data_integration_spark.operators.fuzzy import (
-        upsert_parquet_state,
-    )
-
-    names = list(sum_cols)
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        part = batch_df.groupBy(*key_cols).agg(
+    return _foreach_batch_merge(
+        stream,
+        state_path,
+        checkpoint_dir,
+        key_cols,
+        lambda df: df.groupBy(*key_cols).agg(
             *[F.sum(expr).alias(n) for n, expr in sum_cols.items()]
-        )
-        try:
-            cur = sp.read.parquet(state_path)
-        except AnalysisException:
-            cur = None
-        if cur is not None:
-            part = (
-                part.unionByName(cur)
-                .groupBy(*key_cols)
-                .agg(*[F.sum(n).alias(n) for n in names])
-            )
-        upsert_parquet_state(sp, state_path, part, key_cols)
-
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        F.sum,
     )
-    q.awaitTermination()
-    return stream.sparkSession.read.parquet(state_path)
 
 
 def foreach_batch_hll_merge(
@@ -473,34 +563,13 @@ def foreach_batch_hll_merge(
     delivery already yields the exactly-once answer. Returns the final
     register table read back from ``state_path``.
     """
-    from pyspark.sql.utils import AnalysisException
-
     from hiv_data_integration_spark.operators.aggregate import hll_registers
-    from hiv_data_integration_spark.operators.fuzzy import (
-        upsert_parquet_state,
-    )
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        part = hll_registers(batch_df, value_col, m)
-        try:
-            cur = sp.read.parquet(state_path)
-        except AnalysisException:
-            cur = None
-        if cur is not None:
-            part = (
-                part.unionByName(cur)
-                .groupBy("bucket")
-                .agg(F.max("register").alias("register"))
-            )
-        upsert_parquet_state(sp, state_path, part, ["bucket"])
-
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _foreach_batch_merge(
+        stream,
+        state_path,
+        checkpoint_dir,
+        ["bucket"],
+        lambda df: hll_registers(df, value_col, m),
+        F.max,
     )
-    q.awaitTermination()
-    return stream.sparkSession.read.parquet(state_path)

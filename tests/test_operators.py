@@ -1033,6 +1033,9 @@ def test_pack_token_budget_boundaries(spark):
     assert (rows[4].part, rows[4].shard_idx) == ("fr", 0)
 
 
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
 def test_tbl_dispatches_both_events_ts_physical_types(spark, tmp_path):
     """The testdata generator has shipped events.ts as int64-nanos (r1) and
     timestamp[us] (r2+). tbl() must read BOTH: native pass-through for µs,
@@ -1062,11 +1065,25 @@ def test_tbl_dispatches_both_events_ts_physical_types(spark, tmp_path):
         pq.write_table(table, str(d / "events.parquet"),
                        coerce_timestamps=None, store_schema=False)
         df = tbl(spark, str(d), "events")
+        # the legacy conf is on only while the schema is inferred
+        assert _NANOS_AS_LONG not in spark.conf.getAll, unit
         got = sorted(
             r["ts"].replace(tzinfo=None) if r["ts"].tzinfo else r["ts"]
             for r in df.select("ts").collect()
         )
         assert got == ts, (unit, got)
+
+
+def test_tbl_missing_events_raises_and_leaves_conf_unset(spark, tmp_path):
+    """A read error other than the legacy-type one propagates, and the
+    caller's session conf is not touched on the way."""
+    from pyspark.errors import AnalysisException
+
+    from hiv_data_integration_spark.battery import tbl
+
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        tbl(spark, str(tmp_path), "events")
+    assert _NANOS_AS_LONG not in spark.conf.getAll
 
 
 def test_new_pipeline_operator_invariants(spark):

@@ -39,16 +39,16 @@ def events_dir(spark, tmp_path):
     return path
 
 
-def test_windowed_agg_stream_equals_batch(spark, tmp_path, events_dir):
+def test_windowed_agg_stream_equals_batch(spark, events_dir):
     stream = stx.read_events_stream(spark, events_dir, max_files_per_trigger=1)
-    result = stx.run_available_now(
+    with stx.memory_table(
         stx.windowed_agg(stream, window="1 hour", watermark="10 minutes"),
-        str(tmp_path / "ckpt_win"),
-        query_name="win_snapshot",
-    )
-    got = {
-        (str(r.window_start), r.n_events, r.total_value) for r in result.collect()
-    }
+        "append",
+    ) as result:
+        got = {
+            (str(r.window_start), r.n_events, r.total_value)
+            for r in result.collect()
+        }
     batch = stx.windowed_agg(
         spark.read.schema(stx.EVENTS_SCHEMA).parquet(events_dir),
         window="1 hour",
@@ -63,16 +63,16 @@ def test_windowed_agg_stream_equals_batch(spark, tmp_path, events_dir):
     assert (str(datetime.datetime(2024, 1, 1, 10, 0)), 2, 15.0) in got
 
 
-def test_session_window_stream_equals_batch(spark, tmp_path, events_dir):
+def test_session_window_stream_equals_batch(spark, events_dir):
     stream = stx.read_events_stream(spark, events_dir)
-    result = stx.run_available_now(
+    with stx.memory_table(
         stx.session_window_agg(stream, gap="30 minutes", watermark="1 minute"),
-        str(tmp_path / "ckpt_sess"),
-        query_name="sess_snapshot",
-    )
-    got = {
-        (r.user_id, str(r.session_start), r.n_events) for r in result.collect()
-    }
+        "append",
+    ) as result:
+        got = {
+            (r.user_id, str(r.session_start), r.n_events)
+            for r in result.collect()
+        }
     # user 1: events at 10:00+10:10 fuse into one session; 12:10 is its own
     assert (1, "2024-01-01 10:00:00", 2) in got
     batch = stx.session_window_agg(
@@ -86,15 +86,10 @@ def test_session_window_stream_equals_batch(spark, tmp_path, events_dir):
     assert got <= exp
 
 
-def test_running_user_totals_stateful(spark, tmp_path, events_dir):
+def test_running_user_totals_stateful(spark, events_dir):
     stream = stx.read_events_stream(spark, events_dir, max_files_per_trigger=1)
-    result = stx.run_available_now(
-        stx.running_user_totals(stream),
-        str(tmp_path / "ckpt_state"),
-        query_name="state_snapshot",
-        output_mode="update",
-    )
-    rows = result.collect()
+    with stx.memory_table(stx.running_user_totals(stream), "update") as result:
+        rows = result.collect()
     # update mode: one row per user per micro-batch; the LAST row per user
     # carries the final running totals
     final: dict[int, tuple[int, float]] = {}
@@ -106,7 +101,7 @@ def test_running_user_totals_stateful(spark, tmp_path, events_dir):
     assert len([r for r in rows if r.user_id == 1]) >= 2
 
 
-def test_stream_interval_join_equals_batch(spark, tmp_path, events_dir):
+def test_stream_interval_join_equals_batch(spark, events_dir):
     """Stream-stream interval self-join (availableNow, multi-file source)
     must produce exactly the batch join's pairs — inner matches emit as
     they form, so no watermark hold-back is involved."""
@@ -118,10 +113,8 @@ def test_stream_interval_join_equals_batch(spark, tmp_path, events_dir):
         max_delay="1 hour",
         watermark="10 minutes",
     ).select("user_id", "event_id", "r_event_id")
-    result = stx.run_available_now(
-        joined, str(tmp_path / "ckpt_ivj"), query_name="ivj_snapshot"
-    )
-    got = {(r.user_id, r.event_id, r.r_event_id) for r in result.collect()}
+    with stx.memory_table(joined, "append") as result:
+        got = {(r.user_id, r.event_id, r.r_event_id) for r in result.collect()}
 
     batch = spark.read.schema(stx.EVENTS_SCHEMA).parquet(events_dir)
     b = batch.select("user_id", "ts", "event_id")
@@ -190,7 +183,7 @@ def test_late_data_dropped_by_watermark(spark, tmp_path):
     assert r2.count() == r1.count()
 
 
-def test_first_seen_dedup_gated_or_working(spark, tmp_path, events_dir):
+def test_first_seen_dedup_gated_or_working(spark, events_dir):
     """transformWithStateInPandas needs protobuf; without it the operator
     must fail FAST with the remedy (not crash mid-stream). With it, the
     first-seen semantics are asserted end-to-end."""
@@ -207,10 +200,8 @@ def test_first_seen_dedup_gated_or_working(spark, tmp_path, events_dir):
         return
 
     out = stx.first_seen_dedup(stream, ["event_type"])
-    result = stx.run_available_now(
-        out, str(tmp_path / "ckpt_fs"), query_name="fs_snapshot"
-    )
-    rows = {(r.event_type, r.event_id) for r in result.collect()}
+    with stx.memory_table(out, "append") as result:
+        rows = {(r.event_type, r.event_id) for r in result.collect()}
     # fixture: all six events are 'click'; batch-1 min (ts, event_id) wins
     assert rows == {("click", 1)}
 
@@ -288,10 +279,8 @@ def test_stream_interval_join_left_outer_nulls(spark, tmp_path, events_dir):
     joined = l_w.join(r_w, cond, "left_outer").select(
         "user_id", "event_id", "r_event_id"
     )
-    result = stx.run_available_now(
-        joined, str(tmp_path / "ckpt_loj"), query_name="loj_snapshot"
-    )
-    rows = [(r.user_id, r.event_id, r.r_event_id) for r in result.collect()]
+    with stx.memory_table(joined, "append") as result:
+        rows = [(r.user_id, r.event_id, r.r_event_id) for r in result.collect()]
     assert all(r[2] is None for r in rows)
     # the heartbeat batch ran under the post-batch-2 watermark (12:05):
     # exactly the fixture lefts with ts + 1h < 12:05 (events 1 and 2) have
@@ -510,3 +499,89 @@ def test_local_result_logs_arrow_fallback(spark, monkeypatch, caplog):
         "NotImplementedError" in r.getMessage() and "_local_result" in r.getMessage()
         for r in warnings
     )
+
+
+def test_memory_table_cleans_up_after_failing_batch(
+    spark, tmp_path, events_dir, monkeypatch
+):
+    """A batch that raises surfaces as the query's error, and the runner
+    leaves nothing behind: no checkpoint directory, no temp view, no
+    active query."""
+    import os
+    import tempfile
+    import types
+    import uuid
+
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    made = []
+    real_mkdtemp = tempfile.mkdtemp
+
+    def recording_mkdtemp(*args, **kwargs):
+        made.append(real_mkdtemp(*args, **kwargs))
+        return made[-1]
+
+    fixed = uuid.UUID(int=0xFA11ED)
+    monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
+    monkeypatch.setattr(stx, "uuid", types.SimpleNamespace(uuid4=lambda: fixed))
+    name = f"stream_{fixed.hex[:12]}"
+
+    @F.udf("long")
+    def boom(v):
+        raise ValueError("batch failure")
+
+    stream = stx.read_events_stream(spark, events_dir).select(
+        boom("event_id").alias("x")
+    )
+    with pytest.raises(StreamingQueryException, match="batch failure"):
+        with stx.memory_table(stream, "append") as t:
+            t.collect()
+    assert made and not [d for d in made if os.path.exists(d)]
+    assert name not in {t.name for t in spark.catalog.listTables()}
+    assert spark.streams.active == []
+
+
+def test_memory_table_logs_progress_line(spark, events_dir, caplog):
+    """One structured progress line per query: two one-file batches of
+    three rows each, trigger time summed over both, and the last batch's
+    state rows (two users) for the one state operator."""
+    import json
+    import logging
+
+    stream = stx.read_events_stream(spark, events_dir, max_files_per_trigger=1)
+    with caplog.at_level(logging.INFO, logger="hiv_data_integration_spark.streaming"):
+        with stx.memory_table(stream.groupBy("user_id").count(), "complete") as t:
+            assert t.count() == 2
+    lines = [
+        r.getMessage() for r in caplog.records
+        if r.name == "hiv_data_integration_spark.streaming"
+        and r.getMessage().startswith("stream progress ")
+    ]
+    assert len(lines) == 1
+    summary = json.loads(lines[0].removeprefix("stream progress "))
+    assert summary["query"].startswith("stream_")
+    assert summary["batches"] == 2
+    assert summary["input_rows"] == 6
+    assert summary["trigger_ms"] > 0
+    assert summary["state_rows"] == [2]
+
+
+def test_streaming_queries_start_only_in_streaming_package():
+    """Every streaming query in the package goes through the one runner
+    in ``streaming/``: no other module touches ``writeStream`` or waits on
+    a query itself."""
+    import ast
+    import pathlib
+
+    import hiv_data_integration_spark
+
+    root = pathlib.Path(hiv_data_integration_spark.__file__).parent
+    banned = {"writeStream", "awaitTermination", "processAllAvailable"}
+    hits = [
+        f"{path.relative_to(root)}:{node.lineno} {node.attr}"
+        for path in root.rglob("*.py")
+        if path.relative_to(root).parts[0] != "streaming"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Attribute) and node.attr in banned
+    ]
+    assert hits == []
